@@ -16,18 +16,16 @@ from gmall_realtime2021_spark.functions.text import (
     shingles,
     tokenize,
 )
-from gmall_realtime2021_spark.functions.vectors import cosine_similarity, dot, norm, to_double_array
+from gmall_realtime2021_spark.functions.vectors import dot, norm
 
 __all__ = [
     "POLY_MOD",
     "POLY_MULT",
     "char_codes",
-    "cosine_similarity",
     "dot",
     "minhash_coeffs",
     "norm",
     "poly_hash",
     "shingles",
-    "to_double_array",
     "tokenize",
 ]

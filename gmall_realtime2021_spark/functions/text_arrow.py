@@ -48,7 +48,6 @@ from gmall_realtime2021_spark.functions.text import (
 
 __all__ = [
     "bigram_pair_rows_arrow",
-    "token_hashes_arrow",
     "token_tf_arrow",
     "tokenize_arrow",
     "gate_signals_arrow",
@@ -207,16 +206,6 @@ def gate_signals_arrow(col: Column, marker_sets: dict[str, tuple[str, ...]]) -> 
     return _f.asNondeterministic()(col)
 
 
-def token_hashes_arrow(col: Column) -> Column:
-    """``array<bigint>`` of per-token poly-hashes, one Arrow pass."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _f(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda s: [_py_poly(t) for t in _py_tokens(s)], na_action="ignore")
-
-    return _f.asNondeterministic()(col)
-
-
 def shingle_hash_set_arrow(col: Column, n: int = 3) -> Column:
     """Distinct n-gram shingle hashes (first-occurrence order, matching
     ``array_distinct``) of a text column, as ``array<bigint>``."""
@@ -356,7 +345,12 @@ def simhash_wide_arrow(col: Column, bits: int = 62) -> Column:
                 ones += ((H[:, None] >> shifts) & 1).sum(axis=0)
             return int((((2 * ones > len(hs)).astype(np.int64)) << shifts).sum())
 
-        return texts.map(one, na_action="ignore")
+        # nullable Int64: a NULL or zero-token doc in the batch would
+        # otherwise turn the series into float64 and round the 62-bit
+        # fingerprints
+        return pd.Series(
+            [None if t is None else one(t) for t in texts], dtype="Int64"
+        )
 
     return _f.asNondeterministic()(col)
 

@@ -14,11 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["to_double_array", "dot", "norm", "cosine_similarity"]
-
-
-def to_double_array(col: Column) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
+__all__ = ["dot", "norm"]
 
 
 def _fold_sum(arr: Column) -> Column:
@@ -34,7 +30,3 @@ def dot(a: Column, b: Column) -> Column:
 
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))

@@ -834,21 +834,15 @@ def ngram_containment_pairs(
     )
 
 
-def _span_rows(
-    docs: DataFrame, n: int, id_col: str, text_col: str, persist: bool = True
-) -> DataFrame:
+def _span_rows(docs: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
     """(id, sh) — one row per token *position* whose n-token window
     fits in the doc; duplicates kept (multiplicity matters for span
     statistics, unlike the set-based Jaccard path).
 
-    The per-doc span-hash ARRAY table is persisted before the
-    explode: :func:`duplicate_span_stats` consumes these rows on two
-    sides (the per-hash count and the join-back), and without the
-    cache each side would re-run the Arrow hashing pass over the
-    whole corpus — at 100 TB that is the dominant cost, paid twice.
-    Registered with :func:`release_caches` like the MinHash
-    signature table."""
-    return _span_arrays(docs, n, id_col, text_col, persist=persist).select(
+    Both consumers (:func:`duplicate_span_stats`,
+    :func:`duplicate_span_topk`) read these rows on ONE plan side, so
+    the span-array table under them is not persisted."""
+    return _span_arrays(docs, n, id_col, text_col, persist=False).select(
         "id", F.explode("shs").alias("sh")
     )
 
@@ -857,11 +851,11 @@ def _span_arrays(
     docs: DataFrame, n: int, id_col: str, text_col: str, persist: bool = True
 ) -> DataFrame:
     """(id, shs: array<bigint>) — the per-doc span-hash table the
-    span consumers build from. ``persist=True`` (stats/scrub: the
-    rows feed two plan sides, caching avoids re-running the Arrow
-    hashing pass per side); single-consumer plans (top-k) pass
-    ``persist=False`` — holding the whole corpus's span arrays for a
-    once-read table is pure cache pressure."""
+    span consumers build from. ``persist=True`` (scrub: caching avoids
+    re-running the Arrow hashing pass per plan side); the single-side
+    readers (:func:`_span_rows`) pass ``persist=False`` — holding the
+    whole corpus's span arrays for a once-read table is pure cache
+    pressure."""
     arrays = fan_out(docs.select(id_col, text_col)).select(
         F.col(id_col).alias("id"),
         shingle_hashes_arrow(F.col(text_col), n).alias("shs"),
@@ -914,7 +908,7 @@ def duplicate_span_stats(
     span hash onto one partition too, and neither form can split a
     single enormous key (AQE skew handling applies to joins only).
     """
-    spans = _span_rows(docs, n, id_col, text_col, persist=False)
+    spans = _span_rows(docs, n, id_col, text_col)
     w = Window.partitionBy("sh")
     flagged = spans.withColumn("dup", F.min("id").over(w) != F.max("id").over(w))
     dup = F.count(F.when(F.col("dup"), F.lit(1))).alias("dup_spans")
@@ -944,7 +938,7 @@ def duplicate_span_topk(
     :func:`duplicate_span_stats`; top-k is a tiny driver-side sort
     Catalyst executes as TakeOrderedAndProject (no full sort).
     Single consumer => the span table is NOT persisted here."""
-    spans = _span_rows(docs, n, id_col, text_col, persist=False)
+    spans = _span_rows(docs, n, id_col, text_col)
     return (
         spans.groupBy("sh")
         .agg(F.count_distinct("id").alias("ndocs"), F.count("*").alias("occurrences"))

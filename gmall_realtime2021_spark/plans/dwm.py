@@ -316,8 +316,8 @@ def new_visitor_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     remembers each device's first-visit date; an ``is_new=1`` claim
     on a later day is rewritten to 0. Batch form: min(day) over the
     key, then compare — a window/self-join instead of per-record
-    state. Streaming twin keeps real per-key state via
-    ``transformWithState`` (streaming/jobs.py).
+    state. The streaming twin keeps real per-key state via
+    ``applyInPandasWithState`` (``streaming/state.new_visitor_flags``).
     """
     events = load(spark, sf_dir, "events")
     day = F.date_trunc("day", "ts")
@@ -360,8 +360,9 @@ def user_jump_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressible with lag/lead over (key, time): entry ⇔ no previous
     event within the gap; bounce ⇔ entry ∧ no next event within the
     gap (30 min here — events are sparser than page views). The
-    streaming skin gets exact timeout semantics from
-    ``transformWithState`` event-time timers (SURVEY.md §4.2).
+    streaming twin gets exact timeout semantics from the event-time
+    timeout of ``applyInPandasWithState``
+    (``streaming/state.bounce_events``).
     """
     events = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

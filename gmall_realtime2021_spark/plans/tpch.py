@@ -8,13 +8,15 @@ bench.py, written with the engine's exact-value conventions.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gmall_realtime2021_spark.plans.registry import register
 from gmall_realtime2021_spark.tables import fan_out, input_bytes, load
+
+#: Largest orders parquet input (bytes) under which ``shipping_priority``
+#: hints its customer⋈orders side for broadcast.
+BROADCAST_HINT_CAP_BYTES = 1 << 30
 
 
 @register(
@@ -174,14 +176,15 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders input bytes — the broadcast side scales linearly with the
     fact table, and a hard hint bypasses autoBroadcastJoinThreshold,
     so at cluster scale it would trade a shuffle for an OOM. Under
-    the cap (default 1 GiB of orders parquet,
-    ``SPARK_GRAFT_BROADCAST_HINT_CAP`` bytes) the plan is unchanged;
-    past it the planner chooses (AQE can still pick a broadcast at
-    runtime from REAL sizes). ``co`` is also projected to the four
-    columns the join/aggregate consume before the hint — Catalyst
-    already pruned the broadcast to those (the r13 after-plan's
-    BroadcastExchange carries 3 columns post-join), the explicit
-    select is guide-§2.3 insurance that no future edit widens it.
+    the cap (:data:`BROADCAST_HINT_CAP_BYTES`, 1 GiB of orders
+    parquet) the plan is unchanged; past it, or when the input size
+    is unknown (missing or non-local path), the planner chooses (AQE
+    can still pick a broadcast at runtime from REAL sizes). ``co`` is
+    also projected to the four columns the join/aggregate consume
+    before the hint — Catalyst already pruned the broadcast to those
+    (the r13 after-plan's BroadcastExchange carries 3 columns
+    post-join), the explicit select is guide-§2.3 insurance that no
+    future edit widens it.
     """
     cust = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     orders = load(spark, sf_dir, "orders")
@@ -189,8 +192,8 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     co = cust.join(orders, cust.c_custkey == orders.o_custkey).select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
-    cap = int(os.environ.get("SPARK_GRAFT_BROADCAST_HINT_CAP", str(1 << 30)))
-    if input_bytes(sf_dir, "orders") <= cap:
+    orders_bytes = input_bytes(sf_dir, "orders")
+    if orders_bytes is not None and orders_bytes <= BROADCAST_HINT_CAP_BYTES:
         co = F.broadcast(co)
     return (
         li.join(

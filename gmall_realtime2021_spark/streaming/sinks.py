@@ -19,11 +19,47 @@ from __future__ import annotations
 import logging
 import os
 import shutil
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+@contextmanager
+def _replace_dir(target: str) -> Iterator[str]:
+    """Crash-safe single-writer replace of the directory ``target``.
+
+    Yields the ``.tmp`` sibling to write the new generation into (plus
+    an optional ``_last_batch`` marker, :func:`_write_batch_marker`),
+    then swaps it in: rename ``target`` → ``.old``, ``.tmp`` →
+    ``target``, drop ``.old``. A body that writes nothing (a skipped
+    replay) or raises leaves ``target`` as it was.
+
+    Crash recovery runs on entry, before the body reads ``target`` or
+    its marker. A run that died between the two renames left ``.old``
+    as the ONLY copy: it is restored, or a replayed batch would
+    rebuild the table from its own rows and the final rmtree would
+    delete all prior history. A run that died after them left a stale
+    ``.old`` next to the intact table: it is discarded, or the swap's
+    rename onto it would fail and wedge the sink.
+    """
+    target = target.rstrip("/")
+    tmp, old = target + ".tmp", target + ".old"
+    if os.path.isdir(old) and not os.path.isdir(target):
+        os.rename(old, target)
+    else:
+        shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)
+    yield tmp
+    if not os.path.isdir(tmp):
+        return
+    if os.path.isdir(target):
+        os.rename(target, old)
+    os.rename(tmp, target)
+    shutil.rmtree(old, ignore_errors=True)
+
 
 def _replay_guard_skip(
     target_dir: str, batch_id: int, spark, sink_name: str
@@ -162,28 +198,13 @@ def dim_upsert_batch(
 
     Within a batch the winner per pk is the highest ``version_col``
     (or arbitrary-but-deterministic last row); against the existing
-    table the batch always wins. The swap is write-new-then-rename —
-    single-writer semantics, which matches the one-streaming-query-
-    per-dim-table topology. On a lakehouse deployment this function
-    is the one place to swap in a Delta/Iceberg MERGE.
+    table the batch always wins. The swap is write-new-then-rename
+    (:func:`_replace_dir`) — single-writer semantics, which matches
+    the one-streaming-query-per-dim-table topology. On a lakehouse
+    deployment this function is the one place to swap in a
+    Delta/Iceberg MERGE.
     """
     spark = batch.sparkSession
-    # crash recovery: a previous run that died between the two renames
-    # leaves `.old` holding the ONLY copy of the table (dim_dir gone).
-    # Restore it before merging, or the replayed batch would rebuild
-    # the dim from itself alone and the final rmtree would delete all
-    # prior upserts — permanent silent loss.
-    old_leftover = dim_dir.rstrip("/") + ".old"
-    if os.path.isdir(old_leftover) and not os.path.isdir(dim_dir):
-        os.rename(old_leftover, dim_dir)
-    elif os.path.isdir(old_leftover):
-        # crash landed between `rename(tmp, dim_dir)` and the final
-        # rmtree: the table is intact, the stale `.old` is safe to
-        # discard — and MUST be, or this batch's `rename(dim_dir, old)`
-        # below raises (rename onto a non-empty dir) and wedges the
-        # sink until manual cleanup.
-        shutil.rmtree(old_leftover, ignore_errors=True)
-    shutil.rmtree(dim_dir.rstrip("/") + ".tmp", ignore_errors=True)
     w_cols = batch.columns
     if version_col is not None:
         from pyspark.sql import Window
@@ -194,18 +215,13 @@ def dim_upsert_batch(
         batch = batch.withColumn("_rn", rn).filter(F.col("_rn") == 1).select(w_cols)
     else:
         batch = batch.dropDuplicates([pk])
-    if os.path.isdir(dim_dir):
-        existing = spark.read.parquet(dim_dir)
-        merged = existing.join(batch, pk, "left_anti").unionByName(batch)
-    else:
-        merged = batch
-    tmp = dim_dir.rstrip("/") + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    old = dim_dir.rstrip("/") + ".old"
-    if os.path.isdir(dim_dir):
-        os.rename(dim_dir, old)
-    os.rename(tmp, dim_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    with _replace_dir(dim_dir) as tmp:
+        if os.path.isdir(dim_dir):
+            existing = spark.read.parquet(dim_dir)
+            merged = existing.join(batch, pk, "left_anti").unionByName(batch)
+        else:
+            merged = batch
+        merged.write.mode("overwrite").parquet(tmp)
 
 
 def dim_upsert_sink(dim_dir: str, pk: str, version_col: str | None = None) -> Callable:
@@ -383,7 +399,7 @@ def hll_sketch_maintenance_sink(sketch_dir: str) -> Callable:
     day-grain tiny: one ~KB row per day).
 
     The rewrite goes through a ``.tmp`` sibling and an atomic rename
-    (the :func:`dim_upsert_batch` recipe, leftover-recovery included):
+    (:func:`_replace_dir`, leftover-recovery included):
     this table is the ONLY copy of the accumulated history, so a crash
     mid-overwrite of the directory itself would lose every prior day
     and a replayed batch would silently rebuild from its own rows.
@@ -392,34 +408,21 @@ def hll_sketch_maintenance_sink(sketch_dir: str) -> Callable:
         from gmall_realtime2021_spark.operators.sketches import daily_user_sketches
 
         spark = batch.sparkSession
-        tmp = sketch_dir.rstrip("/") + ".tmp"
-        old_dir = sketch_dir.rstrip("/") + ".old"
-        # crash recovery, same two windows as dim_upsert_batch: `.old`
-        # holding the only copy (restore) vs stale `.old` next to an
-        # intact table (discard, or the swap below can't rename onto it)
-        if os.path.isdir(old_dir) and not os.path.isdir(sketch_dir):
-            os.rename(old_dir, sketch_dir)
-        elif os.path.isdir(old_dir):
-            shutil.rmtree(old_dir, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
         fresh = daily_user_sketches(batch)
-        if os.path.isdir(sketch_dir):
-            stored = spark.read.parquet(sketch_dir)
-            merged = (
-                stored.unionByName(fresh)
-                .groupBy("d")
-                .agg(F.hll_union_agg("sketch").alias("sketch"))
-            )
-        else:
-            merged = fresh
-        out = merged.collect()  # day-grain: bounded by distinct days
-        spark.createDataFrame(out, schema=merged.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        if os.path.isdir(sketch_dir):
-            os.rename(sketch_dir, old_dir)
-        os.rename(tmp, sketch_dir)
-        shutil.rmtree(old_dir, ignore_errors=True)
+        with _replace_dir(sketch_dir) as tmp:
+            if os.path.isdir(sketch_dir):
+                stored = spark.read.parquet(sketch_dir)
+                merged = (
+                    stored.unionByName(fresh)
+                    .groupBy("d")
+                    .agg(F.hll_union_agg("sketch").alias("sketch"))
+                )
+            else:
+                merged = fresh
+            out = merged.collect()  # day-grain: bounded by distinct days
+            spark.createDataFrame(out, schema=merged.schema).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(tmp)
 
     return write
 
@@ -437,7 +440,7 @@ def cms_sketch_maintenance_sink(sketch_dir: str) -> Callable:
     ``plans/sketches.py`` (same ``cm{i}:`` salts) is interchangeable
     with the maintained table.
 
-    Crash safety is the :func:`dim_upsert_batch` tmp/old swap recipe,
+    Crash safety is the :func:`_replace_dir` tmp/old swap,
     leftover-recovery included: like the HLL table, this directory is
     the only copy of the accumulated counters.
 
@@ -456,37 +459,27 @@ def cms_sketch_maintenance_sink(sketch_dir: str) -> Callable:
         from gmall_realtime2021_spark.operators.sketches import daily_type_cms
 
         spark = batch.sparkSession
-        tmp = sketch_dir.rstrip("/") + ".tmp"
-        old_dir = sketch_dir.rstrip("/") + ".old"
-        if os.path.isdir(old_dir) and not os.path.isdir(sketch_dir):
-            os.rename(old_dir, sketch_dir)
-        elif os.path.isdir(old_dir):
-            shutil.rmtree(old_dir, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-        skip, lineage = _replay_guard_skip(
-            sketch_dir, batch_id, spark, "cms_sketch_maintenance_sink"
-        )
-        if skip:
-            return  # replayed delivery — already counted
-        fresh = daily_type_cms(batch)
-        if os.path.isdir(sketch_dir):
-            stored = spark.read.parquet(sketch_dir)
-            merged = (
-                stored.unionByName(fresh)
-                .groupBy("d", "i", "bucket")
-                .agg(F.sum("ct").alias("ct"))
+        with _replace_dir(sketch_dir) as tmp:
+            skip, lineage = _replay_guard_skip(
+                sketch_dir, batch_id, spark, "cms_sketch_maintenance_sink"
             )
-        else:
-            merged = fresh
-        out = merged.collect()  # bounded: distinct days × depth·width
-        spark.createDataFrame(out, schema=merged.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        _write_batch_marker(tmp, batch_id, lineage)
-        if os.path.isdir(sketch_dir):
-            os.rename(sketch_dir, old_dir)
-        os.rename(tmp, sketch_dir)
-        shutil.rmtree(old_dir, ignore_errors=True)
+            if skip:
+                return  # replayed delivery — already counted
+            fresh = daily_type_cms(batch)
+            if os.path.isdir(sketch_dir):
+                stored = spark.read.parquet(sketch_dir)
+                merged = (
+                    stored.unionByName(fresh)
+                    .groupBy("d", "i", "bucket")
+                    .agg(F.sum("ct").alias("ct"))
+                )
+            else:
+                merged = fresh
+            out = merged.collect()  # bounded: distinct days × depth·width
+            spark.createDataFrame(out, schema=merged.schema).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(tmp)
+            _write_batch_marker(tmp, batch_id, lineage)
 
     return write
 
@@ -505,7 +498,7 @@ def scd2_maintenance_sink(dim_dir: str) -> Callable:
     event via event_id −1, with its version as the numbering base),
     the batch's own change-capture window runs over seed+delivery,
     and closed history rows are carried through untouched. The swap
-    is the :func:`dim_upsert_batch` tmp/old recipe.
+    is the :func:`_replace_dir` tmp/old recipe.
 
     Delivery contract: per-user event-time ORDER across batches;
     replay safety is enforced here rather than assumed — foreachBatch
@@ -532,76 +525,66 @@ def scd2_maintenance_sink(dim_dir: str) -> Callable:
         )
 
         spark = batch.sparkSession
-        tmp = dim_dir.rstrip("/") + ".tmp"
-        old_dir = dim_dir.rstrip("/") + ".old"
-        if os.path.isdir(old_dir) and not os.path.isdir(dim_dir):
-            os.rename(old_dir, dim_dir)
-        elif os.path.isdir(old_dir):
-            shutil.rmtree(old_dir, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-        skip, lineage = _replay_guard_skip(
-            dim_dir, batch_id, spark, "scd2_maintenance_sink"
-        )
-        if skip:
-            return  # replayed delivery — already applied
-        ev = batch.select("user_id", "event_type", "ts", "event_id")
-        users = ev.select("user_id").distinct()
-        if os.path.isdir(dim_dir):
-            stored = spark.read.parquet(dim_dir)
-            untouched = stored.join(users, "user_id", "left_anti")
-            affected = stored.join(F.broadcast(users), "user_id", "left_semi")
-            closed = affected.filter(F.col("is_current") == 0)
-            cur = affected.filter(F.col("is_current") == 1)
-            seed = cur.select(
-                "user_id",
-                "event_type",
-                F.to_timestamp("valid_from", SCD2_TS_FMT_SPARK).alias("ts"),
-                F.lit(-1).cast("long").alias("event_id"),
+        with _replace_dir(dim_dir) as tmp:
+            skip, lineage = _replay_guard_skip(
+                dim_dir, batch_id, spark, "scd2_maintenance_sink"
             )
-            base = cur.select("user_id", F.col("version").alias("vbase"))
-            allrows = seed.unionByName(ev)
-        else:
-            stored = None
-            untouched = closed = None
-            base = users.select("user_id", F.lit(None).cast("long").alias("vbase"))
-            allrows = ev
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        changes = (
-            allrows.withColumn("prev", F.lag("event_type").over(w))
-            .filter(F.col("prev").isNull() | (F.col("prev") != F.col("event_type")))
-            .drop("prev")
-        )
-        rebuilt = (
-            changes.withColumn("nxt", F.lead("ts").over(w))
-            .withColumn("rn", F.row_number().over(w).cast("long"))
-            .join(F.broadcast(base), "user_id", "left")
-            .select(
-                "user_id",
-                "event_type",
-                F.date_format("ts", SCD2_TS_FMT_SPARK).alias("valid_from"),
-                F.coalesce(
-                    F.date_format("nxt", SCD2_TS_FMT_SPARK), F.lit(SCD2_OPEN_END)
-                ).alias("valid_to"),
-                (F.coalesce(F.col("vbase") - 1, F.lit(0)) + F.col("rn")).alias(
-                    "version"
-                ),
-                F.when(F.col("nxt").isNull(), 1).otherwise(0).alias("is_current"),
+            if skip:
+                return  # replayed delivery — already applied
+            ev = batch.select("user_id", "event_type", "ts", "event_id")
+            users = ev.select("user_id").distinct()
+            if os.path.isdir(dim_dir):
+                stored = spark.read.parquet(dim_dir)
+                untouched = stored.join(users, "user_id", "left_anti")
+                affected = stored.join(F.broadcast(users), "user_id", "left_semi")
+                closed = affected.filter(F.col("is_current") == 0)
+                cur = affected.filter(F.col("is_current") == 1)
+                seed = cur.select(
+                    "user_id",
+                    "event_type",
+                    F.to_timestamp("valid_from", SCD2_TS_FMT_SPARK).alias("ts"),
+                    F.lit(-1).cast("long").alias("event_id"),
+                )
+                base = cur.select("user_id", F.col("version").alias("vbase"))
+                allrows = seed.unionByName(ev)
+            else:
+                stored = None
+                untouched = closed = None
+                base = users.select("user_id", F.lit(None).cast("long").alias("vbase"))
+                allrows = ev
+            w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+            changes = (
+                allrows.withColumn("prev", F.lag("event_type").over(w))
+                .filter(F.col("prev").isNull() | (F.col("prev") != F.col("event_type")))
+                .drop("prev")
             )
-        )
-        merged = (
-            untouched.unionByName(closed).unionByName(rebuilt)
-            if stored is not None
-            else rebuilt
-        )
-        # written directly (no driver collect — the dim is user-grain,
-        # not day-grain): the tmp write fully materializes the plan,
-        # including its read of the old table, BEFORE any rename below
-        merged.write.mode("overwrite").parquet(tmp)
-        _write_batch_marker(tmp, batch_id, lineage)
-        if os.path.isdir(dim_dir):
-            os.rename(dim_dir, old_dir)
-        os.rename(tmp, dim_dir)
-        shutil.rmtree(old_dir, ignore_errors=True)
+            rebuilt = (
+                changes.withColumn("nxt", F.lead("ts").over(w))
+                .withColumn("rn", F.row_number().over(w).cast("long"))
+                .join(F.broadcast(base), "user_id", "left")
+                .select(
+                    "user_id",
+                    "event_type",
+                    F.date_format("ts", SCD2_TS_FMT_SPARK).alias("valid_from"),
+                    F.coalesce(
+                        F.date_format("nxt", SCD2_TS_FMT_SPARK), F.lit(SCD2_OPEN_END)
+                    ).alias("valid_to"),
+                    (F.coalesce(F.col("vbase") - 1, F.lit(0)) + F.col("rn")).alias(
+                        "version"
+                    ),
+                    F.when(F.col("nxt").isNull(), 1).otherwise(0).alias("is_current"),
+                )
+            )
+            merged = (
+                untouched.unionByName(closed).unionByName(rebuilt)
+                if stored is not None
+                else rebuilt
+            )
+            # written directly (no driver collect — the dim is user-grain,
+            # not day-grain): the tmp write fully materializes the plan,
+            # including its read of the old table, BEFORE any rename below
+            merged.write.mode("overwrite").parquet(tmp)
+            _write_batch_marker(tmp, batch_id, lineage)
 
     return write
 
@@ -620,38 +603,27 @@ def bloom_filter_maintenance_sink(filter_dir: str, key_col: str) -> Callable:
     IDEMPOTENT — so unlike the CMS counters this maintenance is
     replay-safe with no epoch bookkeeping at all: delivering a batch
     twice ORs in bits already set. Crash safety is the
-    :func:`dim_upsert_batch` tmp/old swap recipe, leftover-recovery
-    included: the directory is the only copy of the accumulated
-    filter.
+    :func:`_replace_dir` tmp/old swap, leftover-recovery included:
+    the directory is the only copy of the accumulated filter.
     """
 
     def write(batch: DataFrame, batch_id: int) -> None:
         from gmall_realtime2021_spark.operators.sketches import bloom_positions
 
         spark = batch.sparkSession
-        tmp = filter_dir.rstrip("/") + ".tmp"
-        old_dir = filter_dir.rstrip("/") + ".old"
-        if os.path.isdir(old_dir) and not os.path.isdir(filter_dir):
-            os.rename(old_dir, filter_dir)
-        elif os.path.isdir(old_dir):
-            shutil.rmtree(old_dir, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
         fresh = batch.select(
             F.explode(bloom_positions(F.col(key_col))).alias("pos")
         ).distinct()
-        if os.path.isdir(filter_dir):
-            stored = spark.read.parquet(filter_dir)
-            merged = stored.unionByName(fresh).distinct()
-        else:
-            merged = fresh
-        out = merged.collect()  # bounded by m positions, filter-sized
-        spark.createDataFrame(out, schema=merged.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        if os.path.isdir(filter_dir):
-            os.rename(filter_dir, old_dir)
-        os.rename(tmp, filter_dir)
-        shutil.rmtree(old_dir, ignore_errors=True)
+        with _replace_dir(filter_dir) as tmp:
+            if os.path.isdir(filter_dir):
+                stored = spark.read.parquet(filter_dir)
+                merged = stored.unionByName(fresh).distinct()
+            else:
+                merged = fresh
+            out = merged.collect()  # bounded by m positions, filter-sized
+            spark.createDataFrame(out, schema=merged.schema).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(tmp)
 
     return write
 
@@ -840,15 +812,8 @@ def payment_enrich_bootstrap(spark, sf_dir: str, store_dir: str) -> int:
     from gmall_realtime2021_spark.sources import warehouse as W
 
     events_t = W.ensure_bucketed_events(spark, sf_dir)
-    tmp = store_dir.rstrip("/") + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    _enrich_rows(spark.table(events_t)).write.mode("overwrite").parquet(tmp)
-    old = store_dir.rstrip("/") + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(store_dir):
-        os.rename(store_dir, old)
-    os.rename(tmp, store_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    with _replace_dir(store_dir) as tmp:
+        _enrich_rows(spark.table(events_t)).write.mode("overwrite").parquet(tmp)
     return spark.read.parquet(store_dir).count()
 
 
@@ -879,7 +844,7 @@ def payment_enrich_upsert_batch(
        exchange-free);
     3. merge-by-pk into the serving store: recomputed payments
        replace their ``pay_id`` rows, everything else is untouched
-       (the ``dim_upsert_batch`` swap recipe, ``DimSink.java:78-93``).
+       (the :func:`_replace_dir` swap, ``DimSink.java:78-93``).
 
     Returns True if applied, False if skipped as a replay. Work per
     batch ∝ batch span × affected users' event density — never the
@@ -920,24 +885,13 @@ def payment_enrich_upsert_batch(
         .join(F.broadcast(users), "user_id", "left_semi")
     )
     recomputed = _enrich_rows(slice_ev).filter(F.col("pay_time") >= F.date_format(F.lit(span.lo), "yyyy-MM-dd HH:mm:ss"))
-    # merge-by-pk swap (single-writer, crash-safe: same recipe and the
-    # same .old-restore windows as dim_upsert_batch)
-    old_leftover = store_dir.rstrip("/") + ".old"
-    if os.path.isdir(old_leftover) and not os.path.isdir(store_dir):
-        os.rename(old_leftover, store_dir)
-    elif os.path.isdir(old_leftover):
-        shutil.rmtree(old_leftover, ignore_errors=True)
-    shutil.rmtree(store_dir.rstrip("/") + ".tmp", ignore_errors=True)
-    if os.path.isdir(store_dir):
-        existing = spark.read.parquet(store_dir)
-        merged = existing.join(recomputed, "pay_id", "left_anti").unionByName(recomputed)
-    else:
-        merged = recomputed
-    tmp = store_dir.rstrip("/") + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(store_dir):
-        os.rename(store_dir, old_leftover)
-    os.rename(tmp, store_dir)
-    shutil.rmtree(old_leftover, ignore_errors=True)
+    # merge-by-pk swap (single-writer, crash-safe)
+    with _replace_dir(store_dir) as tmp:
+        if os.path.isdir(store_dir):
+            existing = spark.read.parquet(store_dir)
+            merged = existing.join(recomputed, "pay_id", "left_anti").unionByName(recomputed)
+        else:
+            merged = recomputed
+        merged.write.mode("overwrite").parquet(tmp)
     _write_batch_marker(guard_dir, batch_id, lineage)
     return True

@@ -1,8 +1,9 @@
 """Keyed-state operators for the streaming skin (SURVEY.md §2.6).
 
-Implemented with ``applyInPandasWithState`` — Spark's Arrow-batched
-arbitrary-stateful operator, the idiomatic PySpark stand-in for
-Flink's ``ValueState``/CEP patterns:
+Every operator here runs on ``applyInPandasWithState`` — Spark's
+Arrow-batched arbitrary-stateful operator, the idiomatic PySpark
+stand-in for Flink's ``ValueState``/CEP patterns — and is the one
+streaming form of its batch plan:
 
 - :func:`new_visitor_flags` — T1, ``BaseLogApp.java:156-204``:
   per-device first-visit date in state; a later-day record claiming
@@ -11,6 +12,10 @@ Flink's ``ValueState``/CEP patterns:
   «entry with no successor within the gap» where the *timeout*
   matches are the bounces; event-time timeouts reproduce CEP
   ``within`` exactly (fires when the watermark passes entry+gap).
+- :func:`transition_pairs` / :func:`first_touch_attribution_pairs` —
+  per-user predecessor pairing and earliest-view attribution, the
+  streaming forms of ``event_transitions`` and
+  ``first_touch_attribution``.
 
 State size: O(1) per active key (a date / a timestamp + flag), and
 T3 state self-clears via its timeout — at 1000-executor scale state
@@ -38,9 +43,7 @@ from pyspark.sql import types as T
 
 __all__ = [
     "new_visitor_flags",
-    "new_visitor_flags_tws",
     "bounce_events",
-    "bounce_events_tws",
     "transition_pairs",
     "first_touch_attribution_pairs",
 ]
@@ -100,66 +103,6 @@ def new_visitor_flags(events: DataFrame) -> DataFrame:
         .groupBy("user_id")
         .applyInPandasWithState(
             repair, _FLAGS_OUT, _FLAGS_STATE, "append", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def new_visitor_flags_tws(events: DataFrame) -> DataFrame:
-    """T1 on the ``transformWithStateInPandas`` API (Spark ≥4.0) —
-    the forward-looking stateful operator (typed ValueState, timers,
-    TTL; requires the RocksDB state store provider).
-
-    Same semantics as :func:`new_visitor_flags`; kept as the modern
-    twin so the engine tracks Spark's replacement for
-    ``applyInPandasWithState`` (SPARK-49564 direction). The
-    transformWithState Python state-server protocol needs
-    ``google.protobuf``; where none is pip-installed the test harness
-    stages the host SDK's bundled pure-python runtime onto PYTHONPATH
-    before the JVM starts (``tests/conftest._bootstrap_protobuf``) —
-    the batch≡stream pin runs for real here since r12 — and the test
-    still degrades to an env-gated skip on hosts with no runtime at
-    all.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class FirstDayProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._first = handle.getValueState(
-                "first_day", T.StructType([T.StructField("d", T.LongType())])
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> "pd.DataFrame":
-            (user_id,) = key
-            first_day = self._first.get()[0] if self._first.exists() else None
-            pdf = pd.concat(list(rows), ignore_index=True)  # see new_visitor_flags
-            if len(pdf):
-                pdf = pdf.sort_values(["ts", "event_id"])
-                days = pdf["ts"].map(_epoch_days)
-                if first_day is None:
-                    first_day = int(days.iloc[0])
-                else:
-                    first_day = min(first_day, int(days.iloc[0]))
-                yield pd.DataFrame(
-                    {
-                        "user_id": user_id,
-                        "ts": pdf["ts"],
-                        "is_new": (days == first_day).astype("int32"),
-                    }
-                )
-            if first_day is not None:
-                self._first.update((first_day,))
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "ts", "event_id")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            FirstDayProcessor(), _FLAGS_OUT, "append", "none"
         )
     )
 
@@ -236,99 +179,6 @@ def bounce_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
         .applyInPandasWithState(
             detect, _BOUNCE_OUT, _BOUNCE_STATE, "append", GroupStateTimeout.EventTimeTimeout
         )
-    )
-
-#: TWS bounce state: the applyInPandasWithState tuple plus the key's
-#: currently-registered timer (TWS timers are explicit objects — the
-#: processor must delete the stale one when the deadline moves).
-_BOUNCE_TWS_STATE = T.StructType(
-    [
-        T.StructField("last_us", T.LongType()),
-        T.StructField("last_is_entry", T.BooleanType()),
-        T.StructField("timer_ms", T.LongType()),
-    ]
-)
-
-
-def bounce_events_tws(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """T3 on the ``transformWithStateInPandas`` API — the EXACT-TIMER
-    twin of :func:`bounce_events` (VERDICT r11 item #3): the CEP
-    ``within`` timeout (``UserJumpDetailApp.java:75-92``) is a real
-    registered EVENT-TIME TIMER (``handle.registerTimer`` +
-    ``handleExpiredTimer``), Spark's analog of Flink's
-    ``ctx.timerService().registerEventTimeTimer`` — not the
-    whole-state timeout applyInPandasWithState offers. Each new event
-    for a key MOVES the deadline: the stale timer is deleted and one
-    at ``last_event + gap`` (+1 ms — a successor at exactly the bound
-    is not a bounce, strict >) registered; expiry with a pending
-    entry proves the bounce, and state clears because any later event
-    is by then necessarily an entry. Same emitted rows as
-    :func:`bounce_events` and the batch ``user_jump_detail`` rollup
-    (pinned in tests/test_streaming.py). Requires the RocksDB state
-    store provider and a python protobuf runtime
-    (``tests/conftest._bootstrap_protobuf``).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_minutes * 60_000_000
-
-    class BounceProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._last = handle.getValueState("last", _BOUNCE_TWS_STATE)
-
-        def handleInputRows(self, key, rows, timerValues) -> "Iterator[pd.DataFrame]":
-            (user_id,) = key
-            last_us, last_is_entry, timer_ms = (
-                self._last.get() if self._last.exists() else (None, False, None)
-            )
-            bounces: list[int] = []
-            # concatenate Arrow chunks before sorting (see bounce_events)
-            pdf = pd.concat(list(rows), ignore_index=True)
-            if len(pdf):
-                pdf = pdf.sort_values(["ts", "event_id"])
-                for ts in pdf["ts"]:
-                    us = ts.value // 1_000
-                    if last_us is not None and last_is_entry and us - last_us > gap_us:
-                        bounces.append(last_us)
-                    is_entry = last_us is None or us - last_us > gap_us
-                    last_us, last_is_entry = us, is_entry
-            if last_us is not None:
-                new_timer = (last_us + gap_us) // 1_000 + 1
-                if timer_ms is not None and timer_ms != new_timer:
-                    self._handle.deleteTimer(timer_ms)
-                if timer_ms != new_timer:
-                    self._handle.registerTimer(new_timer)
-                self._last.update((last_us, last_is_entry, new_timer))
-            if bounces:
-                yield pd.DataFrame(
-                    {
-                        "user_id": user_id,
-                        "bounce_ts": [pd.Timestamp(us, unit="us") for us in bounces],
-                    }
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (user_id,) = key
-            if not self._last.exists():
-                return
-            last_us, last_is_entry, _timer = self._last.get()
-            self._last.clear()
-            if last_is_entry:
-                yield pd.DataFrame(
-                    {"user_id": [user_id], "bounce_ts": [pd.Timestamp(last_us, unit="us")]}
-                )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "ts", "event_id")
-        .groupBy("user_id")
-        .transformWithStateInPandas(BounceProcessor(), _BOUNCE_OUT, "append", "eventTime")
     )
 
 

@@ -109,15 +109,19 @@ def fan_out(df: DataFrame, *by: str) -> DataFrame:
     return df.repartition(target)
 
 
-def input_bytes(sf_dir: str, name: str) -> int:
+def input_bytes(sf_dir: str, name: str) -> int | None:
     """On-disk bytes of a table's parquet input (file or directory) —
     the cheap, estimate-free size signal for scale-gating plan hints
     (e.g. a broadcast hint that is right at fixture scale and an OOM
-    at cluster scale). Returns 0 when the path is missing so callers
-    degrade to their un-hinted form."""
+    at cluster scale). Returns ``None`` (size unknown) when the path
+    is missing or not on the local filesystem (``s3a://``,
+    ``hdfs://`` …), so a scale gate fails closed: callers skip the
+    hint and degrade to their un-hinted form."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     if os.path.isfile(path):
         return os.path.getsize(path)
+    if not os.path.isdir(path):
+        return None
     total = 0
     for root, _dirs, files in os.walk(path):
         for f in files:

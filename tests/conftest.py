@@ -1,183 +1,38 @@
 from __future__ import annotations
 
 import os
-import shutil
-import sys
 
 import pytest
+
+from gmall_realtime2021_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
-#: Slow tier (r14, VERDICT r13 item #2): the full suite takes ~35
-#: minutes and the driver's pytest window truncated it in r13
-#: (VERIFY_r13 ``tests_ok: false`` with a failure-free tail). A plain
-#: ``pytest tests/`` now SKIPS the tests named here — the long
-#: equivalence/chaos/training tail, measured ≥5.5 s each from this
-#: round's ``--durations`` profile, ~1230 s together — bringing the
-#: default run under the window (~14 min measured). EVERY
-#: oracle-parity / adversarial / physical-plan / non-vacuous /
-#: plan-contract test stays in the default tier regardless of cost:
-#: the correctness core is never skipped. Set ``SPARK_GRAFT_FULL_TESTS=1``
-#: to run everything (the round gate; each optimization round runs the
-#: full suite at final HEAD and records the summary in
-#: OPTIMIZATION_r*.md).
-_SLOW_TESTS = frozenset(
-    {
-        "test_asof_attribution_app_end_to_end",
-        "test_asof_attribution_stream_matches_batch",
-        "test_bloom_maintenance_sink_equals_batch_and_is_replay_safe",
-        "test_bm25_equals_bruteforce",
-        "test_bm25_per_doc_dl_stats_path_is_value_identical",
-        "test_bpe_batched_training_matches_sequential",
-        "test_bpe_encode_matches_reference_and_conserves_text",
-        "test_bpe_training_loop_matches_reference",
-        "test_cdc_routing_app_end_to_end",
-        "test_cdc_routing_app_resumes_exactly_once",
-        "test_clustered_fixture_recall_is_conventional",
-        "test_cms_sketch_maintenance_sink_equals_batch_exactly",
-        "test_compact_parquet_dir",
-        "test_cross_process_reader_unaffected_by_compaction",
-        "test_dim_upsert_last_write_wins",
-        "test_doc_dl_expr_is_value_identical_to_arrow_doc_dl",
-        "test_duplicate_clusters_permuted_chain_converges",
-        "test_duplicate_span_stats_equals_bruteforce",
-        "test_dynamic_gap_sessions_equal_bruteforce",
-        "test_dynamic_route_files",
-        "test_first_touch_stream_credits_same_ts_view_sorted_later",
-        "test_full_outer_interval_join_stream_matches_batch",
-        "test_grouped_count_update_mode_retract_analog",
-        "test_hll_sink_preserves_history_through_tmp_swap",
-        "test_hll_sketch_maintenance_sink_matches_batch",
-        "test_incremental_dedup_stream_matches_batch",
-        "test_interval_join_state_evicted_at_watermark",
-        "test_ivf_cell_auto_compaction",
-        "test_ivf_ingest_through_real_stream",
-        "test_jdbc_stats_sink_real_roundtrip",
-        "test_keyword_stats_stream_matches_batch",
-        "test_late_data_dropped_by_watermark",
-        "test_layout_health_flags_fragmentation",
-        "test_layout_lifecycle_randomized_model_check",
-        "test_leakage_free_split_has_zero_leakage",
-        "test_lm_counts_sink_incremental_equals_batch",
-        "test_maintain_gc_sweeps_retired_generations_and_legacy_tag",
-        "test_maintain_subcommand_reports_and_compacts",
-        "test_maintenance_sinks_survive_crash_replay_chaos",
-        "test_new_visitor_repair_tws_matches_batch",
-        "test_order_wide_stream_matches_batch",
-        "test_pagerank_converges_and_matches_reference_loop",
-        "test_payment_wide_stream_matches_batch",
-        "test_phash_index_sink_incremental_equals_batch",
-        "test_phash_index_sink_through_real_stream",
-        "test_postings_index_incremental_equals_batch",
-        "test_pq_training_improves_reconstruction",
-        "test_product_stats_stream_matches_batch",
-        "test_scd2_maintenance_sink_equals_batch_build",
-        "test_simhash_pairs_equal_bruteforce",
-        "test_simhash_summary_matches_pair_graph_components",
-        "test_star_edges_match_pair_graph_on_replica_corpus",
-        "test_stats_store_drops_transient_cols",
-        "test_unique_visitors_stream_matches_batch",
-        "test_user_jump_stream_matches_batch",
-        "test_user_jump_tws_exact_timers_match_batch",
-        "test_uv_dedup_state_evicted_at_watermark",
-        "test_vectorized_media_kernels_match_scalar_spec",
-        "test_video_fingerprint_majority_fold_recall",
-        "test_visitor_stats_app_end_to_end",
-        "test_warehouse_ingest_app_end_to_end",
-        "test_watermark_drops_late_rows_and_reports_them",
-    }
-)
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "slow: long equivalence/chaos/training test, skipped unless "
+        "SPARK_GRAFT_FULL_TESTS=1",
+    )
 
 
 def pytest_collection_modifyitems(config, items):
+    """Slow tier: a plain ``pytest tests/`` skips tests marked
+    ``@pytest.mark.slow`` (the long equivalence/chaos/training tail,
+    each >= ~5.5 s) so the default run fits the CI window. Every
+    oracle-parity / adversarial / physical-plan / non-vacuous /
+    plan-contract test stays in the default tier regardless of cost.
+    Set ``SPARK_GRAFT_FULL_TESTS=1`` to run everything."""
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
     skip = pytest.mark.skip(
         reason="slow tier — set SPARK_GRAFT_FULL_TESTS=1 for the full suite"
     )
     for item in items:
-        if item.name.split("[")[0] in _SLOW_TESTS:
+        if item.get_closest_marker("slow"):
             item.add_marker(skip)
-
-#: Host locations that ship a bundled pure-python ``google.protobuf``
-#: runtime even when none is pip-installed (the google-cloud-sdk
-#: vendors one). Used by :func:`_bootstrap_protobuf` below.
-_PB_SOURCE_CANDIDATES = (
-    "/usr/lib/google-cloud-sdk/platform/google_appengine/google/protobuf",
-)
-
-
-def _bootstrap_protobuf() -> None:
-    """Stage a python protobuf runtime for the TWS driver worker
-    (VERDICT r11 item #3). ``transformWithStateInPandas`` spawns a
-    separate Python worker that speaks Spark's StateMessage protobuf
-    protocol; this sandbox has no pip-installed ``google.protobuf``
-    and installs are off-limits, but the host's google-cloud-sdk
-    bundles a modern (6.x) pure-python runtime. Copy it to a scratch
-    dir, widen its gencode check from exact-minor to same-major
-    (protobuf wire format is stable within a major; Spark 4.1 ships
-    gencode 6.33 vs the bundle's 6.32 runtime), and export it on
-    PYTHONPATH — which MUST happen before the first SparkSession: the
-    JVM inherits this process's env at gateway launch and the TWS
-    worker inherits the JVM's, so a late export never reaches the
-    worker. No-op when a real protobuf is already importable or no
-    bundle exists (the TWS test then keeps its env-gated skip)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return
-    except ImportError:
-        pass
-    src = next((c for c in _PB_SOURCE_CANDIDATES if os.path.isfile(os.path.join(c, "runtime_version.py"))), None)
-    if src is None:
-        return
-    dst_root = "/tmp/spark_graft_pb_runtime"
-    marker = os.path.join(dst_root, "google", "protobuf", "runtime_version.py")
-    if not os.path.isfile(marker):
-        # pid-unique staging: two pytest processes bootstrapping at
-        # once must never rmtree/copytree the same staging tree (a
-        # shared .tmp let one delete the other's partial copy mid-
-        # copytree, or double-append the shim); only the atomic final
-        # rename can race, and that race is handled below.
-        tmp = f"{dst_root}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, "google"))
-        open(os.path.join(tmp, "google", "__init__.py"), "w").close()
-        shutil.copytree(
-            src,
-            os.path.join(tmp, "google", "protobuf"),
-            ignore=shutil.ignore_patterns("blaze-out", "pyext", "net", "third_party"),
-        )
-        with open(os.path.join(tmp, "google", "protobuf", "runtime_version.py"), "a") as fh:
-            fh.write(
-                "\n\n# spark-graft test-env shim: accept newer gencode MINORS within the\n"
-                "# same protobuf major (wire format is stable within a major); the\n"
-                "# strict check would reject Spark's 6.33 gencode on this 6.32 runtime.\n"
-                "_STRICT_VALIDATE = ValidateProtobufRuntimeVersion\n\n\n"
-                "def ValidateProtobufRuntimeVersion(gencode_domain, gencode_major, gencode_minor,\n"
-                "                                   gencode_patch, gencode_suffix, location):\n"
-                "    if gencode_major == MAJOR:\n"
-                "        return\n"
-                "    _STRICT_VALIDATE(gencode_domain, gencode_major, gencode_minor,\n"
-                "                     gencode_patch, gencode_suffix, location)\n"
-            )
-        shutil.rmtree(dst_root, ignore_errors=True)
-        try:
-            os.rename(tmp, dst_root)
-        except OSError:
-            # concurrent pytest process won the staging race — use its copy
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isfile(marker):
-                return
-    sys.path.insert(0, dst_root)
-    old = os.environ.get("PYTHONPATH", "")
-    os.environ["PYTHONPATH"] = dst_root + (os.pathsep + old if old else "")
-
-
-_bootstrap_protobuf()
-
-from gmall_realtime2021_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")

@@ -9,6 +9,7 @@ counterparts on the same fixtures.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from gmall_realtime2021_spark.plans import get_plans
@@ -85,6 +86,7 @@ def test_ann_variants_recall_vs_brute_force(spark):
         )
 
 
+@pytest.mark.slow
 def test_pq_training_improves_reconstruction(spark):
     """Per-subspace Lloyd's training must strictly reduce mean PQ
     reconstruction error vs the untrained deterministic codebooks
@@ -167,6 +169,7 @@ def test_ivf_training_improves_quantization(spark):
     assert after < before * 0.9, (before, after)
 
 
+@pytest.mark.slow
 def test_leakage_free_split_has_zero_leakage(spark):
     """The remedy must actually remedy: re-splitting by near-dup
     cluster leaves ZERO Jaccard pairs straddling splits (while the
@@ -289,6 +292,7 @@ def test_survivor_policy_dominates_cluster(spark):
         assert row.survivor_id == best
 
 
+@pytest.mark.slow
 def test_pagerank_converges_and_matches_reference_loop(spark):
     """The full PageRank loop on a crafted 4-node graph: converges
     under the cap, reproduces the same fixed-point ranks as a pure-
@@ -336,6 +340,7 @@ def test_pagerank_raises_instead_of_silent_truncation(spark):
         pagerank(edges, max_iters=1, tol_fp=0)
 
 
+@pytest.mark.slow
 def test_clustered_fixture_recall_is_conventional(spark):
     """On the mixture-of-Gaussians fixture (ann_clustered_recall),
     every index variant must retrieve from the right cluster
@@ -424,6 +429,7 @@ def test_bloom_decontamination_agrees_with_exact(spark):
     assert sum(r.exact_matches for r in census) == sum(exact.values()) > 0
 
 
+@pytest.mark.slow
 def test_bpe_training_loop_matches_reference(spark):
     """The distributed BPE trainer must reproduce the single-node
     reference algorithm EXACTLY — same merge sequence, same counts,
@@ -459,6 +465,7 @@ def test_bpe_training_loop_matches_reference(spark):
     assert got2[0] == ("a", "a", 21)
 
 
+@pytest.mark.slow
 def test_bpe_encode_matches_reference_and_conserves_text(spark):
     """The distributed encoder must (a) reproduce the single-node
     encode twin EXACTLY per document — merges applied in training
@@ -525,6 +532,7 @@ def test_bpe_encode_matches_reference_and_conserves_text(spark):
         assert cgot[doc_id] == ([], 0)
 
 
+@pytest.mark.slow
 def test_bpe_batched_training_matches_sequential(spark):
     """r08 (carried r07 note): the batched-scheduling variant
     (``train_bpe(batch_m>1)`` — top-B collect, driver applies up to

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from gmall_realtime2021_spark.streaming.apps import (
@@ -27,6 +28,7 @@ def _events_stream(spark, tmp_path):
     return file_stream(spark, src, spark.read.parquet(src).schema)
 
 
+@pytest.mark.slow
 def test_visitor_stats_app_end_to_end(spark, tmp_path):
     cfg = AppConfig(
         out_dir=str(tmp_path / "out"),
@@ -43,6 +45,7 @@ def test_visitor_stats_app_end_to_end(spark, tmp_path):
     q2.awaitTermination(120)
 
 
+@pytest.mark.slow
 def test_cdc_routing_app_end_to_end(spark, tmp_path):
     raw_rows = [
         ('{"database":"g","table":"order_info","type":"insert","ts":1,'
@@ -79,6 +82,7 @@ def test_cdc_routing_app_end_to_end(spark, tmp_path):
     assert list(rows) == ["7"] and "u7" in rows["7"]
 
 
+@pytest.mark.slow
 def test_cdc_routing_app_resumes_exactly_once(spark, tmp_path):
     """Restart with NEW data between runs: the checkpoint makes the
     second run process only the new file — old facts are not
@@ -185,6 +189,7 @@ def test_concurrent_apps_share_session(spark, tmp_path):
     assert _os.path.isdir(cfg.ckpt("visitor_stats"))
 
 
+@pytest.mark.slow
 def test_asof_attribution_app_end_to_end(spark, tmp_path):
     from gmall_realtime2021_spark.streaming.apps import asof_attribution_app
 
@@ -400,6 +405,7 @@ def test_event_transitions_app_end_to_end(spark, tmp_path):
     assert dict(got) == want
 
 
+@pytest.mark.slow
 def test_warehouse_ingest_app_end_to_end(spark, tmp_path, monkeypatch):
     """warehouse_ingest_app: two layouts fed by real checkpointed
     streams — lineitem into the bucketed fact table (replay-guarded

@@ -3,6 +3,8 @@ against an sf_dir and writes parquet."""
 
 from __future__ import annotations
 
+import pytest
+
 from gmall_realtime2021_spark.__main__ import main, run_plan
 from gmall_realtime2021_spark.plans import get_plans
 
@@ -66,6 +68,7 @@ def test_sql_subcommand_runs_adhoc_query(spark, tmp_path):
     assert spark.read.parquet(out).count() == n
 
 
+@pytest.mark.slow
 def test_maintain_subcommand_reports_and_compacts(spark, tmp_path, monkeypatch, capsys):
     """r12: the `maintain` verb prints the layout-health table and,
     with --compact, heals a deliberately fragmented family (exit code
@@ -94,6 +97,7 @@ def test_maintain_subcommand_reports_and_compacts(spark, tmp_path, monkeypatch, 
     spark.sql(f"DROP TABLE IF EXISTS {lineitem_t}")
 
 
+@pytest.mark.slow
 def test_maintain_gc_sweeps_retired_generations_and_legacy_tag(spark, tmp_path, monkeypatch, capsys):
     """maintain --gc (r13): removes retired layout generations past
     the grace window and reclaims the deterministic pre-r12 hash-less

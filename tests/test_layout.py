@@ -17,6 +17,8 @@ import glob
 import os
 import re
 
+import pytest
+
 
 def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -106,6 +108,7 @@ def test_partitioned_corpus_write_and_pruning(spark, tmp_path):
     assert 0 < n_train < docs.count()
 
 
+@pytest.mark.slow
 def test_compact_parquet_dir(spark, tmp_path):
     """20 per-batch appends → a handful of size-targeted files, same
     rows/values — the maintenance op every streaming sink dir needs."""
@@ -215,6 +218,7 @@ def test_sort_spec_change_forces_rebuild_not_adoption(spark, tmp_path, monkeypat
     spark.sql(f"DROP TABLE IF EXISTS {events_t}")
 
 
+@pytest.mark.slow
 def test_layout_health_flags_fragmentation(spark, tmp_path, monkeypatch):
     """r12 (VERDICT r11 item #4): layout_health must (a) report all
     four families healthy on a fresh materialization and (b) FLAG a
@@ -504,6 +508,7 @@ def test_compaction_failure_releases_lock_and_leaves_table_serving(spark, tmp_pa
     spark.sql(f"DROP TABLE IF EXISTS {lineitem_t}")
 
 
+@pytest.mark.slow
 def test_cross_process_reader_unaffected_by_compaction(spark, tmp_path, monkeypatch):
     """The r12 contract said a SEPARATE session reading the same
     warehouse dir during compaction was 'outside the contract' (it

@@ -526,6 +526,7 @@ def test_afp_fake_matches_duckdb_twin():
 # ------------------------------------------------------------ video fp
 
 
+@pytest.mark.slow
 def test_video_fingerprint_majority_fold_recall(spark):
     """The r07-verdict video family, pinned on constructed MULTI-FRAME
     payloads: a copy with one fully-corrupted frame fingerprints

@@ -40,6 +40,25 @@ def test_pricing_summary_pushdown_and_pruning(spark):
     assert "l_orderkey" not in cols and "l_partkey" not in cols
 
 
+def test_shipping_priority_hint_fails_closed_on_unknown_input_size(spark, tmp_path):
+    """The broadcast hint is gated on the orders input size; a missing
+    or non-local path has unknown size (None), and the plan then
+    carries no hint, while the local fixture keeps it."""
+    from gmall_realtime2021_spark.tables import input_bytes
+
+    uri = "file://" + SF  # readable by Spark, not a local os path
+    assert input_bytes(str(tmp_path), "orders") is None
+    assert input_bytes(uri, "orders") is None
+    assert input_bytes(SF, "orders") > 0
+
+    def hinted(sf_dir: str) -> bool:
+        df = get_plans()["shipping_priority"].build(spark, sf_dir)
+        return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
+
+    assert hinted(SF)
+    assert not hinted(uri)
+
+
 def test_json_parse_filters_reach_scan(spark):
     plan = _plan(spark, "json_parse_project")
     filters = re.search(r"DataFilters: \[([^\]]*)\]", plan).group(1)

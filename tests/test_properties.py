@@ -14,6 +14,7 @@ import os
 
 import duckdb
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -251,6 +252,7 @@ def test_duplicate_clusters_chain_graph_converges_within_cap(spark):
     assert {(r.doc_id, r.cluster_id) for r in out.collect()} == {(i, 0) for i in range(n)}
 
 
+@pytest.mark.slow
 def test_duplicate_clusters_permuted_chain_converges(spark):
     """Deep chain with PERMUTED node ids: the minimum sits mid-chain
     and pointer-jumping's label(label) lookups cross the id order
@@ -609,6 +611,7 @@ def np_float32(v: float) -> float:
     return float(np.float32(v))
 
 
+@pytest.mark.slow
 @given(docs=st.lists(st.lists(st.sampled_from("abcdefgh"), min_size=0, max_size=14), min_size=2, max_size=12))
 @settings(**SETTINGS)
 def test_duplicate_span_stats_equals_bruteforce(spark, docs):
@@ -743,6 +746,7 @@ SESSION_EVENTS = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(events=SESSION_EVENTS)
 @settings(**SETTINGS)
 def test_dynamic_gap_sessions_equal_bruteforce(spark, events):
@@ -880,6 +884,7 @@ def test_range_prefix_sums_matches_global_window(spark):
     assert got == expected
 
 
+@pytest.mark.slow
 @given(docs=st.lists(st.lists(st.sampled_from("abcd"), min_size=1, max_size=6), min_size=2, max_size=14))
 @settings(**SETTINGS)
 def test_simhash_pairs_equal_bruteforce(spark, docs):
@@ -914,6 +919,7 @@ def test_simhash_pairs_equal_bruteforce(spark, docs):
     assert dict(got) == expected
 
 
+@pytest.mark.slow
 @given(
     docs=st.lists(st.lists(st.sampled_from("abcdef"), min_size=0, max_size=10), min_size=3, max_size=12)
 )
@@ -974,6 +980,7 @@ def test_bm25_equals_bruteforce(spark, docs):
     assert got == want
 
 
+@pytest.mark.slow
 @given(
     docs=st.lists(st.lists(st.sampled_from("abcdef"), min_size=0, max_size=10), min_size=3, max_size=12)
 )
@@ -1008,6 +1015,7 @@ def test_bm25_per_doc_dl_stats_path_is_value_identical(spark, docs):
     assert via_doc_dl == via_postings
 
 
+@pytest.mark.slow
 @given(strings=st.lists(st.one_of(st.none(), TEXT), min_size=1, max_size=25))
 @settings(**SETTINGS)
 def test_doc_dl_expr_is_value_identical_to_arrow_doc_dl(spark, strings):
@@ -1142,6 +1150,7 @@ def test_dhash_and_afp_fake_match_duckdb_on_arbitrary_unicode(strings):
     con.close()
 
 
+@pytest.mark.slow
 @settings(max_examples=40, deadline=None)
 @given(st.data())
 def test_vectorized_media_kernels_match_scalar_spec(data):
@@ -1247,6 +1256,7 @@ def test_derived_partsupp_rejects_degenerate_supplier_count(spark, tmp_path):
         derived_partsupp(spark, str(tmp_path))
 
 
+@pytest.mark.slow
 def test_star_edges_match_pair_graph_on_replica_corpus(spark):
     """The bounded-output star form (r12): on a corpus whose
     duplicates are exact replicas — the copy-fixture shape the form
@@ -1297,6 +1307,7 @@ def test_star_edges_match_pair_graph_on_replica_corpus(spark):
     release_caches()
 
 
+@pytest.mark.slow
 def test_simhash_summary_matches_pair_graph_components(spark):
     """The simhash bounded accounting form (r13, VERDICT r12 item #5)
     is EXACT, not a star approximation: doc connectivity is a pure
@@ -1359,6 +1370,7 @@ def test_simhash_summary_matches_pair_graph_components(spark):
     release_caches()
 
 
+@pytest.mark.slow
 def test_layout_lifecycle_randomized_model_check(spark, tmp_path, monkeypatch):
     """Seeded randomized model check of the manifest-generation
     lifecycle on the day-partitioned event log: a 14-op sequence of

@@ -50,6 +50,7 @@ def _run(df, fn, tmp_path, name):
     q.awaitTermination(120)
 
 
+@pytest.mark.slow
 def test_dim_upsert_last_write_wins(spark, tmp_path):
     src = _write_chunks(
         spark,
@@ -67,6 +68,7 @@ def test_dim_upsert_last_write_wins(spark, tmp_path):
     assert got == {(1, "a2", 2), (2, "b", 1), (3, "c", 1)}
 
 
+@pytest.mark.slow
 def test_dynamic_route_files(spark, tmp_path):
     src = _write_chunks(
         spark,
@@ -92,6 +94,7 @@ def test_dynamic_topic_kafka_shape(spark):
     assert row.topic == "dwd_a" and '"id":1' in row.value
 
 
+@pytest.mark.slow
 def test_stats_store_drops_transient_cols(spark, tmp_path):
     """Transient columns are dropped; rows carry the epoch partition
     column (__batch_id) that makes the store idempotent — a
@@ -111,6 +114,7 @@ def test_stats_store_drops_transient_cols(spark, tmp_path):
     assert spark.read.parquet(out).count() == 1
 
 
+@pytest.mark.slow
 def test_jdbc_stats_sink_real_roundtrip(spark, tmp_path):
     """S6's REAL write path: a streaming query foreachBatch'ing into
     an actual JDBC database (embedded Derby — it ships in Spark's own
@@ -155,6 +159,7 @@ def test_idempotent_jdbc_sink_survives_redelivery(spark, tmp_path):
     assert "tmp" not in [c.lower() for c in back.columns]
 
 
+@pytest.mark.slow
 def test_hll_sketch_maintenance_sink_matches_batch(spark, tmp_path):
     """Streaming sketch maintenance ≡ batch: after two micro-batches,
     the stored per-day sketch table estimates exactly what one-pass
@@ -209,6 +214,7 @@ def test_hll_sketch_maintenance_sink_matches_batch(spark, tmp_path):
     assert streamed == batch
 
 
+@pytest.mark.slow
 def test_cms_sketch_maintenance_sink_equals_batch_exactly(spark, tmp_path):
     """Streaming Count-Min maintenance ≡ batch BIT-EXACTLY: counter
     sums are associative/commutative integers, so after two
@@ -272,6 +278,46 @@ def test_cms_sketch_maintenance_sink_equals_batch_exactly(spark, tmp_path):
     assert "never_seen_type" in est
 
 
+def _payment_enrich_swap_case(spark, sf_dir, tmp_path, monkeypatch, store):
+    """(deliver(k), state(), reference state) for the payment-enrich
+    serving store: bootstrapped from the lake layout, then upserted with
+    NEW purchase events; the reference is the ``bucketed_payment_enrich``
+    plan over the layout the batches were ingested into."""
+    from gmall_realtime2021_spark.streaming.sinks import (
+        payment_enrich_bootstrap,
+        payment_enrich_upsert_batch,
+    )
+    from gmall_realtime2021_spark.tables import load
+
+    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_DIR", str(tmp_path / "wh"))
+    payment_enrich_bootstrap(spark, sf_dir, store)
+    ev = load(spark, sf_dir, "events")
+    id_base = ev.agg(F.max("event_id")).collect()[0][0] + 1
+    # disjoint users per batch, so no batch's recompute repairs rows an
+    # earlier one wrote
+    batches = [
+        ev.filter(F.col("user_id") % 3 == k)
+        .limit(20)
+        .withColumn("event_id", F.col("event_id") + (k + 1) * id_base)
+        .withColumn("event_type", F.lit("purchase"))
+        for k in range(3)
+    ]
+
+    def deliver(k):
+        assert payment_enrich_upsert_batch(spark, sf_dir, batches[k], k, store)
+
+    def rows(df):
+        return sorted(
+            (r.pay_id, r.user_id, r.pay_time, r.prior_ct, round(r.prior_value or 0.0, 2))
+            for r in df.collect()
+        )
+
+    def want():
+        return rows(get_plans()["bucketed_payment_enrich"].build(spark, sf_dir))
+
+    return deliver, lambda: rows(spark.read.parquet(store)), want
+
+
 def test_dim_upsert_recovers_from_stale_old_next_to_intact_table(spark, tmp_path):
     """Crash window between `rename(tmp, dim_dir)` and `rmtree(old)`:
     both dim_dir and a NON-EMPTY .old exist. The next batch must
@@ -309,48 +355,69 @@ def test_dim_upsert_recovers_table_from_old_after_swap_crash(spark, tmp_path):
     assert got == {(1, "a"), (2, "b")}
 
 
-def test_hll_sink_preserves_history_through_tmp_swap(spark, tmp_path):
-    """The sketch table is the only copy of accumulated state, so the
-    rewrite must survive the same two crash windows as the dim upsert:
-    a stale .old next to an intact table, and .old holding the only
-    copy after a mid-swap crash."""
+@pytest.mark.parametrize("name", ["dim", "hll", "cms", "scd2", "bloom", "payment_enrich"])
+def test_table_swap_recovers_both_crash_windows(spark, sf_dir, tmp_path, monkeypatch, name):
+    """Every sink that rewrites its table through the ``.tmp``/``.old``
+    directory swap survives both crash windows of that swap:
+
+    - a crash between the two renames leaves ``.old`` as the ONLY copy
+      (plus a half-written ``.tmp``) — the next batch must restore it
+      before merging, or all prior history is lost;
+    - a crash after them leaves a stale ``.old`` (here an older
+      generation) next to the intact table — the next batch must
+      discard it rather than restore it or fail renaming onto it.
+
+    The store then equals a crash-free build over the same batches."""
     import shutil
 
-    from gmall_realtime2021_spark.streaming.sinks import hll_sketch_maintenance_sink
-    from gmall_realtime2021_spark.tables import load
+    from gmall_realtime2021_spark.streaming.sinks import dim_upsert_sink
 
-    SF = "/root/testdata/sf0.001"
-    ev = load(spark, SF, "events")
-    half = ev.count() // 2
-    b1, b2 = ev.limit(half), ev.exceptAll(ev.limit(half))
-    sketch_dir = str(tmp_path / "sk")
-    write = hll_sketch_maintenance_sink(sketch_dir)
-    write(b1, 0)
-    days_after_b1 = spark.read.parquet(sketch_dir).count()
-    assert days_after_b1 > 0
-    # window 1: stale .old next to the intact table — must be discarded
-    shutil.copytree(sketch_dir, sketch_dir + ".old")
-    write(b2, 1)
-    assert not os.path.isdir(sketch_dir + ".old")
-    merged = {
-        r.d: r.est
-        for r in spark.read.parquet(sketch_dir)
-        .select("d", F.hll_sketch_estimate("sketch").alias("est"))
-        .collect()
-    }
-    # window 2: .old holds the only copy — must be restored, and the
-    # replayed batch must land on the RESTORED history (no prior-day loss)
-    os.rename(sketch_dir, sketch_dir + ".old")
-    write(b2, 1)
-    replayed = {
-        r.d: r.est
-        for r in spark.read.parquet(sketch_dir)
-        .select("d", F.hll_sketch_estimate("sketch").alias("est"))
-        .collect()
-    }
-    # HLL union is idempotent per register set, so re-merging b2 into
-    # the restored table changes no estimate
-    assert replayed == merged
+    target = str(tmp_path / name)
+    if name == "payment_enrich":
+        deliver, state, want = _payment_enrich_swap_case(
+            spark, sf_dir, tmp_path, monkeypatch, target
+        )
+    else:
+        specs = {s[0]: s[1:] for s in _event_sink_specs(spark)}
+        _, chunks, frame, _ = specs["hll"]
+        specs["dim"] = (
+            lambda d: dim_upsert_sink(d, "user_id", "event_id"),
+            chunks,
+            frame,
+            lambda d: sorted(tuple(r) for r in spark.read.parquet(d).collect()),
+        )
+        make_sink, chunks, frame, read = specs[name]
+        # disjoint users per batch, so every batch leaves rows of its own
+        # in the final table
+        chunks = [[(u + 1000 * k, *rest) for u, *rest in c] for k, c in enumerate(chunks)]
+        sink = make_sink(target)
+
+        def deliver(k):
+            sink(frame(chunks[k]), k)
+
+        def state():
+            return read(target)
+
+        def want():
+            ref = str(tmp_path / "ref")
+            make_sink(ref)(frame([r for c in chunks[:3] for r in c]), 0)
+            return read(ref)
+
+    deliver(0)
+    stale = str(tmp_path / "stale")
+    shutil.copytree(target, stale)
+    # window 1: died after rename(target, .old), before rename(.tmp, target)
+    os.rename(target, target + ".old")
+    os.makedirs(target + ".tmp")
+    deliver(1)
+    assert not os.path.exists(target + ".old")
+    # window 2: died after both renames, before dropping .old
+    shutil.copytree(stale, target + ".old")
+    deliver(2)
+    assert not os.path.exists(target + ".old")
+    assert not os.path.exists(target + ".tmp")
+    got = state()
+    assert got and got == want()
 
 
 def test_stats_store_sink_rejects_legacy_root_layout(spark, tmp_path):
@@ -369,6 +436,7 @@ def test_stats_store_sink_rejects_legacy_root_layout(spark, tmp_path):
         sink(batch, 0)
 
 
+@pytest.mark.slow
 def test_postings_index_incremental_equals_batch(spark, tmp_path):
     """The BM25 inverted index maintained incrementally (two
     deliveries through postings_index_sink, plus an at-least-once
@@ -415,6 +483,7 @@ def test_postings_index_incremental_equals_batch(spark, tmp_path):
     assert got == want and len(want) > 0
 
 
+@pytest.mark.slow
 def test_bloom_maintenance_sink_equals_batch_and_is_replay_safe(spark, tmp_path):
     """Streaming Bloom maintenance ≡ batch BIT-EXACTLY: the filter is
     a position SET, so after two micro-batches the stored positions
@@ -481,6 +550,7 @@ def test_bloom_maintenance_sink_equals_batch_and_is_replay_safe(spark, tmp_path)
     assert probe.exceptAll(spark.read.parquet(filter_dir)).count() == 0
 
 
+@pytest.mark.slow
 def test_scd2_maintenance_sink_equals_batch_build(spark, tmp_path):
     """Streaming SCD2 maintenance ≡ batch build EXACTLY: after the
     event stream arrives in two in-order micro-batches, the at-rest
@@ -627,6 +697,7 @@ def test_scd2_maintenance_sink_equals_batch_build(spark, tmp_path):
             assert fh.read().splitlines()[0] == str(7 + n)  # marker healed
 
 
+@pytest.mark.slow
 def test_lm_counts_sink_incremental_equals_batch(spark, tmp_path):
     """The bigram-LM model maintained incrementally (two deliveries
     through lm_counts_sink, plus an at-least-once replay of the
@@ -678,6 +749,7 @@ def test_lm_counts_sink_incremental_equals_batch(spark, tmp_path):
     assert len(want) == 5 and 15 not in want  # bigram-less doc drops on both sides
 
 
+@pytest.mark.slow
 def test_phash_index_sink_incremental_equals_batch(spark, tmp_path):
     """The image-fingerprint index maintained incrementally (two
     media deliveries through phash_index_sink, plus an at-least-once
@@ -724,6 +796,7 @@ def test_phash_index_sink_incremental_equals_batch(spark, tmp_path):
     assert pair_set(stored) == want
 
 
+@pytest.mark.slow
 def test_phash_index_sink_through_real_stream(spark, tmp_path):
     """phash_index_sink driven by an ACTUAL Structured Streaming query
     (file source throttled to one file per micro-batch, foreachBatch,
@@ -819,27 +892,24 @@ def _chaos_schedule(rng, n):
     return sched
 
 
-def _seed_chaos_specs(spark, tmp_path):
-    """Shared inputs + per-sink (make_sink, batch frames, state reader)
-    specs for the chaos test. Frames are rebuilt from collected rows so
-    a replayed batch is delivered VERBATIM, as Structured Streaming
-    would re-deliver it from the offsets log."""
+N_CHUNKS = 4
+
+
+def _event_sink_specs(spark):
+    """Per-sink (make_sink(dir), batch chunks, frame builder, state
+    reader) specs of the event-fed maintenance sinks that rewrite their
+    table in place (HLL, CMS, SCD2, Bloom). Frames are rebuilt from
+    collected rows so a replayed batch is delivered VERBATIM, as
+    Structured Streaming would re-deliver it from the offsets log."""
     import datetime
 
-    from gmall_realtime2021_spark.multimodal import synthesize_media
     from gmall_realtime2021_spark.streaming.sinks import (
-        afp_index_sink,
         bloom_filter_maintenance_sink,
         cms_sketch_maintenance_sink,
         hll_sketch_maintenance_sink,
-        lm_counts_sink,
-        phash_index_sink,
-        postings_index_sink,
         scd2_maintenance_sink,
-        video_index_sink,
     )
 
-    N = 4
     # events: 3 days × 15 users × 4 types, ordered by (ts, event_id) so
     # contiguous chunks satisfy the SCD2 per-user event-time contract
     ev_schema = "user_id long, event_type string, ts timestamp, event_id long"
@@ -848,40 +918,10 @@ def _seed_chaos_specs(spark, tmp_path):
     for i in range(120):
         ts = datetime.datetime(2021, 6, 1 + (i // 40), 8, i % 40, i % 7)
         ev_rows.append((i % 15, types[(i * 7 + i // 15) % 4], ts, i))
-    ev_chunks = [ev_rows[i * 30 : (i + 1) * 30] for i in range(N)]
+    ev_chunks = [ev_rows[i * 30 : (i + 1) * 30] for i in range(N_CHUNKS)]
 
     def ev_frame(rows):
         return spark.createDataFrame(rows, ev_schema)
-
-    # documents: doc_id mod 3 cycles media kind (0=image, 1=audio,
-    # 2=video) so ONE synthesized media table feeds all three
-    # fingerprint index sinks; each modality has an exact dup pair
-    # split across batch boundaries (0/9 image, 1/4 audio, 2/5 video)
-    base = "a quick brown fox jumps over the lazy dog and keeps running " * 3
-    base2 = "spark shuffles the postings by token and weights the match " * 2
-    base3 = "token frequencies weight the match in every document " * 2
-    doc_rows = [
-        (0, base),
-        (1, base2),
-        (2, base3),
-        (3, base[:40] + "~" + base[41:]),
-        (9, base),      # image dup of 0
-        (4, base2),     # audio dup of 1
-        (5, base3),     # video dup of 2
-        (7, "a completely different document about shuffle economics " * 2),
-    ]
-    doc_chunks = [doc_rows[i * 2 : (i + 1) * 2] for i in range(N)]
-
-    def doc_frame(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    media_schema = synthesize_media(doc_frame(doc_rows)).schema
-    media_chunks = [
-        synthesize_media(doc_frame(rows)).collect() for rows in doc_chunks
-    ]
-
-    def media_frame(rows):
-        return spark.createDataFrame(rows, media_schema)
 
     def read_store(d):
         return spark.read.parquet(str(d))
@@ -904,6 +944,68 @@ def _seed_chaos_specs(spark, tmp_path):
     def bloom_state(d):
         return {r.pos for r in read_store(d).collect()}
 
+    return [
+        # (name, make_sink(dir), chunks, frame builder, state reader)
+        ("hll", hll_sketch_maintenance_sink, ev_chunks, ev_frame, hll_state),
+        ("cms", cms_sketch_maintenance_sink, ev_chunks, ev_frame, cms_state),
+        ("scd2", scd2_maintenance_sink, ev_chunks, ev_frame, scd2_state),
+        (
+            "bloom",
+            lambda d: bloom_filter_maintenance_sink(d, "user_id"),
+            ev_chunks,
+            ev_frame,
+            bloom_state,
+        ),
+    ]
+
+
+def _seed_chaos_specs(spark, tmp_path):
+    """The chaos test's per-sink specs: the event-fed sinks of
+    :func:`_event_sink_specs` plus the epoch-partitioned index sinks
+    fed by documents and synthesized media."""
+    from gmall_realtime2021_spark.multimodal import synthesize_media
+    from gmall_realtime2021_spark.streaming.sinks import (
+        afp_index_sink,
+        lm_counts_sink,
+        phash_index_sink,
+        postings_index_sink,
+        video_index_sink,
+    )
+
+
+    # documents: doc_id mod 3 cycles media kind (0=image, 1=audio,
+    # 2=video) so ONE synthesized media table feeds all three
+    # fingerprint index sinks; each modality has an exact dup pair
+    # split across batch boundaries (0/9 image, 1/4 audio, 2/5 video)
+    base = "a quick brown fox jumps over the lazy dog and keeps running " * 3
+    base2 = "spark shuffles the postings by token and weights the match " * 2
+    base3 = "token frequencies weight the match in every document " * 2
+    doc_rows = [
+        (0, base),
+        (1, base2),
+        (2, base3),
+        (3, base[:40] + "~" + base[41:]),
+        (9, base),      # image dup of 0
+        (4, base2),     # audio dup of 1
+        (5, base3),     # video dup of 2
+        (7, "a completely different document about shuffle economics " * 2),
+    ]
+    doc_chunks = [doc_rows[i * 2 : (i + 1) * 2] for i in range(N_CHUNKS)]
+
+    def doc_frame(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    media_schema = synthesize_media(doc_frame(doc_rows)).schema
+    media_chunks = [
+        synthesize_media(doc_frame(rows)).collect() for rows in doc_chunks
+    ]
+
+    def media_frame(rows):
+        return spark.createDataFrame(rows, media_schema)
+
+    def read_store(d):
+        return spark.read.parquet(str(d))
+
     def epoch_state(d):
         df = read_store(d).drop("__batch_id")
         return sorted(tuple(r) for r in df.collect())
@@ -917,18 +1019,8 @@ def _seed_chaos_specs(spark, tmp_path):
         )
         return {(r.kind, r.k): r.ct for r in merged}
 
-    return [
+    return _event_sink_specs(spark) + [
         # (name, make_sink(dir), chunks, frame builder, state reader)
-        ("hll", hll_sketch_maintenance_sink, ev_chunks, ev_frame, hll_state),
-        ("cms", cms_sketch_maintenance_sink, ev_chunks, ev_frame, cms_state),
-        ("scd2", scd2_maintenance_sink, ev_chunks, ev_frame, scd2_state),
-        (
-            "bloom",
-            lambda d: bloom_filter_maintenance_sink(d, "user_id"),
-            ev_chunks,
-            ev_frame,
-            bloom_state,
-        ),
         ("phash", phash_index_sink, media_chunks, media_frame, epoch_state),
         ("afp", afp_index_sink, media_chunks, media_frame, epoch_state),
         ("video", video_index_sink, media_chunks, media_frame, epoch_state),
@@ -937,6 +1029,7 @@ def _seed_chaos_specs(spark, tmp_path):
     ]
 
 
+@pytest.mark.slow
 def test_maintenance_sinks_survive_crash_replay_chaos(spark, tmp_path):
     """Randomized kill-and-restart chaos across ALL maintenance sinks
     at once: the same legal at-least-once delivery schedule —
@@ -1409,6 +1502,7 @@ def test_ivf_index_incremental_ingest(spark, tmp_path, monkeypatch):
         assert qid in hits and abs(hits[qid] - 1.0) < 1e-6
 
 
+@pytest.mark.slow
 def test_ivf_cell_auto_compaction(spark, tmp_path, monkeypatch):
     """IVF cell compaction (r11): appends fragment cells one file per
     batch; past the per-cell threshold the append auto-compacts the
@@ -1465,6 +1559,7 @@ def test_ivf_cell_auto_compaction(spark, tmp_path, monkeypatch):
     assert read_ivf_embeddings(spark, sf_dir).count() == len(before) + 40
 
 
+@pytest.mark.slow
 def test_ivf_ingest_through_real_stream(spark, tmp_path, monkeypatch):
     """append_ivf_batch driven by an ACTUAL Structured Streaming query
     (file source, one file per micro-batch, foreachBatch,

@@ -114,6 +114,7 @@ def test_visitor_stats_stream_matches_batch(spark, events_replay, tmp_path):
     assert _rows(got) == _rows(batch)
 
 
+@pytest.mark.slow
 def test_unique_visitors_stream_matches_batch(spark, events_replay, tmp_path):
     out = _run_stream(
         unique_visitors_stream(_events_stream(spark, events_replay)), tmp_path, "uv_stream"
@@ -142,6 +143,7 @@ def test_new_visitor_repair_stream_matches_batch(spark, events_replay, tmp_path)
     assert _rows(rolled) == _rows(batch)
 
 
+@pytest.mark.slow
 def test_user_jump_stream_matches_batch(spark, events_replay, tmp_path):
     bounces = _run_stream(
         user_jump_stream(_events_stream(spark, events_replay)), tmp_path, "jump_stream"
@@ -155,46 +157,7 @@ def test_user_jump_stream_matches_batch(spark, events_replay, tmp_path):
     assert _rows(rolled) == _rows(batch)
 
 
-def test_user_jump_tws_exact_timers_match_batch(spark, events_replay, tmp_path):
-    """T3 on transformWithStateInPandas with REAL event-time timers
-    (r12, VERDICT r11 item #3): the CEP `within` timeout is a
-    registered timer + handleExpiredTimer — Flink's
-    registerEventTimeTimer analog, where applyInPandasWithState only
-    offers a whole-state timeout. Must emit exactly the batch plan's
-    bounces (which the applyInPandasWithState twin also matches, so
-    all three forms agree)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("no python protobuf runtime and no stageable bundle — TWS worker cannot start")
-    from gmall_realtime2021_spark.streaming.state import bounce_events_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = _events_stream(spark, events_replay)
-        bounces = _run_stream(
-            bounce_events_tws(stream.withWatermark("ts", "0 seconds")),
-            tmp_path,
-            "jump_tws",
-        )
-        rolled = (
-            bounces.filter(F.col("user_id") != SENTINEL_UID)
-            .groupBy(F.date_format(F.date_trunc("day", "bounce_ts"), "yyyy-MM-dd").alias("dt"))
-            .agg(F.count("*").alias("bounce_ct"))
-        )
-        batch = get_plans()["user_jump_detail"].build(spark, SF)
-        assert _rows(rolled) == _rows(batch)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
+@pytest.mark.slow
 def test_keyword_stats_stream_matches_batch(spark, tmp_path):
     """A3 windowed form: docs get a deterministic ts (doc_id seconds
     apart, so 10 s windows hold ~10 docs each); streamed windowed
@@ -252,6 +215,7 @@ def lineitem_replay(spark, tmp_path_factory):
     return _chunked_replay(spark, tmpdir, "lineitem", "l_shipdate")
 
 
+@pytest.mark.slow
 def test_order_wide_stream_matches_batch(spark, orders_replay, lineitem_replay, tmp_path):
     o = file_stream(
         spark, orders_replay + "/*.parquet", load(spark, SF, "orders").schema, max_files_per_trigger=1
@@ -267,6 +231,7 @@ def test_order_wide_stream_matches_batch(spark, orders_replay, lineitem_replay, 
     assert _rows(out) == _rows(batch)
 
 
+@pytest.mark.slow
 def test_payment_wide_stream_matches_batch(spark, events_replay, tmp_path):
     e = _events_stream(spark, events_replay).filter(F.col("user_id") != SENTINEL_UID)
     out = _run_stream(payment_wide_stream(e, e), tmp_path, "pw_stream")
@@ -279,64 +244,7 @@ def test_payment_wide_stream_matches_batch(spark, events_replay, tmp_path):
     assert _rows(rolled) == _rows(batch)
 
 
-def test_new_visitor_repair_tws_matches_batch(spark, events_replay, tmp_path):
-    """T1 on the modern transformWithStateInPandas API — same output
-    as the applyInPandasWithState form and the batch plan.
-
-    History of the env gate: r11 root-caused the skip to the TWS
-    *driver worker* (the JVM-spawned Python process that negotiates
-    state schemas over the StateMessage protobuf protocol) dying at
-    import with no python ``protobuf`` runtime installed
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE). r12 un-gated it
-    (VERDICT r11 item #3): ``tests/conftest._bootstrap_protobuf``
-    stages the host google-cloud-sdk's bundled pure-python protobuf
-    onto PYTHONPATH before the JVM launches (the worker inherits the
-    JVM's env, so a late export never reaches it), widening the
-    gencode check from exact-minor to same-major. The skip below now
-    fires only on hosts with no runtime AND no stageable bundle."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "transformWithStateInPandas needs the python protobuf runtime "
-            "(google.protobuf absent in this sandbox; the TWS driver worker "
-            "speaks a protobuf state protocol) — applyInPandasWithState twin "
-            "covers T1"
-        )
-    from gmall_realtime2021_spark.streaming.state import new_visitor_flags_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = _events_stream(spark, events_replay)
-        try:
-            flags = _run_stream(
-                new_visitor_flags_tws(stream.withWatermark("ts", "3 seconds")),
-                tmp_path,
-                "nvr_tws",
-            )
-        except Exception as exc:  # pragma: no cover - env-dependent
-            pytest.skip(f"transformWithStateInPandas unavailable: {exc}")
-        rolled = (
-            flags.filter(F.col("user_id") != SENTINEL_UID)
-            .groupBy(F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("dt"))
-            .agg(
-                F.sum(F.col("is_new")).alias("new_ct"),
-                F.sum(1 - F.col("is_new")).alias("returning_ct"),
-            )
-        )
-        batch = get_plans()["new_visitor_repair"].build(spark, SF)
-        assert _rows(rolled) == _rows(batch)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
+@pytest.mark.slow
 def test_late_data_dropped_by_watermark(spark, tmp_path):
     """W3 late-data semantics (SURVEY §2.7): once the watermark has
     finalized (emitted + evicted) a window, records falling into it
@@ -381,7 +289,7 @@ def test_late_data_dropped_by_watermark(spark, tmp_path):
     assert len([k for k in rows if k[0] == "2024-01-01 00:00:00"]) == 1  # no resurrection
 
 
-def test_session_window_stream_matches_batch(spark, events_replay, tmp_path):
+def test_session_window_stream_append_matches_batch(spark, events_replay, tmp_path):
     """Session windows in streaming: Spark merges overlapping session
     fragments in state as events arrive; once the watermark passes a
     session's close, the merged window emits. Must equal the batch
@@ -410,6 +318,7 @@ def test_session_window_stream_matches_batch(spark, events_replay, tmp_path):
     assert _rows(got) == _rows(batch)
 
 
+@pytest.mark.slow
 def test_grouped_count_update_mode_retract_analog(spark, tmp_path):
     """A8 retract semantics (Demo1.java toRetractStream): a
     non-windowed grouped count in update output mode re-emits a key's
@@ -503,6 +412,7 @@ def test_stateful_operator_resumes_from_checkpoint(spark, tmp_path):
     assert _rows(rolled) == _rows(batch)
 
 
+@pytest.mark.slow
 def test_asof_attribution_stream_matches_batch(spark, tmp_path):
     """The bounded-lookback as-of: chunked replay through the
     watermarked interval-join + windowed-argmax pipeline must equal
@@ -554,6 +464,7 @@ def test_asof_attribution_stream_matches_batch(spark, tmp_path):
     assert _rows(got) == _rows(batch)
 
 
+@pytest.mark.slow
 def test_product_stats_stream_matches_batch(spark, tmp_path_factory, tmp_path):
     """The flagship DWS app's streaming twin: chunked lineitem replay
     through the stream-static dim join + 30-day windowed agg equals
@@ -623,6 +534,7 @@ def _state_metric(progresses, metric: str) -> list[int]:
     return out
 
 
+@pytest.mark.slow
 def test_uv_dedup_state_evicted_at_watermark(spark, events_replay, tmp_path):
     """W7 — the watermark must actually DROP state rows, not just gate
     output: the UV-dedup stream holds (user, day-window) keys only
@@ -643,6 +555,7 @@ def test_uv_dedup_state_evicted_at_watermark(spark, events_replay, tmp_path):
     assert totals[-1] < max(totals), (totals, removed)
 
 
+@pytest.mark.slow
 def test_interval_join_state_evicted_at_watermark(spark, orders_replay, lineitem_replay, tmp_path):
     """J1 state bound — the stream-stream interval join must shed
     buffered rows as the 1-day watermark advances across the 7-year
@@ -677,6 +590,7 @@ def test_pq_encode_is_stateless_streamable(spark, tmp_path):
     assert _rows(out) == _rows(pq_encode(emb))
 
 
+@pytest.mark.slow
 def test_full_outer_interval_join_stream_matches_batch(spark, tmp_path):
     """FULL-OUTER stream-stream interval join: once all watermarks
     pass, the streamed result (including the null-side rows the join
@@ -724,6 +638,7 @@ def test_full_outer_interval_join_stream_matches_batch(spark, tmp_path):
     assert got.filter("view_id = -1").count() > 0
 
 
+@pytest.mark.slow
 def test_incremental_dedup_stream_matches_batch(spark, tmp_path):
     """batch≡stream for the incremental-ingest dedup: the streaming
     probe over the incoming docs (2 micro-batches) against the static
@@ -960,6 +875,7 @@ def test_first_touch_stream_matches_batch(spark, tmp_path):
     assert streamed == batch
 
 
+@pytest.mark.slow
 def test_first_touch_stream_credits_same_ts_view_sorted_later(spark, tmp_path):
     """Tie semantics pin (review finding): a view with the SAME ts as
     the purchase but a HIGHER event_id must still be credited — the
@@ -997,6 +913,7 @@ def test_first_touch_stream_credits_same_ts_view_sorted_later(spark, tmp_path):
     assert r.first_view_id == 5 and r.gap_us == 0
 
 
+@pytest.mark.slow
 def test_watermark_drops_late_rows_and_reports_them(spark, tmp_path):
     """Late-data contract: rows arriving behind the watermark are
     dropped from the windowed aggregate AND the drop is observable in

@@ -360,9 +360,10 @@ def user_jump_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressible with lag/lead over (key, time): entry ⇔ no previous
     event within the gap; bounce ⇔ entry ∧ no next event within the
     gap (30 min here — events are sparser than page views). The
-    streaming twin gets exact timeout semantics from the event-time
-    timeout of ``applyInPandasWithState``
-    (``streaming/state.bounce_events``).
+    streaming twin (``streaming/jobs.user_jump_stream``) counts
+    sessions with Spark's ``session_window``: a bounce is a session of
+    exactly one event, and a session closes when the watermark passes
+    last event + gap, the CEP timeout.
     """
     events = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

@@ -6,9 +6,9 @@ oracle twins proves exact semantics:
 
 - ``session_window_stats`` — ``F.session_window`` (30-min gap).
   Oracle: gaps-and-islands (island id = running count of gap-breaks
-  per user). Spark closes a session when the next event's ts ≥
-  previous ts + gap; window.end = last event + gap — the SQL twin
-  reproduces both bounds.
+  per user). Spark closes a session when the next event's ts >
+  previous ts + gap (an event exactly one gap later still merges);
+  window.end = last event + gap — the SQL twin reproduces both bounds.
 - ``sliding_window_stats`` — hopping ``F.window(1 hour, 30 min)``.
   Oracle: each event expands to exactly size/slide = 2 rows via
   unnest, bucketed with time_bucket.
@@ -16,7 +16,8 @@ oracle twins proves exact semantics:
   growing 15-min steps) as a stateless ≤4-row slice expansion.
 - ``dynamic_gap_sessions`` — per-event gap (Flink withDynamicGap):
   running-max reach merge semantics, pinned equal to
-  ``F.session_window`` with a gap column in test_non_vacuous.py.
+  ``F.session_window`` with a gap column in test_non_vacuous.py on
+  data with no exact-gap ties.
 
 Both are watermark-compatible streaming aggregations in the skin
 (same expressions under ``withWatermark``); batch forms are the
@@ -38,7 +39,7 @@ from gmall_realtime2021_spark.tables import load
     WITH seq AS (
         SELECT user_id, ts, value,
                CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                         >= INTERVAL 30 MINUTE
+                         > INTERVAL 30 MINUTE
                     OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
                     THEN 1 ELSE 0 END AS brk
         FROM events
@@ -236,9 +237,11 @@ def dynamic_gap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks must keep the session open past the clicks' own reach).
     ``session_funnel``'s fixed-gap flag form is the equal-gap special
     case EXCEPT at the boundary: the funnel keeps an exactly-gap
-    event in-session (strict >), while this plan and the TVF start a
-    new one (ts >= reach, half-open windows) — both conventions are
-    boundary-pinned in their tests.
+    event in-session (strict >), while this plan starts a new one
+    (ts >= reach, half-open windows) — both conventions are
+    boundary-pinned in their tests. ``F.session_window`` with a gap
+    column merges an exactly-gap event like the funnel does, so it
+    equals this plan only on data with no exact-gap ties.
 
     Scale: identical to the fixed-gap sessionizer — ONE user_id
     shuffle; the running max, the cumulative session id, and the

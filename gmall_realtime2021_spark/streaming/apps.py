@@ -164,6 +164,11 @@ def unique_visitors_app(events: DataFrame, cfg: AppConfig) -> StreamingQuery:
 
 
 def user_jump_app(events: DataFrame, cfg: AppConfig) -> StreamingQuery:
+    """UserJumpDetailApp twin. Its state is a ``session_window``
+    aggregate; a ``user_jump`` checkpoint written by the earlier
+    ``applyInPandasWithState`` operator has a different state schema
+    and cannot be resumed — discard it (and rebuild the sink from the
+    source) before starting this app against it."""
     return _start(
         J.user_jump_stream(events),
         S.stats_store_sink(cfg.sink_path("user_jump")),

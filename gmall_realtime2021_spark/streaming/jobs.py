@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gmall_realtime2021_spark.streaming.state import bounce_events, new_visitor_flags
+from gmall_realtime2021_spark.streaming.state import new_visitor_flags
 
 __all__ = [
     "visitor_stats_stream",
@@ -106,13 +106,31 @@ def new_visitor_repair_stream(events: DataFrame, delay: str = "3 seconds") -> Da
 
 
 def user_jump_stream(events: DataFrame, gap_minutes: int = 30, delay: str = "0 seconds") -> DataFrame:
-    """T3/W4/W8 twin of plans.dwm.user_jump_detail — bounce records.
+    """T3/W4/W8 twin of plans.dwm.user_jump_detail — bounce records
+    (user_id, bounce_ts).
+
+    A bounce is a session entry with no successor within the gap, so
+    it is exactly a session of one event: one built-in
+    ``session_window`` aggregate keeps the count per (user, session)
+    in the engine's own state store, no Python worker. Spark merges
+    sessions inclusively — an event exactly ``gap`` after the previous
+    one joins its session — which is the batch rule's strict
+    ``next_ts - ts > gap``; ``bounce_ts`` is the session start.
 
     Monotonous-watermark posture like the reference
-    (``UserJumpDetailApp.java:43-48``); the CEP ``within`` timeout is
-    an event-time state timeout (streaming/state.py).
+    (``UserJumpDetailApp.java:43-48``). Append mode emits a session
+    once the watermark passes its end (last event + gap): the CEP
+    ``within`` timeout. The watermark a batch computes applies from
+    the NEXT micro-batch, so a bounce shows up one micro-batch after
+    the event that proves it.
     """
-    return bounce_events(events.withWatermark("ts", delay), gap_minutes)
+    return (
+        events.withWatermark("ts", delay)
+        .groupBy("user_id", F.session_window("ts", f"{gap_minutes} minutes").alias("s"))
+        .agg(F.count("*").alias("n"))
+        .filter(F.col("n") == 1)
+        .select("user_id", F.col("s.start").alias("bounce_ts"))
+    )
 
 
 def keyword_stats_stream(docs: DataFrame, delay: str = "2 seconds") -> DataFrame:

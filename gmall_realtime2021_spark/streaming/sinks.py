@@ -863,35 +863,48 @@ def payment_enrich_upsert_batch(
     skip, lineage = _replay_guard_skip(guard_dir, batch_id, spark, sink_name)
     if skip:
         return False
-    W.append_bucketed_batch(
-        spark,
-        events_t,
-        batch_df,
-        batch_id,
-        W.EVENTS_BUCKET_KEY,
-        sink_name=f"{sink_name}_events",
-        sort_cols=W.EVENTS_SORT_COLS,
-    )
-    # bounded: one row — the batch's time span
-    span = batch_df.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
-    if span.lo is None:
-        _write_batch_marker(guard_dir, batch_id, lineage)
-        return True
-    users = batch_df.select("user_id").distinct()
-    margin = F.expr("INTERVAL 30 MINUTES")
-    slice_ev = (
-        spark.table(events_t)
-        .filter((F.col("ts") >= F.lit(span.lo) - margin) & (F.col("ts") <= F.lit(span.hi) + margin))
-        .join(F.broadcast(users), "user_id", "left_semi")
-    )
-    recomputed = _enrich_rows(slice_ev).filter(F.col("pay_time") >= F.date_format(F.lit(span.lo), "yyyy-MM-dd HH:mm:ss"))
-    # merge-by-pk swap (single-writer, crash-safe)
-    with _replace_dir(store_dir) as tmp:
-        if os.path.isdir(store_dir):
-            existing = spark.read.parquet(store_dir)
-            merged = existing.join(recomputed, "pay_id", "left_anti").unionByName(recomputed)
-        else:
-            merged = recomputed
-        merged.write.mode("overwrite").parquet(tmp)
+    # persist: the append, the span and the user list are three
+    # actions over the batch, and the merge reads the recomputed slice
+    # on both sides of its anti-join + union — without it the source
+    # is scanned three times (progress would report 3x numInputRows)
+    # and the slice recomputed twice (same discipline as base_log_app)
+    cached = [batch_df.persist()]
+    try:
+        W.append_bucketed_batch(
+            spark,
+            events_t,
+            batch_df,
+            batch_id,
+            W.EVENTS_BUCKET_KEY,
+            sink_name=f"{sink_name}_events",
+            sort_cols=W.EVENTS_SORT_COLS,
+        )
+        # bounded: one row — the batch's time span
+        span = batch_df.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
+        if span.lo is None:
+            _write_batch_marker(guard_dir, batch_id, lineage)
+            return True
+        users = batch_df.select("user_id").distinct()
+        margin = F.expr("INTERVAL 30 MINUTES")
+        slice_ev = (
+            spark.table(events_t)
+            .filter((F.col("ts") >= F.lit(span.lo) - margin) & (F.col("ts") <= F.lit(span.hi) + margin))
+            .join(F.broadcast(users), "user_id", "left_semi")
+        )
+        recomputed = _enrich_rows(slice_ev).filter(
+            F.col("pay_time") >= F.date_format(F.lit(span.lo), "yyyy-MM-dd HH:mm:ss")
+        )
+        cached.append(recomputed.persist())
+        # merge-by-pk swap (single-writer, crash-safe)
+        with _replace_dir(store_dir) as tmp:
+            if os.path.isdir(store_dir):
+                existing = spark.read.parquet(store_dir)
+                merged = existing.join(recomputed, "pay_id", "left_anti").unionByName(recomputed)
+            else:
+                merged = recomputed
+            merged.write.mode("overwrite").parquet(tmp)
+    finally:
+        for df in cached:
+            df.unpersist()
     _write_batch_marker(guard_dir, batch_id, lineage)
     return True

@@ -2,29 +2,29 @@
 
 Every operator here runs on ``applyInPandasWithState`` — Spark's
 Arrow-batched arbitrary-stateful operator, the idiomatic PySpark
-stand-in for Flink's ``ValueState``/CEP patterns — and is the one
+stand-in for Flink's ``ValueState`` process functions — and is the one
 streaming form of its batch plan:
 
 - :func:`new_visitor_flags` — T1, ``BaseLogApp.java:156-204``:
   per-device first-visit date in state; a later-day record claiming
   ``is_new`` is repaired to 0.
-- :func:`bounce_events` — T3, ``UserJumpDetailApp.java:51-92``: CEP
-  «entry with no successor within the gap» where the *timeout*
-  matches are the bounces; event-time timeouts reproduce CEP
-  ``within`` exactly (fires when the watermark passes entry+gap).
 - :func:`transition_pairs` / :func:`first_touch_attribution_pairs` —
   per-user predecessor pairing and earliest-view attribution, the
   streaming forms of ``event_transitions`` and
   ``first_touch_attribution``.
 
-State size: O(1) per active key (a date / a timestamp + flag), and
-T3 state self-clears via its timeout — at 1000-executor scale state
-is hash-partitioned by key, the same layout Flink uses.
+T3 (``UserJumpDetailApp``, bounces) is not here: it needs no Python
+state, it is a built-in ``session_window`` aggregate
+(``jobs.user_jump_stream``).
+
+State size: O(1) per active key (a date / a timestamp / an event) —
+at 1000-executor scale state is hash-partitioned by key, the same
+layout Flink uses.
 
 Ordering: every operator CONCATENATES its key's Arrow chunks before
 sorting by (ts, event_id) — a key-batch larger than
 ``maxRecordsPerBatch`` arrives as several chunks in arbitrary order,
-and per-chunk sorting would corrupt the gap/first-day/pairing logic
+and per-chunk sorting would corrupt the first-day/pairing logic
 (pinned by the chunked-delivery test). Cross-batch order is arrival
 order, exactly like the reference's per-record processing; on
 ts-ordered ingest the output equals the batch plan (tests assert
@@ -37,13 +37,11 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
 __all__ = [
     "new_visitor_flags",
-    "bounce_events",
     "transition_pairs",
     "first_touch_attribution_pairs",
 ]
@@ -103,81 +101,6 @@ def new_visitor_flags(events: DataFrame) -> DataFrame:
         .groupBy("user_id")
         .applyInPandasWithState(
             repair, _FLAGS_OUT, _FLAGS_STATE, "append", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-_BOUNCE_OUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("bounce_ts", T.TimestampType()),
-    ]
-)
-#: state: last event's ts (epoch micros) and whether it was a session entry.
-_BOUNCE_STATE = T.StructType(
-    [T.StructField("last_us", T.LongType()), T.StructField("last_is_entry", T.BooleanType())]
-)
-
-
-def bounce_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """T3 — bounce records: session entries with no successor within
-    the gap. Emits (user_id, bounce_ts).
-
-    Per key the state is the last event and its entry-ness; a new
-    event more than ``gap`` after a pending entry proves the bounce,
-    and the event-time timeout (watermark > last+gap) proves it when
-    no event ever comes — the two CEP outcomes of
-    ``UserJumpDetailApp.java:75-92``. State clears on timeout: any
-    later event is by then necessarily an entry.
-    """
-    gap_us = gap_minutes * 60_000_000
-
-    def detect(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            last_us, last_is_entry = state.get
-            state.remove()
-            if last_is_entry:
-                yield pd.DataFrame(
-                    {"user_id": [user_id], "bounce_ts": [pd.Timestamp(last_us, unit="us")]}
-                )
-            return
-        last_us, last_is_entry = state.get if state.exists else (None, False)
-        bounces: list[int] = []
-        # concatenate Arrow chunks before sorting — a key-batch larger
-        # than maxRecordsPerBatch arrives as several chunks whose
-        # interleave is arbitrary; per-chunk sorting would run the gap
-        # logic on out-of-order timestamps (see transition_pairs)
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf):
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for ts in pdf["ts"]:
-                us = ts.value // 1_000
-                if last_us is not None and last_is_entry and us - last_us > gap_us:
-                    bounces.append(last_us)
-                is_entry = last_us is None or us - last_us > gap_us
-                last_us, last_is_entry = us, is_entry
-        if last_us is None:
-            return
-        state.update((last_us, last_is_entry))
-        # Timeout proves the bounce when the stream goes quiet; +1 so
-        # a successor at exactly the gap bound is not a bounce (strict >).
-        state.setTimeoutTimestamp((last_us + gap_us) // 1_000 + 1)
-        if bounces:
-            yield pd.DataFrame(
-                {
-                    "user_id": user_id,
-                    "bounce_ts": [pd.Timestamp(us, unit="us") for us in bounces],
-                }
-            )
-
-    return (
-        events.select("user_id", "ts", "event_id")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            detect, _BOUNCE_OUT, _BOUNCE_STATE, "append", GroupStateTimeout.EventTimeTimeout
         )
     )
 

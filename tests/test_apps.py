@@ -509,6 +509,9 @@ def test_warehouse_ingest_app_payment_enrich_stream(spark, tmp_path, monkeypatch
         layout="payment_enrich",
     )
     q.awaitTermination(120)
+    # each micro-batch is read once: the sink's several actions over it
+    # would otherwise each rescan the source and inflate numInputRows
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 50 + 30
 
     store = cfg.sink_path("payment_enrich_store")
     got = {

@@ -101,6 +101,42 @@ def test_session_funnel_gap_boundary_is_strict(spark, tmp_path):
     assert r.view_then_click == 0 and r.full_funnel == 0
 
 
+def test_session_window_stats_oracle_exact_at_gap_boundary(spark, tmp_path):
+    """``F.session_window`` keeps an event exactly 30 minutes after the
+    previous one in the same session (inclusive merge); the DuckDB
+    oracle must split on a strictly greater gap to agree. Events at 0,
+    30 and 90 minutes are two sessions, not three."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from gmall_realtime2021_spark.tables import TABLES
+    from tests.oracle_compare import compare
+
+    # the oracle reads one parquet FILE per table: write the events as a
+    # single part file and borrow the other tables from the fixture
+    src = str(tmp_path / "sw_edge")
+    ev = os.path.join(src, "events.parquet")
+    spark.createDataFrame(
+        [
+            (1, "2021-06-01 10:00:00", 1, "view", 1.0),
+            (2, "2021-06-01 10:30:00", 1, "view", 2.0),
+            (3, "2021-06-01 11:30:00", 1, "view", 4.0),
+        ],
+        "event_id long, ts string, user_id long, event_type string, value double",
+    ).withColumn("ts", F.to_timestamp("ts")).coalesce(1).write.parquet(ev + ".dir")
+    (part,) = [f for f in os.listdir(ev + ".dir") if f.endswith(".parquet")]
+    os.replace(os.path.join(ev + ".dir", part), ev)
+    for t in TABLES:
+        dst = os.path.join(src, f"{t}.parquet")
+        if not os.path.exists(dst):
+            os.symlink(os.path.join(SF, f"{t}.parquet"), dst)
+    plan = get_plans()["session_window_stats"]
+    got = plan.build(spark, src)
+    assert sorted(r.event_ct for r in got.collect()) == [1, 2]
+    compare(got, plan.oracle, src)
+
+
 def test_dau_wau_single_day_stickiness_is_one(spark, tmp_path):
     """One active day: DAU == WAU for that day, stickiness exactly
     1.0, and no phantom as-of days beyond the corpus max day."""

@@ -38,6 +38,19 @@ SF = "/root/testdata/sf0.001"
 SENTINEL_UID = -1
 
 
+def _write_stream_files(out: str, dfs) -> None:
+    """One single-file parquet per DataFrame in ``dfs``, mtimes
+    ascending, so a ``maxFilesPerTrigger=1`` stream reads them as one
+    micro-batch each, in order."""
+    for i, df in enumerate(dfs):
+        p = os.path.join(out, f"f{i}.parquet")
+        df.coalesce(1).write.mode("overwrite").parquet(p + ".dir")
+        part = [f for f in os.listdir(p + ".dir") if f.endswith(".parquet")][0]
+        os.replace(os.path.join(p + ".dir", part), p)
+        t = time.time() - 100 + i * 10
+        os.utime(p, (t, t))
+
+
 def _chunked_replay(spark, tmpdir: str, name: str, ts_col: str, sentinel_row=None) -> str:
     """Write a fixture table as 2 ts-ordered parquet chunks (+ an
     optional sentinel chunk) with ascending mtimes; returns the dir."""
@@ -47,22 +60,7 @@ def _chunked_replay(spark, tmpdir: str, name: str, ts_col: str, sentinel_row=Non
     out = os.path.join(tmpdir, name)
     first = df.limit(half)
     second = df.subtract(first) if name != "events" else df.exceptAll(first)
-    paths = []
-    for i, chunk in enumerate((first, second)):
-        p = os.path.join(out, f"chunk{i}.parquet")
-        chunk.coalesce(1).write.mode("overwrite").parquet(p + ".dir")
-        part = [f for f in os.listdir(p + ".dir") if f.endswith(".parquet")][0]
-        os.replace(os.path.join(p + ".dir", part), p)
-        paths.append(p)
-    if sentinel_row is not None:
-        p = os.path.join(out, "zz_sentinel.parquet")
-        sentinel_row.coalesce(1).write.mode("overwrite").parquet(p + ".dir")
-        part = [f for f in os.listdir(p + ".dir") if f.endswith(".parquet")][0]
-        os.replace(os.path.join(p + ".dir", part), p)
-        paths.append(p)
-    for i, p in enumerate(paths):
-        t = time.time() - 100 + i * 10
-        os.utime(p, (t, t))
+    _write_stream_files(out, [first, second] + ([sentinel_row] if sentinel_row is not None else []))
     return out
 
 
@@ -155,6 +153,83 @@ def test_user_jump_stream_matches_batch(spark, events_replay, tmp_path):
     )
     batch = get_plans()["user_jump_detail"].build(spark, SF)
     assert _rows(rolled) == _rows(batch)
+
+
+def test_user_jump_stream_gap_boundaries(spark, tmp_path):
+    """T3 boundary pin: a bounce is an entry with no successor MORE than
+    the gap (30 min) away — the ``user_jump_detail`` rule. Crafted
+    micro-batches cover each edge: a successor exactly the gap later
+    (same batch: user 1; next batch: user 3) is not a bounce; one
+    microsecond more (same batch: user 2; next batch: user 5) makes
+    both events bounces; equal timestamps (user 4) are one visit; a
+    lone event (user 6) only closes when the watermark passes it; and
+    a three-event chain (user 7) is not a bounce while its later,
+    separate entry is."""
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1)
+    m = lambda minutes, us=0: base + dt.timedelta(minutes=minutes, microseconds=us)  # noqa: E731
+    rows_by_file = [
+        [(1, m(0)), (1, m(30)), (2, m(0)), (2, m(30, 1)), (3, m(10)),
+         (4, m(5)), (4, m(5)), (5, m(10)), (6, m(1))],
+        [(3, m(40)), (5, m(40, 1)), (7, m(35)), (7, m(60)), (7, m(85))],
+        [(7, m(130))],
+        [(SENTINEL_UID, base + dt.timedelta(days=365))],
+    ]
+    eid = iter(range(1, 100))
+    files = [
+        [(next(eid), ts, uid, "view", 1.0, None) for uid, ts in rows]
+        for rows in rows_by_file
+    ]
+    src = str(tmp_path / "jump_edges")
+    schema = load(spark, SF, "events").schema
+    _write_stream_files(src, [spark.createDataFrame(rows, schema) for rows in files])
+    stream = file_stream(spark, src + "/*.parquet", schema, max_files_per_trigger=1)
+    out = _run_stream(user_jump_stream(stream), tmp_path, "jump_edges")
+    got = sorted(
+        (r.user_id, r.bounce_ts)
+        for r in out.filter(F.col("user_id") != SENTINEL_UID).collect()
+    )
+    assert got == [
+        (2, m(0)), (2, m(30, 1)),
+        (5, m(10)), (5, m(40, 1)),
+        (6, m(1)),
+        (7, m(130)),
+    ]
+
+    # the batch lead/lag rule on the same rows agrees
+    sf = tmp_path / "jump_edges_sf"
+    os.makedirs(sf)
+    spark.createDataFrame(
+        [r for rows in files[:-1] for r in rows], schema
+    ).write.parquet(str(sf / "events.parquet"))
+    batch = get_plans()["user_jump_detail"].build(spark, str(sf)).collect()
+    assert [(r.dt, r.bounce_ct) for r in batch] == [("2024-01-01", len(got))]
+
+
+def test_user_jump_stream_plan_has_no_python_operator(spark, tmp_path):
+    """Plan-shape pin: the bounce stream is one session-window
+    state-store aggregate, with no per-key Python UDF in its plan."""
+    import datetime as dt
+
+    src = str(tmp_path / "jump_plan")
+    schema = load(spark, SF, "events").schema
+    row = (1, dt.datetime(2024, 1, 1), 1, "view", 1.0, None)
+    _write_stream_files(src, [spark.createDataFrame([row], schema)])
+    q = (
+        user_jump_stream(file_stream(spark, src + "/*.parquet", schema))
+        .writeStream.format("memory")
+        .queryName("jump_plan")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt_jump_plan"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    plan = q._jsq.explainInternal(False)
+    assert "SessionWindowStateStoreSave" in plan, plan
+    for node in ("FlatMapGroupsInPandasWithState", "ArrowEvalPython", "InPandas"):
+        assert node not in plan, plan
 
 
 @pytest.mark.slow

@@ -113,7 +113,7 @@ def py_dhash_fake(text: str) -> int | None:
     """Deterministic fallback hash for payloads that aren't decodable
     images: treat the UTF-8 text's CODE POINTS as a 1-D scanline and
     point-sample the 72 grid cells at ``idx = (i * n) // 72``. Chosen
-    to be expressible in DuckDB (``plans/images._dhash_fake_sql``)
+    to be expressible in DuckDB (``plans/images._fp_cte``)
     so the registered plans stay value-hash-checked on the fixture.
     None for empty text (no hashable content — the row drops, like
     docs shorter than a shingle in the text family)."""

@@ -599,7 +599,7 @@ def hamming_band_pairs(
     fingerprint column: ``(a, b, hamming)`` for every id pair whose
     fingerprints differ in at most ``max_hamming`` bits. Shared by
     the text SimHash family (:func:`simhash_near_dup_pairs`) and the
-    image/audio/video families (``plans/images`` etc.) — any 8..64-bit
+    image/audio/video families (``plans/media_dedup``) — any 8..64-bit
     LongType fingerprint gets the same 100%-recall guarantee: with
     ``max_hamming + 2`` blocks, two fingerprints within budget keep
     >= 2 blocks intact and therefore AGREE on >= 1 composite

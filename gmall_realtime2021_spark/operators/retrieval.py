@@ -33,7 +33,6 @@ __all__ = [
     "BM25_B",
     "BM25_K1",
     "bm25_micro",
-    "doc_dl",
     "doc_dl_expr",
     "doc_postings",
     "query_terms",
@@ -102,25 +101,13 @@ def query_terms(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     return base.select("q_id", F.explode(F.array_distinct("toks")).alias("tok"))
 
 
-def doc_dl(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """``(dl,)`` — one row per indexable document with its token
-    length, from the same tokenize pass and the same dl>0 gate as
-    :func:`doc_postings`. NOTE: this is a *separate* scan→Arrow
-    subtree from ``doc_postings(docs)`` (column pruning defeats
-    exchange reuse between the two), so a batch plan using both still
-    tokenizes the corpus twice — prefer :func:`doc_dl_expr`, which
-    computes the identical frame with zero Python boundary. Kept as
-    the Arrow-twin spec the property tests pin the expression form
-    against."""
-    return _tokenized(docs, id_col, text_col).select(F.col("tt.dl").alias("dl"))
-
-
 def doc_dl_expr(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """``(dl,)`` — value twin of :func:`doc_dl` computed entirely with
-    JVM expressions (r14, guide §4.1: the stats leg needs only the
-    token COUNT, never the tokens, so the Arrow tokenize pass is pure
-    overhead — this was the one remaining per-query corpus tokenize in
-    the BM25 plans).
+    """``(dl,)`` — one row per indexable document with its token
+    length, under the same dl>0 gate as :func:`doc_postings`, computed
+    entirely with JVM expressions (r14, guide §4.1: the stats leg
+    needs only the token COUNT, never the tokens, so the Arrow
+    tokenize pass is pure overhead — this was the one remaining
+    per-query corpus tokenize in the BM25 plans).
 
     ``dl`` = Σ over token units of the unit's token count: a
     lowercase-alnum run is one token; a CJK run of L>1 ideographs
@@ -130,7 +117,8 @@ def doc_dl_expr(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     ``regexp_extract_all`` + an O(#units) fold per doc — no token
     arrays materialized, no ArrowEvalPython node. NULL text folds to
     NULL and empty text to 0; both fail the ``dl > 0`` gate exactly as
-    :func:`doc_dl` drops them, so the document set is identical."""
+    the tokenize pass drops them, so the document set is identical
+    (pinned against the Arrow token count in tests/test_properties.py)."""
     from gmall_realtime2021_spark.functions.text import CJK_END, CJK_START, TOKEN_UNIT_RE
 
     units = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_UNIT_RE), 0)
@@ -175,10 +163,10 @@ def bm25_micro(postings: DataFrame, qterms: DataFrame, per_doc_dl: DataFrame | N
     hold exactly one ``dl`` row per document of the SAME corpus the
     postings were built from, under the same ``dl > 0`` gate — a
     mismatched frame (unfiltered docs, another corpus slice) silently
-    skews N/avgdl with no runtime error. The shipped producers
-    (:func:`doc_dl_expr` / :func:`doc_dl`) guarantee this by
-    construction from the tokenizer's counting rules (property-pinned
-    in tests/test_properties.py); custom callers should assert count
+    skews N/avgdl with no runtime error. The shipped producer
+    (:func:`doc_dl_expr`) guarantees this by construction from the
+    tokenizer's counting rules (property-pinned in
+    tests/test_properties.py); custom callers should assert count
     parity against ``postings.select("c_id").distinct()``.
     """
     from pyspark.sql import Window

@@ -461,15 +461,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def _bucket(vec_col: str) -> F.Column:
-    """Sign-bit bucket key over the fixed hyperplanes."""
-    bits = [
-        F.when(dot(F.col(vec_col), F.array(*[F.lit(v) for v in plane])) > 0, "1").otherwise("0")
-        for plane in LSH_PLANES
-    ]
-    return F.concat(*bits)
-
-
 def _bit_cols(vec_col: str) -> list[F.Column]:
     """The 8 sign bits as individual '0'/'1' columns — computed once
     (one Arrow matrix-dot pass), composed into bucket keys after."""

@@ -4,11 +4,13 @@ audio payload (``multimodal/afp.py``), paired through the shared
 pigeonhole byte-band Hamming join
 (``operators/dedup.hamming_band_pairs``). Reference analog: the same
 media payload rows the DWD layer routes (``BaseLogApp.java:235-247``).
+The pairs, cluster and incremental plans are the shared
+``plans/media_dedup.py`` contracts over the :data:`AUDIO` spec.
 
 Oracle story mirrors the image family: the parquet fixture's payloads
 are UTF-8 stand-ins, so every fixture row hashes through the
 deterministic FAKE path (code-point envelope) — fully
-DuckDB-expressible, making both plans value-hash oracle plans — while
+DuckDB-expressible, making all four plans value-hash oracle plans — while
 the REAL path (actual PCM WAVs through the same kernel) is pinned by
 transformed-copy recall tests in tests/test_multimodal.py.
 """
@@ -19,17 +21,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gmall_realtime2021_spark.multimodal import synthesize_media
 from gmall_realtime2021_spark.multimodal.afp import AFP_WINDOWS, audio_afp
-from gmall_realtime2021_spark.operators.dedup import (
-    hamming_band_pairs,
-    register_cache,
+from gmall_realtime2021_spark.plans.media_dedup import (
+    MediaSpec,
+    clusters_oracle,
+    incremental_oracle,
+    near_dup_clusters,
+    near_dup_incremental,
+    near_dup_pairs,
+    pairs_oracle,
 )
-from gmall_realtime2021_spark.plans.images import IMG_MAX_HAMMING, TWIN_OFFSET
 from gmall_realtime2021_spark.plans.registry import register
 from gmall_realtime2021_spark.tables import fan_out, load
-
-#: Same Hamming budget as the image family (8 byte-bands over 64
-#: bits give 100% recall to hamming 7; 6 leaves slack).
-AFP_MAX_HAMMING = IMG_MAX_HAMMING
 
 
 def _win_mean_sql(i: int) -> str:
@@ -82,18 +84,6 @@ _AUD_BASE = """SELECT doc_id AS media_id,
         FROM documents
         WHERE doc_id % 3 = 1 AND text IS NOT NULL"""
 
-#: Pairs-plan domain: audio rows PLUS one deterministic same-length
-#: perturbed twin per 20th audio doc (single mid-text character
-#: overwrite — the edit lands in exactly one envelope window, so
-#: hamming <= 2 by construction for >= AFP_WINDOWS-char texts).
-_AUD_WITH_TWINS = f"""{_AUD_BASE}
-        UNION ALL
-        SELECT doc_id + {TWIN_OFFSET} AS media_id,
-               list_transform(regexp_extract_all(substr(text, 1, 36) || '~' || substr(text, 38), '(?s).'), c -> ascii(c)) AS env
-        FROM documents
-        WHERE doc_id % 60 = 1 AND text IS NOT NULL AND length(text) >= {AFP_WINDOWS}"""
-
-
 @register(
     "audio_fingerprint",
     oracle=f"""
@@ -118,271 +108,63 @@ def audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audio_afp(media)
 
 
+#: The near-dup plans' audio family: the code-point envelope hash. A
+#: twin's single-character edit lands in exactly one envelope window
+#: (texts of at least AFP_WINDOWS characters). Incoming side:
+#: ``media_id % 10 = 0`` — twin sources have doc_id % 10 = 1, so
+#: every twin lands at % 10 = 0 while its original sits in the index.
+AUDIO = MediaSpec(
+    kernel=audio_afp,
+    fp_col="afp",
+    fp_cte=_afp_fp_cte,
+    fp_rel="fp",
+    base_sql=_AUD_BASE,
+    twin_residue=1,
+    twin_min_len=AFP_WINDOWS,
+    twin_select="list_transform(regexp_extract_all({}, '(?s).'), c -> ascii(c)) AS env",
+    incoming_sql="% 10 = 0",
+    index_sql="% 10 <> 0",
+    incoming=lambda m: m % 10 == 0,
+)
+
+
 @register(
     "audio_fingerprint_pairs",
-    oracle=f"""
-    WITH {_afp_fp_cte(_AUD_WITH_TWINS)},
-    uniqf AS (SELECT DISTINCT afp AS f FROM fp),
-    buck AS (
-        SELECT f, CAST(j AS VARCHAR) || ':' || CAST((f >> (8 * j)) & 255 AS VARCHAR) AS band
-        FROM uniqf, unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS u(j)
-    ),
-    fpp AS (
-        SELECT fa, fb, hamming FROM (
-            SELECT DISTINCT x.f AS fa, y.f AS fb,
-                   CAST(bit_count(xor(x.f, y.f)) AS BIGINT) AS hamming
-            FROM buck x JOIN buck y USING (band)
-            WHERE x.f < y.f
-        ) WHERE hamming <= {AFP_MAX_HAMMING}
-    ),
-    intra AS (
-        SELECT x.media_id AS a, y.media_id AS b, CAST(0 AS BIGINT) AS hamming
-        FROM fp x JOIN fp y ON x.afp = y.afp AND x.media_id < y.media_id
-    ),
-    crossfp AS (
-        SELECT least(ia.media_id, ib.media_id) AS a,
-               greatest(ia.media_id, ib.media_id) AS b,
-               fpp.hamming
-        FROM fpp
-        JOIN fp ia ON ia.afp = fpp.fa
-        JOIN fp ib ON ib.afp = fpp.fb
-    )
-    SELECT a, b, hamming FROM intra
-    UNION ALL
-    SELECT a, b, hamming FROM crossfp
-    """,
+    oracle=pairs_oracle(AUDIO),
     covers=(),
     doc="near-duplicate audio pairs: envelope dHash + pigeonhole byte-band Hamming join",
 )
 def audio_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate AUDIO pairs at the Hamming budget through the
-    shared fingerprint-grain band join — a re-encoded,
-    gain-normalized, or slightly edited copy of a clip lands within
-    budget; unrelated clips don't (pinned on real WAVs in
-    tests/test_multimodal.py). Same deterministic perturbed-twin
-    probe as ``image_phash_pairs`` so the recall the plan exists for
-    is demonstrated non-vacuously on every fixture.
-
-    Scale: identical economics to the image family — candidate join
-    at distinct-fingerprint grain, payload bytes gone after the one
-    linear hashing pass, fingerprint frame persisted because the
-    pairing reads it on three plan sides.
-    """
-    from pyspark.sql import functions as F
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(
-        (F.col("doc_id") % 60 == 1)
-        & F.col("text").isNotNull()
-        & (F.length("text") >= AFP_WINDOWS)
-    ).select(
-        (F.col("doc_id") + TWIN_OFFSET).alias("doc_id"),
-        F.overlay("text", F.lit("~"), F.lit(37), F.lit(1)).alias("text"),
-    )
-    media = synthesize_media(fan_out(docs.unionByName(twins)))
-    fp = register_cache(audio_afp(media))
-    return hamming_band_pairs(
-        fp, max_hamming=AFP_MAX_HAMMING, id_col="media_id", fp_col="afp", bits=64
-    )
+    """Near-duplicate AUDIO pairs at the Hamming budget
+    (``media_dedup.near_dup_pairs`` over envelope hashes) — a
+    re-encoded, gain-normalized, or slightly edited copy of a clip
+    lands within budget; unrelated clips don't (pinned on real WAVs
+    in tests/test_multimodal.py)."""
+    return near_dup_pairs(spark, sf_dir, AUDIO)
 
 
 @register(
     "audio_dedup_clusters",
-    # the pairs oracle verbatim as the edge source, wrapped in the
-    # same recursive-CTE transitive closure the image/video cluster
-    # plans use — both engines cluster exactly the pairs they agreed on
-    oracle=f"""
-    WITH RECURSIVE {_afp_fp_cte(_AUD_WITH_TWINS)},
-    uniqf AS (SELECT DISTINCT afp AS f FROM fp),
-    buck AS (
-        SELECT f, CAST(j AS VARCHAR) || ':' || CAST((f >> (8 * j)) & 255 AS VARCHAR) AS band
-        FROM uniqf, unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS u(j)
-    ),
-    fpp AS (
-        SELECT fa, fb FROM (
-            SELECT DISTINCT x.f AS fa, y.f AS fb,
-                   CAST(bit_count(xor(x.f, y.f)) AS BIGINT) AS hamming
-            FROM buck x JOIN buck y USING (band)
-            WHERE x.f < y.f
-        ) WHERE hamming <= {AFP_MAX_HAMMING}
-    ),
-    pairs AS (
-        SELECT x.media_id AS a, y.media_id AS b
-        FROM fp x JOIN fp y ON x.afp = y.afp AND x.media_id < y.media_id
-        UNION ALL
-        SELECT least(ia.media_id, ib.media_id) AS a,
-               greatest(ia.media_id, ib.media_id) AS b
-        FROM fpp
-        JOIN fp ia ON ia.afp = fpp.fa
-        JOIN fp ib ON ib.afp = fpp.fb
-    ),
-    edges AS (
-        SELECT a AS u, b AS v FROM pairs
-        UNION ALL
-        SELECT b AS u, a AS v FROM pairs
-    ),
-    reach(u, v) AS (
-        SELECT u, v FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    comp AS (
-        SELECT u AS media_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u
-    )
-    SELECT f.media_id, CAST(coalesce(c.cluster_id, f.media_id) AS BIGINT) AS cluster_id
-    FROM fp f LEFT JOIN comp c ON c.media_id = f.media_id
-    """,
+    oracle=clusters_oracle(AUDIO),
     covers=(),
     doc="audio near-dup clusters: connected components over envelope-hash Hamming pairs",
 )
 def audio_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The audio analog of ``image_dedup_clusters`` — near-dup pairs
-    folded into an actionable verdict: every fingerprinted clip gets
-    ``cluster_id`` = the minimum media id reachable through
-    Hamming-band near-dup edges (its own id when unique), so
-    keep-one-per-cluster is ``media_id == cluster_id``. Same fixture
-    domain as ``audio_fingerprint_pairs`` (perturbed twins included),
-    same star-contraction engine as the text/image/video families
-    (``operators/dedup.duplicate_clusters``).
-
-    Scale: pairing is fingerprint-grain (see
-    ``audio_fingerprint_pairs``); clustering adds O(log n)
-    label-table rounds over near-dup-pair-sized edges.
-    """
-    from pyspark.sql import functions as F
-
-    from gmall_realtime2021_spark.operators.dedup import duplicate_clusters
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(
-        (F.col("doc_id") % 60 == 1)
-        & F.col("text").isNotNull()
-        & (F.length("text") >= AFP_WINDOWS)
-    ).select(
-        (F.col("doc_id") + TWIN_OFFSET).alias("doc_id"),
-        F.overlay("text", F.lit("~"), F.lit(37), F.lit(1)).alias("text"),
-    )
-    media = synthesize_media(fan_out(docs.unionByName(twins)))
-    fp = register_cache(audio_afp(media).select("media_id", "afp"))
-    pairs = hamming_band_pairs(
-        fp, max_hamming=AFP_MAX_HAMMING, id_col="media_id", fp_col="afp", bits=64
-    )
-    return duplicate_clusters(
-        fp.select("media_id"), pairs.select("a", "b"), id_col="media_id"
-    )
+    """The audio analog of ``image_dedup_clusters``
+    (``media_dedup.near_dup_clusters``): one ``cluster_id`` per
+    fingerprinted clip over the ``audio_fingerprint_pairs`` domain."""
+    return near_dup_clusters(spark, sf_dir, AUDIO)
 
 
 @register(
     "audio_dedup_incremental",
-    # incoming side: media_id % 10 = 0 — twins land there by
-    # construction (twin sources have doc_id % 60 = 1 so doc_id % 10
-    # = 1, and TWIN_OFFSET % 10 = 9 puts every twin at % 10 = 0)
-    # while their originals (% 10 = 1) sit in the standing index
-    oracle=f"""
-    WITH {_afp_fp_cte(_AUD_WITH_TWINS)},
-    inc AS (SELECT media_id, afp FROM fp WHERE media_id % 10 = 0),
-    ex AS (SELECT media_id, afp FROM fp WHERE media_id % 10 <> 0),
-    bi AS (
-        SELECT f, CAST(j AS VARCHAR) || ':' || CAST((f >> (8 * j)) & 255 AS VARCHAR) AS band
-        FROM (SELECT DISTINCT afp AS f FROM inc), unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS u(j)
-    ),
-    be AS (
-        SELECT f, CAST(j AS VARCHAR) || ':' || CAST((f >> (8 * j)) & 255 AS VARCHAR) AS band
-        FROM (SELECT DISTINCT afp AS f FROM ex), unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS u(j)
-    ),
-    fpp AS (
-        SELECT fq, fe, hamming FROM (
-            SELECT DISTINCT x.f AS fq, y.f AS fe,
-                   CAST(bit_count(xor(x.f, y.f)) AS BIGINT) AS hamming
-            FROM bi x JOIN be y USING (band)
-        ) WHERE hamming <= {AFP_MAX_HAMMING}
-    ),
-    matched AS (
-        SELECT i.media_id AS inc_id, e.media_id AS ex_id, fpp.hamming
-        FROM fpp
-        JOIN inc i ON i.afp = fpp.fq
-        JOIN ex e ON e.afp = fpp.fe
-    ),
-    ranked AS (
-        SELECT inc_id, ex_id, hamming,
-               row_number() OVER (PARTITION BY inc_id ORDER BY hamming, ex_id) AS rn,
-               count(*) OVER (PARTITION BY inc_id) AS match_ct
-        FROM matched
-    ),
-    best AS (
-        SELECT inc_id, match_ct, ex_id AS best_match_id, hamming AS best_hamming
-        FROM ranked WHERE rn = 1
-    )
-    SELECT i.media_id,
-           CASE WHEN b.inc_id IS NULL THEN 0 ELSE 1 END AS is_dup,
-           coalesce(b.match_ct, 0) AS match_ct,
-           coalesce(b.best_match_id, -1) AS best_match_id,
-           coalesce(b.best_hamming, -1) AS best_hamming
-    FROM inc i LEFT JOIN best b ON b.inc_id = i.media_id
-    """,
+    oracle=incremental_oracle(AUDIO),
     covers=(),
     doc="incremental-ingest audio dedup: incoming batch probed against the standing fingerprint index",
 )
 def audio_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily-delivery dedup for audio — the audio analog of
-    ``image_dedup_incremental``: clips with ``media_id % 10 == 0``
-    play the incoming batch (which by construction includes every
-    perturbed twin: TWIN_OFFSET % 10 = 9 and twin sources have
-    doc_id % 10 = 1, so each twin probes against its indexed
-    original), the rest the standing fingerprint index (append-only
-    at rest, the ``phash_index_sink`` maintenance story — envelope
-    hashes are pure per-row functions of immutable payloads). One row
-    per incoming clip: ``is_dup``, qualifying ``match_ct``, and the
-    best match (min hamming, ties to the smallest index id; −1
-    sentinels when none).
-
-    Scale: the probe is the two-sided pigeonhole band join
-    (``operators/dedup.hamming_band_probe``) at distinct-fingerprint
-    grain — the incoming side is delivery-sized, the index side never
-    re-pairs against itself, and only candidate ids cross the
-    exchanges.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from gmall_realtime2021_spark.operators.dedup import hamming_band_probe
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(
-        (F.col("doc_id") % 60 == 1)
-        & F.col("text").isNotNull()
-        & (F.length("text") >= AFP_WINDOWS)
-    ).select(
-        (F.col("doc_id") + TWIN_OFFSET).alias("doc_id"),
-        F.overlay("text", F.lit("~"), F.lit(37), F.lit(1)).alias("text"),
-    )
-    media = synthesize_media(fan_out(docs.unionByName(twins)))
-    fp = register_cache(audio_afp(media).select("media_id", "afp"))
-    inc = fp.filter(F.col("media_id") % 10 == 0)
-    ex = fp.filter(F.col("media_id") % 10 != 0)
-    matched = hamming_band_probe(
-        ex, inc, max_hamming=AFP_MAX_HAMMING, id_col="media_id", fp_col="afp", bits=64
-    )
-    w = Window.partitionBy("inc").orderBy(F.asc("hamming"), F.asc("ex"))
-    best = (
-        matched.withColumn("rn", F.row_number().over(w))
-        .withColumn("match_ct", F.count("*").over(Window.partitionBy("inc")))
-        .filter(F.col("rn") == 1)
-        .select(
-            "inc",
-            "match_ct",
-            F.col("ex").alias("best_match_id"),
-            F.col("hamming").alias("best_hamming"),
-        )
-    )
-    return (
-        inc.select(F.col("media_id").alias("inc"))
-        .join(best, "inc", "left")
-        .select(
-            F.col("inc").alias("media_id"),
-            F.when(F.col("match_ct").isNull(), F.lit(0)).otherwise(F.lit(1)).alias("is_dup"),
-            F.coalesce("match_ct", F.lit(0).cast("long")).alias("match_ct"),
-            F.coalesce("best_match_id", F.lit(-1).cast("long")).alias("best_match_id"),
-            F.coalesce("best_hamming", F.lit(-1).cast("long")).alias("best_hamming"),
-        )
-    )
+    """The audio analog of ``image_dedup_incremental``
+    (``media_dedup.near_dup_incremental``): clips with
+    ``media_id % 10 == 0`` are the incoming batch, the rest the
+    standing envelope-hash index."""
+    return near_dup_incremental(spark, sf_dir, AUDIO)

@@ -22,9 +22,9 @@ from gmall_realtime2021_spark.plans.registry import register
 from gmall_realtime2021_spark.tables import fan_out, load
 
 
-@register(
-    "order_wide",
-    oracle="""
+#: The order_wide result contract, shared with ``bucketed_order_wide``
+#: (the layout is value-invisible).
+ORDER_WIDE_ORACLE = """
     SELECT o_orderkey AS order_id,
            o_custkey AS user_id,
            o_orderstatus AS order_status,
@@ -39,7 +39,12 @@ from gmall_realtime2021_spark.tables import fan_out, load
     FROM orders JOIN lineitem
       ON o_orderkey = l_orderkey
      AND l_shipdate BETWEEN o_orderdate AND o_orderdate + INTERVAL 30 DAY
-    """,
+    """
+
+
+@register(
+    "order_wide",
+    oracle=ORDER_WIDE_ORACLE,
     covers=("J1", "P2", "P9", "W3", "J6"),
 )
 def order_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,9 +90,9 @@ def order_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "payment_wide",
-    oracle="""
+#: The payment_wide result contract, shared with
+#: ``bucketed_payment_wide``.
+PAYMENT_WIDE_ORACLE = """
     SELECT p.user_id AS user_id,
            count(*) AS matched_ct,
            CAST(sum(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS matched_value
@@ -97,7 +102,12 @@ def order_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND e.ts BETWEEN p.ts - INTERVAL 30 MINUTE AND p.ts
      AND e.event_id <> p.event_id
     GROUP BY 1
-    """,
+    """
+
+
+@register(
+    "payment_wide",
+    oracle=PAYMENT_WIDE_ORACLE,
     covers=("J2", "P9", "W3"),
 )
 def payment_wide(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,12 +6,14 @@ routes per row, ``BaseLogApp.java:235-247``): a 64-bit dHash per
 image (``multimodal/phash.py``), then the SAME pigeonhole byte-band
 pairing the SimHash family uses (``operators/dedup.hamming_band_pairs``)
 — near-duplicate images pair with 100% recall at the Hamming budget,
-no all-pairs join anywhere.
+no all-pairs join anywhere. The pairs, cluster and incremental plans
+are the shared ``plans/media_dedup.py`` contracts over the
+:data:`IMAGE` spec.
 
 Oracle story: the parquet fixture's payloads are UTF-8 stand-ins, so
 every fixture row hashes through the deterministic FAKE path — which
 was designed to be DuckDB-expressible (code-point grid over the
-text). Both plans here are therefore full value-hash oracle plans,
+text). All four plans here are therefore full value-hash oracle plans,
 while the REAL path (actual baseline PNGs through the same kernel)
 is pinned by transformed-copy recall tests in
 tests/test_multimodal.py — same split as the PNG decode itself
@@ -22,23 +24,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gmall_realtime2021_spark.multimodal import synthesize_media
 from gmall_realtime2021_spark.multimodal.phash import (
     DHASH_COLS,
     DHASH_ROWS,
     image_dhash,
 )
-from gmall_realtime2021_spark.operators.dedup import (
-    hamming_band_pairs,
-    register_cache,
+from gmall_realtime2021_spark.plans.media_dedup import (
+    MediaSpec,
+    clusters_oracle,
+    incremental_oracle,
+    near_dup_clusters,
+    near_dup_incremental,
+    near_dup_pairs,
+    pairs_oracle,
 )
-from gmall_realtime2021_spark.multimodal import synthesize_media
 from gmall_realtime2021_spark.plans.registry import register
 from gmall_realtime2021_spark.tables import fan_out, load
-
-#: Hamming budget for "same image, small edit": 8 byte-bands over the
-#: 64-bit dHash guarantee 100% recall up to hamming 7 (pigeonhole);
-#: 6 keeps one band of slack and matches common dHash practice.
-IMG_MAX_HAMMING = 6
 
 
 def _dhash_pack_sql() -> str:
@@ -61,14 +63,9 @@ def _dhash_pack_sql() -> str:
 
 _CELLS = DHASH_ROWS * DHASH_COLS
 
-#: Id offset for the pairs plan's injected perturbed twins — divisible
-#: by 3 so ``synthesize_media``'s kind cycle keeps a twin an image,
-#: and far above any fixture doc_id.
-TWIN_OFFSET = 9_999_999
-
 
 def _fp_cte(img_cte: str) -> str:
-    """Hash CTE chain shared by both plans: the given ``img`` CTE
+    """Hash CTE chain shared by the image plans: the given ``img`` CTE
     (rows of ``media_id, cs`` char lists) through the code-point grid
     (``phash.py_dhash_fake``) and the shared bit packing."""
     return f"""
@@ -119,290 +116,64 @@ def image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return image_dhash(media)
 
 
-#: The pairs plan's fixture domain: the image rows PLUS one perturbed
-#: twin per 20th image (single character overwritten mid-text) — the
-#: transformed-copy probe that makes the pairing demonstrably
-#: non-vacuous on every fixture. A twin's text has the SAME length as
-#: its original, so the 72 grid cells sample the same positions and
-#: at most one cell (n >= 72 chars) covers the edited position —
-#: hamming <= 2 by construction, well inside the budget.
-_IMG_WITH_TWINS = f"""{_IMG_BASE}
-        UNION ALL
-        SELECT doc_id + {TWIN_OFFSET} AS media_id,
-               regexp_extract_all(substr(text, 1, 36) || '~' || substr(text, 38), '(?s).') AS cs
-        FROM documents
-        WHERE doc_id % 60 = 0 AND text IS NOT NULL AND length(text) >= 72"""
+#: The near-dup plans' image family: dHash over the code-point grid.
+#: A twin's single-character edit moves at most one of the 72 grid
+#: cells (texts of at least 72 characters). Incoming side:
+#: ``media_id % 10 >= 8`` — twin sources have doc_id % 10 = 0, so
+#: every twin lands at % 10 = 9 while its original sits in the index.
+IMAGE = MediaSpec(
+    kernel=image_dhash,
+    fp_col="dhash",
+    fp_cte=_fp_cte,
+    fp_rel="fp",
+    base_sql=_IMG_BASE,
+    twin_residue=0,
+    twin_min_len=_CELLS,
+    twin_select="regexp_extract_all({}, '(?s).') AS cs",
+    incoming_sql="% 10 >= 8",
+    index_sql="% 10 < 8",
+    incoming=lambda m: m % 10 >= 8,
+)
 
 
 @register(
     "image_phash_pairs",
-    oracle=f"""
-    WITH {_fp_cte(_IMG_WITH_TWINS)},
-    uniqf AS (SELECT DISTINCT dhash AS f FROM fp),
-    buck AS (
-        SELECT f, CAST(j AS VARCHAR) || ':' || CAST((f >> (8 * j)) & 255 AS VARCHAR) AS band
-        FROM uniqf, unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS u(j)
-    ),
-    fpp AS (
-        SELECT fa, fb, hamming FROM (
-            SELECT DISTINCT x.f AS fa, y.f AS fb,
-                   CAST(bit_count(xor(x.f, y.f)) AS BIGINT) AS hamming
-            FROM buck x JOIN buck y USING (band)
-            WHERE x.f < y.f
-        ) WHERE hamming <= {IMG_MAX_HAMMING}
-    ),
-    intra AS (
-        SELECT x.media_id AS a, y.media_id AS b, CAST(0 AS BIGINT) AS hamming
-        FROM fp x JOIN fp y ON x.dhash = y.dhash AND x.media_id < y.media_id
-    ),
-    crossfp AS (
-        SELECT least(ia.media_id, ib.media_id) AS a,
-               greatest(ia.media_id, ib.media_id) AS b,
-               fpp.hamming
-        FROM fpp
-        JOIN fp ia ON ia.dhash = fpp.fa
-        JOIN fp ib ON ib.dhash = fpp.fb
-    )
-    SELECT a, b, hamming FROM intra
-    UNION ALL
-    SELECT a, b, hamming FROM crossfp
-    """,
+    oracle=pairs_oracle(IMAGE),
     covers=(),
     doc="near-duplicate image pairs: dHash + pigeonhole byte-band Hamming join",
 )
 def image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate IMAGE pairs at the Hamming budget: dHash
-    fingerprints through the shared pigeonhole byte-band join
-    (``operators/dedup.hamming_band_pairs`` — the exact machinery of
-    ``dedup_simhash_pairs``, at 64 bits). A re-encoded, slightly
-    edited, or noise-perturbed copy of an image lands within the
-    budget; unrelated images don't (recall/separation pinned on real
-    PNGs in tests/test_multimodal.py).
-
-    Transformed-copy probe: the fixture corpus has no near-duplicate
-    images of its own, so the plan unions in one deterministic
-    perturbed twin per 20th image (same-length single-character edit
-    → hamming <= 2 by construction) — every fixture run demonstrates
-    the recall the plan exists for, in both engines, the way
-    ``dedup_incremental`` carries its deterministic batch split.
-
-    Scale: the candidate join runs at DISTINCT-FINGERPRINT grain
-    (bounded by hash cardinality, never image count); payload bytes
-    are gone after the one linear hashing pass. The fingerprint frame
-    is persisted via ``register_cache`` because the pairing reads it
-    on three plan sides.
-    """
-    from pyspark.sql import functions as F
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(
-        (F.col("doc_id") % 60 == 0)
-        & F.col("text").isNotNull()
-        & (F.length("text") >= 72)
-    ).select(
-        (F.col("doc_id") + TWIN_OFFSET).alias("doc_id"),
-        F.overlay("text", F.lit("~"), F.lit(37), F.lit(1)).alias("text"),
-    )
-    media = synthesize_media(fan_out(docs.unionByName(twins)))
-    fp = register_cache(image_dhash(media))
-    return hamming_band_pairs(
-        fp, max_hamming=IMG_MAX_HAMMING, id_col="media_id", fp_col="dhash", bits=64
-    )
+    """Near-duplicate IMAGE pairs at the Hamming budget
+    (``media_dedup.near_dup_pairs`` over dHash fingerprints). A
+    re-encoded, slightly edited, or noise-perturbed copy of an image
+    lands within the budget; unrelated images don't (recall and
+    separation pinned on real PNGs in tests/test_multimodal.py)."""
+    return near_dup_pairs(spark, sf_dir, IMAGE)
 
 
 @register(
     "image_dedup_clusters",
-    # the pairs oracle verbatim as the edge source, wrapped in the
-    # same recursive-CTE transitive closure dedup_clusters uses —
-    # both engines cluster exactly the pairs they agreed on
-    oracle=f"""
-    WITH RECURSIVE {_fp_cte(_IMG_WITH_TWINS)},
-    uniqf AS (SELECT DISTINCT dhash AS f FROM fp),
-    buck AS (
-        SELECT f, CAST(j AS VARCHAR) || ':' || CAST((f >> (8 * j)) & 255 AS VARCHAR) AS band
-        FROM uniqf, unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS u(j)
-    ),
-    fpp AS (
-        SELECT fa, fb FROM (
-            SELECT DISTINCT x.f AS fa, y.f AS fb,
-                   CAST(bit_count(xor(x.f, y.f)) AS BIGINT) AS hamming
-            FROM buck x JOIN buck y USING (band)
-            WHERE x.f < y.f
-        ) WHERE hamming <= {IMG_MAX_HAMMING}
-    ),
-    pairs AS (
-        SELECT x.media_id AS a, y.media_id AS b
-        FROM fp x JOIN fp y ON x.dhash = y.dhash AND x.media_id < y.media_id
-        UNION ALL
-        SELECT least(ia.media_id, ib.media_id) AS a,
-               greatest(ia.media_id, ib.media_id) AS b
-        FROM fpp
-        JOIN fp ia ON ia.dhash = fpp.fa
-        JOIN fp ib ON ib.dhash = fpp.fb
-    ),
-    edges AS (
-        SELECT a AS u, b AS v FROM pairs
-        UNION ALL
-        SELECT b AS u, a AS v FROM pairs
-    ),
-    reach(u, v) AS (
-        SELECT u, v FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    comp AS (
-        SELECT u AS media_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u
-    )
-    SELECT f.media_id, CAST(coalesce(c.cluster_id, f.media_id) AS BIGINT) AS cluster_id
-    FROM fp f LEFT JOIN comp c ON c.media_id = f.media_id
-    """,
+    oracle=clusters_oracle(IMAGE),
     covers=(),
     doc="image near-dup clusters: connected components over dHash Hamming pairs",
 )
 def image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The image analog of ``dedup_clusters`` — the step that turns
-    the pair list into an actionable dedup verdict: every hashed
-    image gets ``cluster_id`` = the minimum media id reachable
-    through Hamming-band near-dup edges (its own id when unique), so
-    keep-one-per-cluster is ``media_id == cluster_id``. Same fixture
-    domain as ``image_phash_pairs`` (perturbed twins included — each
-    twin clusters with its original by construction), same
-    star-contraction engine as the text family
-    (``operators/dedup.duplicate_clusters``).
-
-    Scale: pairing is fingerprint-grain (see ``image_phash_pairs``);
-    clustering adds O(log n) label-table rounds over edges that are
-    near-dup-pair sized, exactly the text-side cost model.
-    """
-    from pyspark.sql import functions as F
-
-    from gmall_realtime2021_spark.operators.dedup import duplicate_clusters
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(
-        (F.col("doc_id") % 60 == 0)
-        & F.col("text").isNotNull()
-        & (F.length("text") >= 72)
-    ).select(
-        (F.col("doc_id") + TWIN_OFFSET).alias("doc_id"),
-        F.overlay("text", F.lit("~"), F.lit(37), F.lit(1)).alias("text"),
-    )
-    media = synthesize_media(fan_out(docs.unionByName(twins)))
-    fp = register_cache(image_dhash(media))
-    pairs = hamming_band_pairs(
-        fp, max_hamming=IMG_MAX_HAMMING, id_col="media_id", fp_col="dhash", bits=64
-    )
-    return duplicate_clusters(
-        fp.select("media_id"), pairs.select("a", "b"), id_col="media_id"
-    )
+    """The image analog of ``dedup_clusters``
+    (``media_dedup.near_dup_clusters``): one ``cluster_id`` per hashed
+    image over the ``image_phash_pairs`` domain."""
+    return near_dup_clusters(spark, sf_dir, IMAGE)
 
 
 @register(
     "image_dedup_incremental",
-    oracle=f"""
-    WITH {_fp_cte(_IMG_WITH_TWINS)},
-    inc AS (SELECT media_id, dhash FROM fp WHERE media_id % 10 >= 8),
-    ex AS (SELECT media_id, dhash FROM fp WHERE media_id % 10 < 8),
-    bi AS (
-        SELECT f, CAST(j AS VARCHAR) || ':' || CAST((f >> (8 * j)) & 255 AS VARCHAR) AS band
-        FROM (SELECT DISTINCT dhash AS f FROM inc), unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS u(j)
-    ),
-    be AS (
-        SELECT f, CAST(j AS VARCHAR) || ':' || CAST((f >> (8 * j)) & 255 AS VARCHAR) AS band
-        FROM (SELECT DISTINCT dhash AS f FROM ex), unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS u(j)
-    ),
-    fpp AS (
-        SELECT fq, fe, hamming FROM (
-            SELECT DISTINCT x.f AS fq, y.f AS fe,
-                   CAST(bit_count(xor(x.f, y.f)) AS BIGINT) AS hamming
-            FROM bi x JOIN be y USING (band)
-        ) WHERE hamming <= {IMG_MAX_HAMMING}
-    ),
-    matched AS (
-        SELECT i.media_id AS inc_id, e.media_id AS ex_id, fpp.hamming
-        FROM fpp
-        JOIN inc i ON i.dhash = fpp.fq
-        JOIN ex e ON e.dhash = fpp.fe
-    ),
-    ranked AS (
-        SELECT inc_id, ex_id, hamming,
-               row_number() OVER (PARTITION BY inc_id ORDER BY hamming, ex_id) AS rn,
-               count(*) OVER (PARTITION BY inc_id) AS match_ct
-        FROM matched
-    ),
-    best AS (
-        SELECT inc_id, match_ct, ex_id AS best_match_id, hamming AS best_hamming
-        FROM ranked WHERE rn = 1
-    )
-    SELECT i.media_id,
-           CASE WHEN b.inc_id IS NULL THEN 0 ELSE 1 END AS is_dup,
-           coalesce(b.match_ct, 0) AS match_ct,
-           coalesce(b.best_match_id, -1) AS best_match_id,
-           coalesce(b.best_hamming, -1) AS best_hamming
-    FROM inc i LEFT JOIN best b ON b.inc_id = i.media_id
-    """,
+    oracle=incremental_oracle(IMAGE),
     covers=(),
     doc="incremental-ingest image dedup: incoming batch probed against the standing fingerprint index",
 )
 def image_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily-delivery dedup for media — the image analog of
-    ``dedup_incremental``: images with ``media_id % 10 >= 8`` play
-    the incoming batch (which by construction includes every
-    perturbed twin: TWIN_OFFSET % 10 = 9 and twin sources have
-    doc_id % 10 = 0, so each twin probes against its indexed
-    original), the rest the standing fingerprint index
-    (``streaming/sinks.phash_index_sink`` is how that index is
-    maintained at rest). One row per incoming image: ``is_dup``,
-    qualifying ``match_ct``, and the best match (min hamming, ties to
-    the smallest index id; −1 sentinels when none).
-
-    Scale: the probe is the two-sided pigeonhole band join
-    (``operators/dedup.hamming_band_probe``) at distinct-fingerprint
-    grain — the incoming side is delivery-sized, the index side never
-    re-pairs against itself, and only candidate ids cross the
-    exchanges.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from gmall_realtime2021_spark.operators.dedup import hamming_band_probe
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(
-        (F.col("doc_id") % 60 == 0)
-        & F.col("text").isNotNull()
-        & (F.length("text") >= 72)
-    ).select(
-        (F.col("doc_id") + TWIN_OFFSET).alias("doc_id"),
-        F.overlay("text", F.lit("~"), F.lit(37), F.lit(1)).alias("text"),
-    )
-    media = synthesize_media(fan_out(docs.unionByName(twins)))
-    fp = register_cache(image_dhash(media))
-    inc = fp.filter(F.col("media_id") % 10 >= 8)
-    ex = fp.filter(F.col("media_id") % 10 < 8)
-    matched = hamming_band_probe(
-        ex, inc, max_hamming=IMG_MAX_HAMMING, id_col="media_id", fp_col="dhash", bits=64
-    )
-    w = Window.partitionBy("inc").orderBy(F.asc("hamming"), F.asc("ex"))
-    best = (
-        matched.withColumn("rn", F.row_number().over(w))
-        .withColumn("match_ct", F.count("*").over(Window.partitionBy("inc")))
-        .filter(F.col("rn") == 1)
-        .select(
-            "inc",
-            "match_ct",
-            F.col("ex").alias("best_match_id"),
-            F.col("hamming").alias("best_hamming"),
-        )
-    )
-    return (
-        inc.select(F.col("media_id").alias("inc"))
-        .join(best, "inc", "left")
-        .select(
-            F.col("inc").alias("media_id"),
-            F.when(F.col("match_ct").isNull(), F.lit(0)).otherwise(F.lit(1)).alias("is_dup"),
-            F.coalesce("match_ct", F.lit(0).cast("long")).alias("match_ct"),
-            F.coalesce("best_match_id", F.lit(-1).cast("long")).alias("best_match_id"),
-            F.coalesce("best_hamming", F.lit(-1).cast("long")).alias("best_hamming"),
-        )
-    )
+    """The image analog of ``dedup_incremental``
+    (``media_dedup.near_dup_incremental``): images with
+    ``media_id % 10 >= 8`` are the incoming batch, the rest the
+    standing index that ``streaming/sinks.phash_index_sink`` maintains
+    at rest."""
+    return near_dup_incremental(spark, sf_dir, IMAGE)

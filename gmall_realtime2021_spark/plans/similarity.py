@@ -198,9 +198,9 @@ def _sql_cell_scores(vec: str) -> str:
     return "list_value(" + ", ".join(terms) + ")"
 
 
-@register(
-    "ann_ivf_topk",
-    oracle=f"""
+#: The IVF top-k result contract of ``ann_ivf_topk`` and
+#: ``ann_ivf_partitioned`` (query-time cells vs the at-rest index).
+ANN_IVF_ORACLE = f"""
     WITH c0 AS (
         SELECT vec_id AS c_id, embedding AS c_vec,
                sqrt({sql_dot('embedding', 'embedding')}) AS c_norm,
@@ -236,7 +236,12 @@ def _sql_cell_scores(vec: str) -> str:
     )
     SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rank, round(raw_cos, 6) AS cos
     FROM ranked WHERE rk <= 3
-    """,
+    """
+
+
+@register(
+    "ann_ivf_topk",
+    oracle=ANN_IVF_ORACLE,
     covers=(),
     doc="IVF ANN top-k: nearest-centroid cells, n_probe=2 (scale path)",
 )
@@ -248,43 +253,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_ivf_partitioned",
-    oracle=f"""
-    WITH c0 AS (
-        SELECT vec_id AS c_id, embedding AS c_vec,
-               sqrt({sql_dot('embedding', 'embedding')}) AS c_norm,
-               {_sql_cell_scores('embedding')} AS scores
-        FROM embeddings WHERE vec_id >= {N_QUERIES}
-    ),
-    c AS (
-        SELECT c_id, c_vec, c_norm, list_position(scores, list_min(scores)) AS cell FROM c0
-    ),
-    q0 AS (
-        SELECT vec_id AS q_id, embedding AS q_vec,
-               sqrt({sql_dot('embedding', 'embedding')}) AS q_norm,
-               {_sql_cell_scores('embedding')} AS scores
-        FROM embeddings WHERE vec_id < {N_QUERIES}
-    ),
-    probes AS (
-        SELECT q_id, q_vec, q_norm,
-               unnest(list_transform(
-                   list_slice(list_sort(list_transform(generate_series(1, {len(IVF_CENTROIDS)}),
-                                                       i -> {{'s': scores[i], 'i': i}})), 1, 2),
-                   x -> CAST(x.i AS BIGINT))) AS cell
-        FROM q0
-    ),
-    scored AS (
-        SELECT q_id AS query_id, c_id AS neighbor_id,
-               {sql_dot('q_vec', 'c_vec')} / (q_norm * c_norm) AS raw_cos
-        FROM probes JOIN c USING (cell)
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, raw_cos,
-               row_number() OVER (PARTITION BY query_id ORDER BY raw_cos DESC, neighbor_id) AS rk
-        FROM scored
-    )
-    SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rank, round(raw_cos, 6) AS cos
-    FROM ranked WHERE rk <= 3
-    """,
+    oracle=ANN_IVF_ORACLE,
     covers=(),
     doc="IVF ANN served from the MATERIALIZED cell-partitioned index (dynamic partition pruning)",
 )

@@ -38,13 +38,17 @@ def _sql_in_list(words: tuple[str, ...]) -> str:
     return "(" + ", ".join(f"'{w}'" for w in words) + ")"
 
 
-@register(
-    "keyword_stats",
-    oracle=f"""
+#: The keyword_stats result contract, shared with ``keyword_stats_sql``.
+KEYWORD_STATS_ORACLE = f"""
     SELECT keyword, source, count(*) AS ct
     FROM (SELECT unnest({sql_tokens('text')}) AS keyword, source FROM documents)
     GROUP BY keyword, source
-    """,
+    """
+
+
+@register(
+    "keyword_stats",
+    oracle=KEYWORD_STATS_ORACLE,
     covers=("F1", "A3", "R2", "P7"),
 )
 def keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -276,11 +280,7 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "keyword_stats_sql",
-    oracle=f"""
-    SELECT keyword, source, count(*) AS ct
-    FROM (SELECT unnest({sql_tokens('text')}) AS keyword, source FROM documents)
-    GROUP BY keyword, source
-    """,
+    oracle=KEYWORD_STATS_ORACLE,
     covers=("F1", "S4"),
     doc="keyword stats through the SQL surface: registered UDF + LATERAL VIEW",
 )

@@ -140,9 +140,9 @@ def top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "shipping_priority",
-    oracle="""
+#: The shipping_priority result contract, shared with
+#: ``bucketed_shipping_priority``.
+SHIPPING_PRIORITY_ORACLE = """
     SELECT l_orderkey,
            CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS revenue,
            strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
@@ -152,7 +152,12 @@ def top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN lineitem ON l_orderkey = o_orderkey
     WHERE c_mktsegment = 'BUILDING' AND l_shipdate > o_orderdate + INTERVAL 10 DAY
     GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    """,
+    """
+
+
+@register(
+    "shipping_priority",
+    oracle=SHIPPING_PRIORITY_ORACLE,
     covers=("J1", "J3"),
 )
 def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,14 +4,16 @@ completing the media dedup story: sampled-frame envelope hashes
 (``multimodal/video.py``) majority-folded into one 64-bit fingerprint
 per video, paired through the shared pigeonhole byte-band Hamming
 join. Reference analog: the same media payload rows the DWD layer
-routes (``BaseLogApp.java:235-247``).
+routes (``BaseLogApp.java:235-247``). The pairs, cluster and
+incremental plans are the shared ``plans/media_dedup.py`` contracts
+over the :data:`VIDEO` spec.
 
 Oracle story: the fixture's video payloads are UTF-8 stand-ins and
 the fake frame sampler slices BYTES at integer offsets
 (``multimodal_frames`` already value-hash-proves that geometry), so
 the whole chain — UTF-8 byte array from code points (RFC 3629
 layout), frame slices, window means, adjacent-compare pack, majority
-fold — is integer arithmetic DuckDB reproduces exactly. Both plans
+fold — is integer arithmetic DuckDB reproduces exactly. All four plans
 are value-hash oracle plans; frame-level recall on constructed
 multi-frame payloads is pinned in tests/test_multimodal.py.
 """
@@ -19,7 +21,6 @@ multi-frame payloads is pinned in tests/test_multimodal.py.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from gmall_realtime2021_spark.multimodal import synthesize_media
 from gmall_realtime2021_spark.multimodal.afp import AFP_WINDOWS
@@ -27,18 +28,18 @@ from gmall_realtime2021_spark.multimodal.video import (
     VIDEO_FRAME_BYTES,
     video_fingerprints,
 )
-from gmall_realtime2021_spark.operators.dedup import (
-    hamming_band_pairs,
-    register_cache,
-)
 from gmall_realtime2021_spark.plans.audio import _afp_pack_sql, _win_mean_sql
-from gmall_realtime2021_spark.plans.images import IMG_MAX_HAMMING, TWIN_OFFSET
+from gmall_realtime2021_spark.plans.media_dedup import (
+    MediaSpec,
+    clusters_oracle,
+    incremental_oracle,
+    near_dup_clusters,
+    near_dup_incremental,
+    near_dup_pairs,
+    pairs_oracle,
+)
 from gmall_realtime2021_spark.plans.registry import register
 from gmall_realtime2021_spark.tables import fan_out, load
-
-#: Same Hamming budget as the image/audio families (8 byte-bands over
-#: 64 bits guarantee recall to hamming 7; 6 leaves slack).
-VID_MAX_HAMMING = IMG_MAX_HAMMING
 
 #: UTF-8 byte LIST of one character from its code point (the list
 #: sibling of ``plans/multimodal._UTF8_SB``'s byte sum) — flattening
@@ -116,19 +117,6 @@ _VID_BASE = """SELECT doc_id AS media_id, text
         FROM documents
         WHERE doc_id % 3 = 2 AND text IS NOT NULL AND length(text) > 0"""
 
-#: Pairs-plan domain: video rows PLUS one deterministic same-length
-#: perturbed twin per 20th video doc (single mid-text character
-#: overwrite — length-preserving, so frame geometry is identical and
-#: only the frames covering that byte change; the majority fold then
-#: keeps the twin within the Hamming budget for multi-frame videos).
-_VID_WITH_TWINS = f"""{_VID_BASE}
-        UNION ALL
-        SELECT doc_id + {TWIN_OFFSET} AS media_id,
-               substr(text, 1, 36) || '~' || substr(text, 38) AS text
-        FROM documents
-        WHERE doc_id % 60 = 2 AND text IS NOT NULL AND length(text) >= {AFP_WINDOWS}"""
-
-
 @register(
     "video_fingerprint",
     oracle=f"""
@@ -156,267 +144,64 @@ def video_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return video_fingerprints(media)
 
 
+#: The near-dup plans' video family: the majority-fold fingerprint.
+#: A twin's single-character edit is length-preserving, so frame
+#: geometry is identical and only the frames covering that byte
+#: change. Incoming side: ``media_id % 10 <= 1`` — twin sources have
+#: doc_id % 10 = 2, so every twin lands at % 10 = 1 while its
+#: original sits in the index.
+VIDEO = MediaSpec(
+    kernel=video_fingerprints,
+    fp_col="vhash",
+    fp_cte=_video_fp_cte,
+    fp_rel="vfp",
+    base_sql=_VID_BASE,
+    twin_residue=2,
+    twin_min_len=AFP_WINDOWS,
+    twin_select="{} AS text",
+    incoming_sql="% 10 <= 1",
+    index_sql="% 10 > 1",
+    incoming=lambda m: m % 10 <= 1,
+)
+
+
 @register(
     "video_fingerprint_pairs",
-    oracle=f"""
-    WITH {_video_fp_cte(_VID_WITH_TWINS)},
-    uniqf AS (SELECT DISTINCT vhash AS f FROM vfp),
-    buck AS (
-        SELECT f, CAST(j AS VARCHAR) || ':' || CAST((f >> (8 * j)) & 255 AS VARCHAR) AS band
-        FROM uniqf, unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS u(j)
-    ),
-    fpp AS (
-        SELECT fa, fb, hamming FROM (
-            SELECT DISTINCT x.f AS fa, y.f AS fb,
-                   CAST(bit_count(xor(x.f, y.f)) AS BIGINT) AS hamming
-            FROM buck x JOIN buck y USING (band)
-            WHERE x.f < y.f
-        ) WHERE hamming <= {VID_MAX_HAMMING}
-    ),
-    intra AS (
-        SELECT x.media_id AS a, y.media_id AS b, CAST(0 AS BIGINT) AS hamming
-        FROM vfp x JOIN vfp y ON x.vhash = y.vhash AND x.media_id < y.media_id
-    ),
-    crossfp AS (
-        SELECT least(ia.media_id, ib.media_id) AS a,
-               greatest(ia.media_id, ib.media_id) AS b,
-               fpp.hamming
-        FROM fpp
-        JOIN vfp ia ON ia.vhash = fpp.fa
-        JOIN vfp ib ON ib.vhash = fpp.fb
-    )
-    SELECT a, b, hamming FROM intra
-    UNION ALL
-    SELECT a, b, hamming FROM crossfp
-    """,
+    oracle=pairs_oracle(VIDEO),
     covers=(),
     doc="near-duplicate video pairs: majority-fold frame fingerprints + pigeonhole byte-band Hamming join",
 )
 def video_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate VIDEO pairs at the Hamming budget through the
-    shared fingerprint-grain band join — a re-muxed copy with a
-    single corrupted frame or small overlay lands within budget
-    (majority fold absorbs per-frame damage); unrelated videos stay
-    far. Same deterministic perturbed-twin probe as the image/audio
-    pairs plans so recall is demonstrated non-vacuously on every
-    fixture.
-
-    Scale: identical economics to the image/audio families —
-    candidate join at distinct-fingerprint grain, fingerprint frame
-    persisted because the pairing reads it on three plan sides.
-    """
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(
-        (F.col("doc_id") % 60 == 2)
-        & F.col("text").isNotNull()
-        & (F.length("text") >= AFP_WINDOWS)
-    ).select(
-        (F.col("doc_id") + TWIN_OFFSET).alias("doc_id"),
-        F.overlay("text", F.lit("~"), F.lit(37), F.lit(1)).alias("text"),
-    )
-    media = synthesize_media(fan_out(docs.unionByName(twins)))
-    fp = register_cache(video_fingerprints(media).select("media_id", "vhash"))
-    return hamming_band_pairs(
-        fp, max_hamming=VID_MAX_HAMMING, id_col="media_id", fp_col="vhash", bits=64
-    )
+    """Near-duplicate VIDEO pairs at the Hamming budget
+    (``media_dedup.near_dup_pairs`` over majority-fold fingerprints) —
+    a re-muxed copy with a single corrupted frame or small overlay
+    lands within budget (the majority fold absorbs per-frame damage);
+    unrelated videos stay far."""
+    return near_dup_pairs(spark, sf_dir, VIDEO)
 
 
 @register(
     "video_dedup_clusters",
-    # the pairs oracle verbatim as the edge source, wrapped in the
-    # same recursive-CTE transitive closure the image/text cluster
-    # plans use — both engines cluster exactly the pairs they agreed on
-    oracle=f"""
-    WITH RECURSIVE {_video_fp_cte(_VID_WITH_TWINS)},
-    uniqf AS (SELECT DISTINCT vhash AS f FROM vfp),
-    buck AS (
-        SELECT f, CAST(j AS VARCHAR) || ':' || CAST((f >> (8 * j)) & 255 AS VARCHAR) AS band
-        FROM uniqf, unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS u(j)
-    ),
-    fpp AS (
-        SELECT fa, fb FROM (
-            SELECT DISTINCT x.f AS fa, y.f AS fb,
-                   CAST(bit_count(xor(x.f, y.f)) AS BIGINT) AS hamming
-            FROM buck x JOIN buck y USING (band)
-            WHERE x.f < y.f
-        ) WHERE hamming <= {VID_MAX_HAMMING}
-    ),
-    pairs AS (
-        SELECT x.media_id AS a, y.media_id AS b
-        FROM vfp x JOIN vfp y ON x.vhash = y.vhash AND x.media_id < y.media_id
-        UNION ALL
-        SELECT least(ia.media_id, ib.media_id) AS a,
-               greatest(ia.media_id, ib.media_id) AS b
-        FROM fpp
-        JOIN vfp ia ON ia.vhash = fpp.fa
-        JOIN vfp ib ON ib.vhash = fpp.fb
-    ),
-    edges AS (
-        SELECT a AS u, b AS v FROM pairs
-        UNION ALL
-        SELECT b AS u, a AS v FROM pairs
-    ),
-    reach(u, v) AS (
-        SELECT u, v FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    comp AS (
-        SELECT u AS media_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u
-    )
-    SELECT f.media_id, CAST(coalesce(c.cluster_id, f.media_id) AS BIGINT) AS cluster_id
-    FROM vfp f LEFT JOIN comp c ON c.media_id = f.media_id
-    """,
+    oracle=clusters_oracle(VIDEO),
     covers=(),
     doc="video near-dup clusters: connected components over majority-fold fingerprint Hamming pairs",
 )
 def video_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The video analog of ``image_dedup_clusters`` — near-dup pairs
-    folded into an actionable verdict: every fingerprinted video gets
-    ``cluster_id`` = the minimum media id reachable through
-    Hamming-band near-dup edges (its own id when unique), so
-    keep-one-per-cluster is ``media_id == cluster_id``. Same fixture
-    domain as ``video_fingerprint_pairs`` (perturbed twins included —
-    each twin clusters with its original by construction), same
-    star-contraction engine as the text/image families
-    (``operators/dedup.duplicate_clusters``).
-
-    Scale: pairing is fingerprint-grain (see
-    ``video_fingerprint_pairs``); clustering adds O(log n)
-    label-table rounds over edges that are near-dup-pair sized.
-    """
-    from gmall_realtime2021_spark.operators.dedup import duplicate_clusters
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(
-        (F.col("doc_id") % 60 == 2)
-        & F.col("text").isNotNull()
-        & (F.length("text") >= AFP_WINDOWS)
-    ).select(
-        (F.col("doc_id") + TWIN_OFFSET).alias("doc_id"),
-        F.overlay("text", F.lit("~"), F.lit(37), F.lit(1)).alias("text"),
-    )
-    media = synthesize_media(fan_out(docs.unionByName(twins)))
-    fp = register_cache(video_fingerprints(media).select("media_id", "vhash"))
-    pairs = hamming_band_pairs(
-        fp, max_hamming=VID_MAX_HAMMING, id_col="media_id", fp_col="vhash", bits=64
-    )
-    return duplicate_clusters(
-        fp.select("media_id"), pairs.select("a", "b"), id_col="media_id"
-    )
+    """The video analog of ``image_dedup_clusters``
+    (``media_dedup.near_dup_clusters``): one ``cluster_id`` per
+    fingerprinted video over the ``video_fingerprint_pairs`` domain."""
+    return near_dup_clusters(spark, sf_dir, VIDEO)
 
 
 @register(
     "video_dedup_incremental",
-    # incoming side: media_id % 10 <= 1 — twins land there by
-    # construction (twin sources have doc_id % 60 = 2 so doc_id % 10
-    # = 2, and TWIN_OFFSET % 10 = 9 puts every twin at % 10 = 1)
-    # while their originals (% 10 = 2) sit in the standing index
-    oracle=f"""
-    WITH {_video_fp_cte(_VID_WITH_TWINS)},
-    inc AS (SELECT media_id, vhash FROM vfp WHERE media_id % 10 <= 1),
-    ex AS (SELECT media_id, vhash FROM vfp WHERE media_id % 10 > 1),
-    bi AS (
-        SELECT f, CAST(j AS VARCHAR) || ':' || CAST((f >> (8 * j)) & 255 AS VARCHAR) AS band
-        FROM (SELECT DISTINCT vhash AS f FROM inc), unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS u(j)
-    ),
-    be AS (
-        SELECT f, CAST(j AS VARCHAR) || ':' || CAST((f >> (8 * j)) & 255 AS VARCHAR) AS band
-        FROM (SELECT DISTINCT vhash AS f FROM ex), unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS u(j)
-    ),
-    fpp AS (
-        SELECT fq, fe, hamming FROM (
-            SELECT DISTINCT x.f AS fq, y.f AS fe,
-                   CAST(bit_count(xor(x.f, y.f)) AS BIGINT) AS hamming
-            FROM bi x JOIN be y USING (band)
-        ) WHERE hamming <= {VID_MAX_HAMMING}
-    ),
-    matched AS (
-        SELECT i.media_id AS inc_id, e.media_id AS ex_id, fpp.hamming
-        FROM fpp
-        JOIN inc i ON i.vhash = fpp.fq
-        JOIN ex e ON e.vhash = fpp.fe
-    ),
-    ranked AS (
-        SELECT inc_id, ex_id, hamming,
-               row_number() OVER (PARTITION BY inc_id ORDER BY hamming, ex_id) AS rn,
-               count(*) OVER (PARTITION BY inc_id) AS match_ct
-        FROM matched
-    ),
-    best AS (
-        SELECT inc_id, match_ct, ex_id AS best_match_id, hamming AS best_hamming
-        FROM ranked WHERE rn = 1
-    )
-    SELECT i.media_id,
-           CASE WHEN b.inc_id IS NULL THEN 0 ELSE 1 END AS is_dup,
-           coalesce(b.match_ct, 0) AS match_ct,
-           coalesce(b.best_match_id, -1) AS best_match_id,
-           coalesce(b.best_hamming, -1) AS best_hamming
-    FROM inc i LEFT JOIN best b ON b.inc_id = i.media_id
-    """,
+    oracle=incremental_oracle(VIDEO),
     covers=(),
     doc="incremental-ingest video dedup: incoming batch probed against the standing fingerprint index",
 )
 def video_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily-delivery dedup for video — the video analog of
-    ``image_dedup_incremental``: videos with ``media_id % 10 <= 1``
-    play the incoming batch (which by construction includes every
-    perturbed twin: TWIN_OFFSET % 10 = 9 and twin sources have
-    doc_id % 10 = 2, so each twin probes against its indexed
-    original), the rest the standing fingerprint index (maintained at
-    rest the same way ``streaming/sinks.phash_index_sink`` maintains
-    the image index — fingerprints are pure per-row functions of
-    immutable payloads, so append is the whole maintenance story).
-    One row per incoming video: ``is_dup``, qualifying ``match_ct``,
-    and the best match (min hamming, ties to the smallest index id;
-    −1 sentinels when none).
-
-    Scale: the probe is the two-sided pigeonhole band join
-    (``operators/dedup.hamming_band_probe``) at distinct-fingerprint
-    grain — the incoming side is delivery-sized, the index side never
-    re-pairs against itself, and only candidate ids cross the
-    exchanges.
-    """
-    from pyspark.sql import Window
-
-    from gmall_realtime2021_spark.operators.dedup import hamming_band_probe
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(
-        (F.col("doc_id") % 60 == 2)
-        & F.col("text").isNotNull()
-        & (F.length("text") >= AFP_WINDOWS)
-    ).select(
-        (F.col("doc_id") + TWIN_OFFSET).alias("doc_id"),
-        F.overlay("text", F.lit("~"), F.lit(37), F.lit(1)).alias("text"),
-    )
-    media = synthesize_media(fan_out(docs.unionByName(twins)))
-    fp = register_cache(video_fingerprints(media).select("media_id", "vhash"))
-    inc = fp.filter(F.col("media_id") % 10 <= 1)
-    ex = fp.filter(F.col("media_id") % 10 > 1)
-    matched = hamming_band_probe(
-        ex, inc, max_hamming=VID_MAX_HAMMING, id_col="media_id", fp_col="vhash", bits=64
-    )
-    w = Window.partitionBy("inc").orderBy(F.asc("hamming"), F.asc("ex"))
-    best = (
-        matched.withColumn("rn", F.row_number().over(w))
-        .withColumn("match_ct", F.count("*").over(Window.partitionBy("inc")))
-        .filter(F.col("rn") == 1)
-        .select(
-            "inc",
-            "match_ct",
-            F.col("ex").alias("best_match_id"),
-            F.col("hamming").alias("best_hamming"),
-        )
-    )
-    return (
-        inc.select(F.col("media_id").alias("inc"))
-        .join(best, "inc", "left")
-        .select(
-            F.col("inc").alias("media_id"),
-            F.when(F.col("match_ct").isNull(), F.lit(0)).otherwise(F.lit(1)).alias("is_dup"),
-            F.coalesce("match_ct", F.lit(0).cast("long")).alias("match_ct"),
-            F.coalesce("best_match_id", F.lit(-1).cast("long")).alias("best_match_id"),
-            F.coalesce("best_hamming", F.lit(-1).cast("long")).alias("best_hamming"),
-        )
-    )
+    """The video analog of ``image_dedup_incremental``
+    (``media_dedup.near_dup_incremental``): videos with
+    ``media_id % 10 <= 1`` are the incoming batch, the rest the
+    standing fingerprint index."""
+    return near_dup_incremental(spark, sf_dir, VIDEO)

@@ -23,8 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_realtime2021_spark.plans.registry import register
+from gmall_realtime2021_spark.plans.dwm import ORDER_WIDE_ORACLE, PAYMENT_WIDE_ORACLE
 from gmall_realtime2021_spark.plans.oracle_fragments import sql_poly_hash
+from gmall_realtime2021_spark.plans.registry import register
+from gmall_realtime2021_spark.plans.tpch import SHIPPING_PRIORITY_ORACLE
 from gmall_realtime2021_spark.sources.warehouse import (
     ensure_bucketed_events,
     ensure_bucketed_facts,
@@ -43,6 +45,32 @@ EVENTS_FROM, EVENTS_TO = "2024-01-10", "2024-01-20"
 #: window frame can reach at most one day before the serving range,
 #: so the scan includes exactly one margin day before EVENTS_FROM.
 EVENTS_MARGIN_FROM = "2024-01-09"
+
+#: The payment-enrich lookback frame: the reference's 30-minute
+#: payment⋈order window (``PaymentWideApp.java:65-75``).
+ENRICH_WINDOW = (
+    "(PARTITION BY user_id ORDER BY ts "
+    "RANGE BETWEEN INTERVAL 30 MINUTES PRECEDING AND CURRENT ROW)"
+)
+
+#: The payment-enrich result contract over the full event history;
+#: ``bucketed_payment_enrich_day`` adds its day bound.
+_ENRICH_ORACLE = """
+    SELECT user_id, event_id AS pay_id,
+           strftime(ts, '%Y-%m-%d %H:%M:%S') AS pay_time,
+           prior_ct,
+           CAST(prior_value AS DOUBLE) AS prior_value
+    FROM (
+        SELECT user_id, event_id, ts, event_type,
+               count(*) OVER w - 1 AS prior_ct,
+               sum(CAST(value AS DECIMAL(18,2))) OVER w
+                   - CAST(value AS DECIMAL(18,2)) AS prior_value
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts
+                     RANGE BETWEEN INTERVAL 30 MINUTES PRECEDING AND CURRENT ROW)
+    )
+    WHERE event_type = 'purchase'
+    """
 
 
 @register(
@@ -103,22 +131,7 @@ def bucketed_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bucketed_order_wide",
-    oracle="""
-    SELECT o_orderkey AS order_id,
-           o_custkey AS user_id,
-           o_orderstatus AS order_status,
-           o_totalprice AS total_amount,
-           strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS create_time,
-           CAST(epoch(o_orderdate) AS BIGINT) * 1000 AS create_ts,
-           l_linenumber AS detail_id,
-           l_partkey AS sku_id,
-           l_quantity AS sku_num,
-           l_extendedprice AS split_total_amount,
-           strftime(l_shipdate, '%Y-%m-%d %H:%M:%S') AS ship_time
-    FROM orders JOIN lineitem
-      ON o_orderkey = l_orderkey
-     AND l_shipdate BETWEEN o_orderdate AND o_orderdate + INTERVAL 30 DAY
-    """,
+    oracle=ORDER_WIDE_ORACLE,
     covers=("J1", "J6", "P9"),
     doc="the flagship interval join (order_wide) on the bucketed layout: zero exchanges, zero sorts",
 )
@@ -159,17 +172,7 @@ def bucketed_order_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bucketed_payment_wide",
-    oracle="""
-    SELECT p.user_id AS user_id,
-           count(*) AS matched_ct,
-           CAST(sum(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS matched_value
-    FROM (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase') p
-    JOIN events e
-      ON e.user_id = p.user_id
-     AND e.ts BETWEEN p.ts - INTERVAL 30 MINUTE AND p.ts
-     AND e.event_id <> p.event_id
-    GROUP BY 1
-    """,
+    oracle=PAYMENT_WIDE_ORACLE,
     covers=("J2", "J6", "P9"),
     doc="the asymmetric interval self-join (payment_wide) on the user-bucketed layout: zero exchanges, zero sorts",
 )
@@ -221,24 +224,38 @@ def bucketed_payment_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def enrich_rows(events: DataFrame) -> DataFrame:
+    """The payment-enrich projection over an events frame: one row per
+    purchase with the count and decimal-summed value of the user's
+    events in the :data:`ENRICH_WINDOW` lookback, self row excluded.
+    Serves ``bucketed_payment_enrich`` and the streaming
+    payment-enrich store (``streaming/sinks.payment_enrich_*``)."""
+    return (
+        events.select(
+            "user_id",
+            "event_id",
+            "ts",
+            "event_type",
+            F.expr(f"count(*) OVER {ENRICH_WINDOW} - 1").alias("prior_ct"),
+            (
+                F.expr(f"sum(CAST(value AS DECIMAL(18,2))) OVER {ENRICH_WINDOW}")
+                - F.col("value").cast("decimal(18,2)")
+            ).alias("prior_value"),
+        )
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            "user_id",
+            F.col("event_id").alias("pay_id"),
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("pay_time"),
+            "prior_ct",
+            F.col("prior_value").cast("double").alias("prior_value"),
+        )
+    )
+
+
 @register(
     "bucketed_payment_enrich",
-    oracle="""
-    SELECT user_id, event_id AS pay_id,
-           strftime(ts, '%Y-%m-%d %H:%M:%S') AS pay_time,
-           prior_ct,
-           CAST(prior_value AS DOUBLE) AS prior_value
-    FROM (
-        SELECT user_id, event_id, ts, event_type,
-               count(*) OVER w - 1 AS prior_ct,
-               sum(CAST(value AS DECIMAL(18,2))) OVER w
-                   - CAST(value AS DECIMAL(18,2)) AS prior_value
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts
-                     RANGE BETWEEN INTERVAL 30 MINUTES PRECEDING AND CURRENT ROW)
-    )
-    WHERE event_type = 'purchase'
-    """,
+    oracle=_ENRICH_ORACLE,
     covers=("J2", "J6", "P9"),
     doc="the bounded-output serving form of payment_wide: per-payment 30-min enrichment via a range window, no pair join",
 )
@@ -269,53 +286,13 @@ def bucketed_payment_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped — the inner-join twin omits it; downstream aggregation is
     unaffected and the serving contract is strictly more complete.
     """
-    events_t = ensure_bucketed_events(spark, sf_dir)
-    w = (
-        "(PARTITION BY user_id ORDER BY ts "
-        "RANGE BETWEEN INTERVAL 30 MINUTES PRECEDING AND CURRENT ROW)"
-    )
-    return (
-        spark.table(events_t)
-        .select(
-            "user_id",
-            "event_id",
-            "ts",
-            "event_type",
-            F.expr(f"count(*) OVER {w} - 1").alias("prior_ct"),
-            (
-                F.expr(f"sum(CAST(value AS DECIMAL(18,2))) OVER {w}")
-                - F.col("value").cast("decimal(18,2)")
-            ).alias("prior_value"),
-        )
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("pay_id"),
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("pay_time"),
-            "prior_ct",
-            F.col("prior_value").cast("double").alias("prior_value"),
-        )
-    )
+    return enrich_rows(spark.table(ensure_bucketed_events(spark, sf_dir)))
 
 
 @register(
     "bucketed_payment_enrich_day",
-    oracle=f"""
-    SELECT user_id, event_id AS pay_id,
-           strftime(ts, '%Y-%m-%d %H:%M:%S') AS pay_time,
-           prior_ct,
-           CAST(prior_value AS DOUBLE) AS prior_value
-    FROM (
-        SELECT user_id, event_id, ts, event_type,
-               count(*) OVER w - 1 AS prior_ct,
-               sum(CAST(value AS DECIMAL(18,2))) OVER w
-                   - CAST(value AS DECIMAL(18,2)) AS prior_value
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts
-                     RANGE BETWEEN INTERVAL 30 MINUTES PRECEDING AND CURRENT ROW)
-    )
-    WHERE event_type = 'purchase'
-      AND CAST(ts AS DATE) >= DATE '{EVENTS_FROM}'
+    oracle=_ENRICH_ORACLE
+    + f"""      AND CAST(ts AS DATE) >= DATE '{EVENTS_FROM}'
       AND CAST(ts AS DATE) < DATE '{EVENTS_TO}'
     """,
     covers=("J2", "J6", "P9"),
@@ -349,10 +326,6 @@ def bucketed_payment_enrich_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query window fixed, while the unbounded form grows linearly.
     """
     events_t = ensure_day_bucketed_events(spark, sf_dir)
-    w = (
-        "(PARTITION BY user_id ORDER BY ts "
-        "RANGE BETWEEN INTERVAL 30 MINUTES PRECEDING AND CURRENT ROW)"
-    )
     return (
         spark.table(events_t)
         # margin-inclusive PLANNING-time prune: window + 1 lookback day
@@ -366,9 +339,9 @@ def bucketed_payment_enrich_day(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts",
             "event_type",
             "event_date",
-            F.expr(f"count(*) OVER {w} - 1").alias("prior_ct"),
+            F.expr(f"count(*) OVER {ENRICH_WINDOW} - 1").alias("prior_ct"),
             (
-                F.expr(f"sum(CAST(value AS DECIMAL(18,2))) OVER {w}")
+                F.expr(f"sum(CAST(value AS DECIMAL(18,2))) OVER {ENRICH_WINDOW}")
                 - F.col("value").cast("decimal(18,2)")
             ).alias("prior_value"),
         )
@@ -500,17 +473,7 @@ def train_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bucketed_shipping_priority",
-    oracle="""
-    SELECT l_orderkey,
-           CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS revenue,
-           strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-           o_orderpriority
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = 'BUILDING' AND l_shipdate > o_orderdate + INTERVAL 10 DAY
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    """,
+    oracle=SHIPPING_PRIORITY_ORACLE,
     covers=(),
     doc="TPC-H Q3 shape re-run on the bucketed layout: one broadcast, zero shuffle exchanges",
 )

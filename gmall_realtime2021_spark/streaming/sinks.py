@@ -763,43 +763,6 @@ def postings_index_sink(index_dir: str) -> Callable:
     return write
 
 
-#: The enrich serving contract's lookback frame (must match the
-#: ``bucketed_payment_enrich`` plan and the reference's 30-minute
-#: payment⋈order window, ``PaymentWideApp.java:65-75``).
-_ENRICH_WINDOW = (
-    "(PARTITION BY user_id ORDER BY ts "
-    "RANGE BETWEEN INTERVAL 30 MINUTES PRECEDING AND CURRENT ROW)"
-)
-
-
-def _enrich_rows(events: DataFrame) -> DataFrame:
-    """The enrich projection over an events frame — the SAME frame
-    arithmetic, money discipline, and serve-zero-prior contract as
-    the ``bucketed_payment_enrich`` plan (one row per purchase,
-    30-minute-lookback count/value of the user's prior events)."""
-    return (
-        events.select(
-            "user_id",
-            "event_id",
-            "ts",
-            "event_type",
-            F.expr(f"count(*) OVER {_ENRICH_WINDOW} - 1").alias("prior_ct"),
-            (
-                F.expr(f"sum(CAST(value AS DECIMAL(18,2))) OVER {_ENRICH_WINDOW}")
-                - F.col("value").cast("decimal(18,2)")
-            ).alias("prior_value"),
-        )
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("pay_id"),
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("pay_time"),
-            "prior_ct",
-            F.col("prior_value").cast("double").alias("prior_value"),
-        )
-    )
-
-
 def payment_enrich_bootstrap(spark, sf_dir: str, store_dir: str) -> int:
     """Initial full build of the payment-enrich serving store: the
     ``bucketed_payment_enrich`` contract computed over the CURRENT
@@ -809,11 +772,12 @@ def payment_enrich_bootstrap(spark, sf_dir: str, store_dir: str) -> int:
     :func:`payment_enrich_upsert_batch` into the ingest topology;
     re-running resets the store to the layout's current state (the
     derived-state rebuild discipline)."""
+    from gmall_realtime2021_spark.plans.warehouse import enrich_rows
     from gmall_realtime2021_spark.sources import warehouse as W
 
     events_t = W.ensure_bucketed_events(spark, sf_dir)
     with _replace_dir(store_dir) as tmp:
-        _enrich_rows(spark.table(events_t)).write.mode("overwrite").parquet(tmp)
+        enrich_rows(spark.table(events_t)).write.mode("overwrite").parquet(tmp)
     return spark.read.parquet(store_dir).count()
 
 
@@ -855,6 +819,7 @@ def payment_enrich_upsert_batch(
     a pure function of (layout, slice), so the retry converges
     (pinned by the chaos test). The bounded driver-side ``.collect()``
     reads ONE row (the batch's min/max ts)."""
+    from gmall_realtime2021_spark.plans.warehouse import enrich_rows
     from gmall_realtime2021_spark.sources import warehouse as W
 
     events_t = W.ensure_bucketed_events(spark, sf_dir)
@@ -891,7 +856,7 @@ def payment_enrich_upsert_batch(
             .filter((F.col("ts") >= F.lit(span.lo) - margin) & (F.col("ts") <= F.lit(span.hi) + margin))
             .join(F.broadcast(users), "user_id", "left_semi")
         )
-        recomputed = _enrich_rows(slice_ev).filter(
+        recomputed = enrich_rows(slice_ev).filter(
             F.col("pay_time") >= F.date_format(F.lit(span.lo), "yyyy-MM-dd HH:mm:ss")
         )
         cached.append(recomputed.persist())

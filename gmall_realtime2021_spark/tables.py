@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["TABLES", "DIM_TABLES", "load", "register_views", "default_sf_dir"]
+__all__ = ["TABLES", "DIM_TABLES", "load", "default_sf_dir"]
 
 TABLES = (
     "region",
@@ -130,9 +130,3 @@ def input_bytes(sf_dir: str, name: str) -> int | None:
             except OSError:
                 pass
     return total
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() plans."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

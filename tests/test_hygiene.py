@@ -25,3 +25,20 @@ def test_no_module_defines_a_test_function_twice():
         if twice:
             dupes[os.path.basename(path)] = twice
     assert not dupes, dupes
+
+
+def test_equal_oracles_share_one_string():
+    """Plans whose oracle SQL is the same text (whitespace aside) hold
+    one string object, so a serving-layout variant cannot drift from
+    its base plan's result contract."""
+    from gmall_realtime2021_spark.plans import get_plans
+
+    first: dict[str, tuple[str, str]] = {}
+    apart = []
+    for name, plan in sorted(get_plans().items()):
+        if plan.oracle is None:
+            continue
+        base, oracle = first.setdefault(" ".join(plan.oracle.split()), (name, plan.oracle))
+        if oracle is not plan.oracle:
+            apart.append((base, name))
+    assert not apart, apart

@@ -370,7 +370,7 @@ def test_image_phash_real_transformed_copy_recall(spark):
     (decoder='real'), not the fake fallback."""
     from gmall_realtime2021_spark.multimodal.phash import image_dhash
     from gmall_realtime2021_spark.operators.dedup import hamming_band_pairs
-    from gmall_realtime2021_spark.plans.images import IMG_MAX_HAMMING
+    from gmall_realtime2021_spark.plans.media_dedup import MEDIA_MAX_HAMMING
 
     w, h, ch = 27, 16, 3
     base = bytearray((i * 2654435761) % 256 for i in range(w * h * ch))
@@ -387,12 +387,12 @@ def test_image_phash_real_transformed_copy_recall(spark):
     fp = image_dhash(media)
     got = {r.media_id: r for r in fp.collect()}
     assert {r.decoder for r in got.values()} == {"real"}
-    assert _hamming64(got[1].dhash, got[2].dhash) <= IMG_MAX_HAMMING
-    assert _hamming64(got[1].dhash, got[3].dhash) > IMG_MAX_HAMMING
+    assert _hamming64(got[1].dhash, got[2].dhash) <= MEDIA_MAX_HAMMING
+    assert _hamming64(got[1].dhash, got[3].dhash) > MEDIA_MAX_HAMMING
     pairs = {
         (r.a, r.b)
         for r in hamming_band_pairs(
-            fp, max_hamming=IMG_MAX_HAMMING, id_col="media_id", fp_col="dhash", bits=64
+            fp, max_hamming=MEDIA_MAX_HAMMING, id_col="media_id", fp_col="dhash", bits=64
         ).collect()
     }
     assert (1, 2) in pairs and (1, 3) not in pairs and (2, 3) not in pairs
@@ -467,7 +467,7 @@ def test_audio_afp_real_transformed_copy_recall(spark):
     unrelated clip stays far — on the real decode path."""
     from gmall_realtime2021_spark.multimodal.afp import audio_afp
     from gmall_realtime2021_spark.operators.dedup import hamming_band_pairs
-    from gmall_realtime2021_spark.plans.audio import AFP_MAX_HAMMING
+    from gmall_realtime2021_spark.plans.media_dedup import MEDIA_MAX_HAMMING
 
     base = [((i * 389) % 97 - 48) * 64 for i in range(2600)]
     pert = list(base)
@@ -483,12 +483,12 @@ def test_audio_afp_real_transformed_copy_recall(spark):
     fp = audio_afp(media)
     got = {r.media_id: r for r in fp.collect()}
     assert {r.decoder for r in got.values()} == {"real"}
-    assert _hamming64(got[1].afp, got[2].afp) <= AFP_MAX_HAMMING
-    assert _hamming64(got[1].afp, got[3].afp) > AFP_MAX_HAMMING
+    assert _hamming64(got[1].afp, got[2].afp) <= MEDIA_MAX_HAMMING
+    assert _hamming64(got[1].afp, got[3].afp) > MEDIA_MAX_HAMMING
     pairs = {
         (r.a, r.b)
         for r in hamming_band_pairs(
-            fp, max_hamming=AFP_MAX_HAMMING, id_col="media_id", fp_col="afp", bits=64
+            fp, max_hamming=MEDIA_MAX_HAMMING, id_col="media_id", fp_col="afp", bits=64
         ).collect()
     }
     assert (1, 2) in pairs and (1, 3) not in pairs and (2, 3) not in pairs
@@ -536,7 +536,7 @@ def test_video_fingerprint_majority_fold_recall(spark):
     unrelated video stays out."""
     from gmall_realtime2021_spark.multimodal.video import video_fingerprints
     from gmall_realtime2021_spark.operators.dedup import hamming_band_pairs
-    from gmall_realtime2021_spark.plans.video import VID_MAX_HAMMING
+    from gmall_realtime2021_spark.plans.media_dedup import MEDIA_MAX_HAMMING
 
     chunk = bytes((i * 31 + (i >> 3) * 7) % 256 for i in range(256))
     base = bytearray(chunk * 8)  # 8 frames, all slicing the same 64-byte view
@@ -561,12 +561,12 @@ def test_video_fingerprint_majority_fold_recall(spark):
     got = {r.media_id: r for r in fp.collect()}
     assert all(r.n_frames == 8 for r in got.values())
     assert got[2].vhash == got[1].vhash  # single-frame corruption absorbed
-    assert _hamming64(got[3].vhash, got[1].vhash) <= VID_MAX_HAMMING
-    assert _hamming64(got[4].vhash, got[1].vhash) > VID_MAX_HAMMING
+    assert _hamming64(got[3].vhash, got[1].vhash) <= MEDIA_MAX_HAMMING
+    assert _hamming64(got[4].vhash, got[1].vhash) > MEDIA_MAX_HAMMING
 
     pairs = hamming_band_pairs(
         fp.select("media_id", "vhash"),
-        max_hamming=VID_MAX_HAMMING,
+        max_hamming=MEDIA_MAX_HAMMING,
         id_col="media_id",
         fp_col="vhash",
         bits=64,
@@ -875,7 +875,7 @@ def test_video_fingerprint_real_avi_near_copy_recall(spark):
 
     from gmall_realtime2021_spark.multimodal.media import MEDIA_SCHEMA
     from gmall_realtime2021_spark.multimodal.video import video_fingerprints
-    from gmall_realtime2021_spark.plans.video import VID_MAX_HAMMING
+    from gmall_realtime2021_spark.plans.media_dedup import MEDIA_MAX_HAMMING
 
     w, h, nf = 32, 24, 4
     def frames(sub, shift=0):
@@ -901,5 +901,5 @@ def test_video_fingerprint_real_avi_near_copy_recall(spark):
     got = {r.media_id: r for r in video_fingerprints(media).collect()}
     assert all(r.n_frames == nf for r in got.values())
     assert got[2].vhash == got[1].vhash                       # re-mux: identical pixels
-    assert _hamming64(got[3].vhash, got[1].vhash) <= VID_MAX_HAMMING
-    assert _hamming64(got[4].vhash, got[1].vhash) > VID_MAX_HAMMING
+    assert _hamming64(got[3].vhash, got[1].vhash) <= MEDIA_MAX_HAMMING
+    assert _hamming64(got[4].vhash, got[1].vhash) > MEDIA_MAX_HAMMING

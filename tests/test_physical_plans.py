@@ -535,8 +535,11 @@ def test_semantic_decontamination_broadcast_scan(spark):
     assert "partial_max" in plan  # map-side combined, no window
 
 
-def test_image_phash_pairs_fingerprint_cache_and_no_cartesian(spark):
-    """The image pairing plan's scale contract: no cartesian anywhere,
+@pytest.mark.parametrize(
+    "name", ["image_phash_pairs", "audio_fingerprint_pairs", "video_fingerprint_pairs"]
+)
+def test_media_pairs_fingerprint_cache_and_no_cartesian(spark, name):
+    """A media pairing plan's scale contract: no cartesian anywhere,
     all expansion joins broadcast (fingerprint/candidate frames are
     tiny), and the persisted fingerprint frame actually substitutes —
     every one of its plan-side references reads the InMemoryRelation,
@@ -544,7 +547,7 @@ def test_image_phash_pairs_fingerprint_cache_and_no_cartesian(spark):
     matter how many sides consume it."""
     from gmall_realtime2021_spark.operators.dedup import release_caches
 
-    plan = _plan(spark, "image_phash_pairs")
+    plan = _plan(spark, name)
     release_caches()
     assert "CartesianProduct" not in plan and "SortMergeJoin" not in plan
     # fp is read on 6 sides (uniq band buckets x2 via self-join, intra
@@ -563,22 +566,11 @@ def test_image_phash_no_key_shuffle(spark):
     assert len(re.findall(r"MapInPandas", plan)) == 1
 
 
-def test_video_pairs_fingerprint_cache_and_no_cartesian(spark):
-    """The video pairing plan inherits the image family's scale
-    contract: no cartesian, expansion joins broadcast, and the
-    persisted fingerprint frame substitutes on every plan side — the
-    frame-sample + majority-fold Arrow pass over payloads runs ONCE
-    at execution no matter how many sides consume the fingerprints."""
-    from gmall_realtime2021_spark.operators.dedup import release_caches
-
-    plan = _plan(spark, "video_fingerprint_pairs")
-    release_caches()
-    assert "CartesianProduct" not in plan and "SortMergeJoin" not in plan
-    assert len(re.findall(r"InMemoryTableScan", plan)) >= 5
-
-
-def test_video_dedup_incremental_probe_shape(spark):
-    """The incremental video probe is the two-sided band join at
+@pytest.mark.parametrize(
+    "name", ["image_dedup_incremental", "audio_dedup_incremental", "video_dedup_incremental"]
+)
+def test_media_dedup_incremental_probe_shape(spark, name):
+    """An incremental media probe is the two-sided band join at
     distinct-fingerprint grain: no cartesian anywhere, and the shared
     fingerprint cache feeds the incoming side, the index side, and
     the final left join — payload hashing runs once. (The final
@@ -587,7 +579,7 @@ def test_video_dedup_incremental_probe_shape(spark):
     with the delivery, not the index.)"""
     from gmall_realtime2021_spark.operators.dedup import release_caches
 
-    plan = _plan(spark, "video_dedup_incremental")
+    plan = _plan(spark, name)
     release_caches()
     assert "CartesianProduct" not in plan
     assert len(re.findall(r"InMemoryTableScan", plan)) >= 3

@@ -980,6 +980,15 @@ def test_bm25_equals_bruteforce(spark, docs):
     assert got == want
 
 
+def _arrow_doc_dl(docs):
+    """``(dl,)`` from the Arrow tokenize pass ``doc_postings`` uses
+    (same dl>0 gate): the spec ``doc_dl_expr`` is pinned against."""
+    from gmall_realtime2021_spark.functions.text_arrow import token_tf_arrow
+
+    tt = docs.select(token_tf_arrow(F.col("text")).alias("tt"))
+    return tt.filter(F.col("tt.dl") > 0).select(F.col("tt.dl").alias("dl"))
+
+
 @pytest.mark.slow
 @given(
     docs=st.lists(st.lists(st.sampled_from("abcdef"), min_size=0, max_size=10), min_size=3, max_size=12)
@@ -987,7 +996,7 @@ def test_bm25_equals_bruteforce(spark, docs):
 @settings(**SETTINGS)
 def test_bm25_per_doc_dl_stats_path_is_value_identical(spark, docs):
     """r13-opt internals pin: ``bm25_micro``'s two corpus-stats paths —
-    the batch plans' pre-explode ``doc_dl`` frame vs the stored-index
+    a per-doc ``dl`` frame (the Arrow spec above) vs the stored-index
     default (distinct doc set re-derived from the postings) — must
     score every (query, doc) pair to the SAME nano-unit micro. This is
     the invariant that lets the incrementally-maintained postings
@@ -995,7 +1004,6 @@ def test_bm25_per_doc_dl_stats_path_is_value_identical(spark, docs):
     stats branch was re-keyed off the per-doc frame."""
     from gmall_realtime2021_spark.operators.retrieval import (
         bm25_micro,
-        doc_dl,
         doc_postings,
         query_terms,
     )
@@ -1010,7 +1018,7 @@ def test_bm25_per_doc_dl_stats_path_is_value_identical(spark, docs):
     }
     via_doc_dl = {
         (r.q_id, r.c_id): r.micro
-        for r in bm25_micro(postings, qterms, per_doc_dl=doc_dl(cdf)).collect()
+        for r in bm25_micro(postings, qterms, per_doc_dl=_arrow_doc_dl(cdf)).collect()
     }
     assert via_doc_dl == via_postings
 
@@ -1026,12 +1034,12 @@ def test_doc_dl_expr_is_value_identical_to_arrow_doc_dl(spark, strings):
     bigrams) — i.e. the same per-doc token count AND the same dl>0
     document gate. It must also equal len(py_tokenize(s)) directly."""
     from gmall_realtime2021_spark.functions.text import py_tokenize
-    from gmall_realtime2021_spark.operators.retrieval import doc_dl, doc_dl_expr
+    from gmall_realtime2021_spark.operators.retrieval import doc_dl_expr
 
     sdf = spark.createDataFrame(
         [(i, s) for i, s in enumerate(strings)], "doc_id long, text string"
     )
-    via_arrow = sorted(r.dl for r in doc_dl(sdf).collect())
+    via_arrow = sorted(r.dl for r in _arrow_doc_dl(sdf).collect())
     via_expr = sorted(r.dl for r in doc_dl_expr(sdf).collect())
     want = sorted(
         n for n in (len(py_tokenize(s)) for s in strings if s is not None) if n > 0

@@ -761,7 +761,7 @@ def test_phash_index_sink_incremental_equals_batch(spark, tmp_path):
     from gmall_realtime2021_spark.multimodal import synthesize_media
     from gmall_realtime2021_spark.multimodal.phash import image_dhash
     from gmall_realtime2021_spark.operators.dedup import hamming_band_pairs
-    from gmall_realtime2021_spark.plans.images import IMG_MAX_HAMMING
+    from gmall_realtime2021_spark.plans.media_dedup import MEDIA_MAX_HAMMING
     from gmall_realtime2021_spark.streaming.sinks import phash_index_sink
 
     base = "a quick brown fox jumps over the lazy dog and keeps running " * 3
@@ -780,7 +780,7 @@ def test_phash_index_sink_incremental_equals_batch(spark, tmp_path):
         return {
             (r.a, r.b, r.hamming)
             for r in hamming_band_pairs(
-                fp, max_hamming=IMG_MAX_HAMMING, id_col="media_id", fp_col="dhash", bits=64
+                fp, max_hamming=MEDIA_MAX_HAMMING, id_col="media_id", fp_col="dhash", bits=64
             ).collect()
         }
 
@@ -811,7 +811,7 @@ def test_phash_index_sink_through_real_stream(spark, tmp_path):
     from gmall_realtime2021_spark.multimodal import synthesize_media
     from gmall_realtime2021_spark.multimodal.phash import image_dhash
     from gmall_realtime2021_spark.operators.dedup import hamming_band_pairs
-    from gmall_realtime2021_spark.plans.images import IMG_MAX_HAMMING
+    from gmall_realtime2021_spark.plans.media_dedup import MEDIA_MAX_HAMMING
     from gmall_realtime2021_spark.sources import file_stream
     from gmall_realtime2021_spark.streaming.sinks import phash_index_sink
 
@@ -853,7 +853,7 @@ def test_phash_index_sink_through_real_stream(spark, tmp_path):
         return {
             (r.a, r.b, r.hamming)
             for r in hamming_band_pairs(
-                fp, max_hamming=IMG_MAX_HAMMING, id_col="media_id", fp_col="dhash", bits=64
+                fp, max_hamming=MEDIA_MAX_HAMMING, id_col="media_id", fp_col="dhash", bits=64
             ).collect()
         }
 

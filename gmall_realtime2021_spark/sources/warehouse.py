@@ -69,6 +69,34 @@ Crash windows under this scheme are all benign by construction:
   a pre-planned reader's path can never be silently re-populated
   with different rows.
 
+The commit sequence
+-------------------
+
+Every writer that produces a generation — an ensure's (re)build, a
+bucketed or IVF compaction, a day upsert, a day expiry — runs the
+same steps under the family's maintenance lock:
+
+1. :func:`_begin_generation` names the next generation, THEN sweeps
+   unlisted crash debris (a failed attempt's number is never
+   reassigned);
+2. the caller writes the new generation beside the live one — the
+   bucketed families through the one writer :func:`_write_bucketed`
+   — and :func:`_carry_over` hardlinks every partition it did not
+   rewrite, plus the metadata sidecars;
+3. :func:`_commit_generation` flips the manifest, re-points a flat
+   catalog table when given one (after the flip, before GC), then
+   GCs retired generations past the grace window and returns their
+   names (the day+user family drops their per-generation tables).
+
+:func:`_ensure_path_family` is the one ensure: it serves an intact
+current generation WITHOUT taking the lock (streaming sinks ensure
+on every micro-batch), and otherwise re-checks under the lock, takes
+the source-fingerprint snapshot BEFORE the source is read, and runs
+the sequence above with the family's write step. Per-generation day
+tables are registered before the flip — by that write step, or by
+the upsert's adoption — so no reader ever resolves a name that does
+not exist.
+
 Other lifecycle invariants (r11/r12, carried forward):
 
 - **Source fingerprint**: each generation records the upstream
@@ -224,27 +252,22 @@ def source_fingerprint(sf_dir: str, table: str) -> dict:
     return {"table": table, "files": files}
 
 
-def _write_fingerprint(
-    dst: str, sf_dir: str, table: str, snapshot: dict | None = None, spec: dict | None = None
-) -> None:
+def _write_fingerprint(dst: str, snapshot: dict, spec: dict | None = None) -> None:
     """Persist a generation's source fingerprint. ``snapshot`` MUST be
-    the fingerprint taken BEFORE the generation's source was read
-    (every ensure path passes it): stamping a freshly-computed
-    fingerprint after a long materialization would, if the upstream
-    fixture was regenerated mid-write, label a generation built from
-    the OLD bytes with the NEW files' identity — the staleness gate
-    would then never fire (ADVICE r11). ``spec`` records the PHYSICAL
+    the fingerprint taken BEFORE the generation's source was read:
+    stamping a freshly-computed fingerprint after a long
+    materialization would, if the upstream fixture was regenerated
+    mid-write, label a generation built from the OLD bytes with the
+    NEW files' identity — the staleness gate would then never fire
+    (ADVICE r11). ``spec`` records the PHYSICAL
     layout contract (bucket key, sort columns, bucket count)
     alongside the source identity: adopting on-disk files under a
     DIFFERENT spec than they were written with would let a merge join
     or range window claim an ordering the files don't have — silently
     wrong results — so a spec change forces a rebuild exactly like a
     source change."""
-    fp = source_fingerprint(sf_dir, table) if snapshot is None else snapshot
-    if spec is not None:
-        fp = {**fp, "spec": spec}
     with open(os.path.join(dst, _FP_NAME), "w") as fh:
-        json.dump(fp, fh)
+        json.dump(snapshot if spec is None else {**snapshot, "spec": spec}, fh)
 
 
 def _layout_intact(dst: str, sf_dir: str, table: str, spec: dict | None = None) -> bool:
@@ -372,9 +395,9 @@ def _sweep_unlisted_gens(root: str) -> None:
     while we hold the lock no other writer can be mid-build, so an
     unlisted generation is crash debris by construction — the
     invariant the r12 review demanded of every sweep on a concurrent
-    path. Writers pick their next generation NAME before sweeping, so
-    a failed attempt's number is never reassigned (the never-reuse
-    guarantee holds even for debris)."""
+    path. :func:`_begin_generation` picks the next generation NAME
+    before sweeping, so a failed attempt's number is never reassigned
+    (the never-reuse guarantee holds even for debris)."""
     m = _manifest(root)
     listed = set((m or {}).get("generations", {}))
     cur = (m or {}).get("current")
@@ -382,6 +405,28 @@ def _sweep_unlisted_gens(root: str) -> None:
         for d in os.listdir(root):
             if _GEN_RE.match(d) and d not in listed and d != cur:
                 shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+
+
+def _begin_generation(root: str) -> str:
+    """Begin half of the commit sequence (module docstring): name the
+    next generation, THEN sweep crash debris; returns the new
+    generation's path. Caller holds the family lock."""
+    os.makedirs(root, exist_ok=True)
+    new_gen = _next_gen_path(root)
+    _sweep_unlisted_gens(root)
+    return new_gen
+
+
+def _commit_generation(root: str, new_gen: str, repoint=None) -> list[str]:
+    """Commit half of the commit sequence (module docstring): flip the
+    manifest to ``new_gen``, run ``repoint`` (a flat catalog table's
+    re-point: after the flip, before its old generation can be GC'd),
+    then GC; returns the removed generation names. Caller holds the
+    family lock."""
+    _flip_manifest(root, os.path.basename(new_gen))
+    if repoint is not None:
+        repoint()
+    return _gc_generations(root)
 
 
 def _family_root_of(path: str) -> str:
@@ -417,15 +462,24 @@ def _link_tree(src: str, dst: str) -> None:
                 shutil.copy2(s, d)
 
 
-def _copy_sidecars(src_gen: str, dst_gen: str, names: tuple[str, ...] = ("_SUCCESS", _FP_NAME)) -> None:
-    """Byte-COPY (never hardlink) the small metadata sidecars into a
-    new generation: sidecars are occasionally rewritten in place
-    (spec restamp), and a shared inode would silently edit the
-    retired generation a pre-planned reader is still trusting."""
-    for n in names:
-        s = os.path.join(src_gen, n)
-        if os.path.isfile(s):
-            shutil.copy2(s, os.path.join(dst_gen, n))
+def _carry_over(cur: str, new_gen: str, prefix: str, drop: frozenset[str] = frozenset()) -> None:
+    """Carry the unchanged state of ``cur`` into ``new_gen``: every
+    ``prefix`` partition dir that ``new_gen`` does not already hold
+    (it was rewritten) and that is not in ``drop`` (an expired day, a
+    compacted cell) rides across by :func:`_link_tree`; then each metadata sidecar
+    ``new_gen`` lacks (``_SUCCESS`` when Spark did not write it, the
+    source fingerprint — expiry and upserts are derived state) is
+    byte-COPIED, never hardlinked: sidecars are occasionally
+    rewritten in place (spec restamp), and a shared inode would
+    silently edit the retired generation a pre-planned reader is
+    still trusting."""
+    have = set(os.listdir(new_gen))
+    for d in os.listdir(cur):
+        if d.startswith(prefix) and d not in have and d not in drop:
+            _link_tree(os.path.join(cur, d), os.path.join(new_gen, d))
+    for n in ("_SUCCESS", _FP_NAME):
+        if n not in have and os.path.isfile(os.path.join(cur, n)):
+            shutil.copy2(os.path.join(cur, n), os.path.join(new_gen, n))
 
 # ---------------------------------------------------------------------------
 # Maintenance writer lock: single-writer per family, cross-process AND
@@ -662,34 +716,101 @@ def gc_layout_generations(spark: SparkSession, sf_dir: str) -> dict[str, list[st
 
 
 # ---------------------------------------------------------------------------
+# The one ensure (every family, path-served or catalog-served)
+# ---------------------------------------------------------------------------
+
+
+def _ensure_path_family(
+    sf_dir: str, alias: str, source_table: str, write_gen, spec: dict | None = None, on_gc=None
+) -> str:
+    """The one ensure every family goes through: serve the intact,
+    fingerprint-fresh (and, when ``spec`` is given, spec-stamped)
+    CURRENT generation without taking the lock; otherwise re-check
+    under the family lock (a peer may have materialized while we
+    waited) and build a fresh generation by the commit sequence of
+    the module docstring, with ``write_gen(new_gen_path)`` as the
+    write step. ``on_gc`` receives the generations the commit
+    removed. Returns the CURRENT generation path — the handle every
+    reader scans; holding it across a later maintenance flip is the
+    snapshot semantics (the retired generation stays intact for the
+    GC grace window)."""
+    root = os.path.join(_root(), _tag(sf_dir), alias)
+    _migrate_legacy_layout(root)
+    gen = _current_gen(root)
+    if gen is not None and _layout_intact(gen, sf_dir, source_table, spec=spec):
+        return gen
+    with _maintenance_lock(root):
+        gen = _current_gen(root)  # double-checked under the lock
+        if gen is not None and _layout_intact(gen, sf_dir, source_table, spec=spec):
+            return gen
+        new_gen = _begin_generation(root)
+        # fingerprint snapshot precedes the read: see _write_fingerprint
+        snap = source_fingerprint(sf_dir, source_table)
+        write_gen(new_gen)
+        _write_fingerprint(new_gen, snap, spec=spec)
+        removed = _commit_generation(root, new_gen)
+        if on_gc is not None:
+            on_gc(removed)
+        return new_gen
+
+
+# ---------------------------------------------------------------------------
 # Bucketed catalog tables (facts + events-by-user)
 # ---------------------------------------------------------------------------
 
 
-def _adopt_bucketed_table(
-    spark: SparkSession, name: str, location: str, key: str, sort_cols: tuple[str, ...] | None = None
+def _bucket_spec(key: str, sort_cols: tuple[str, ...] | None = None) -> dict:
+    """A bucketed family's physical contract — the dict the writer,
+    the adoption DDL and the fingerprint's spec stamp all read."""
+    return {"bucket_key": key, "sort": list(sort_cols or (key,)), "n_buckets": N_BUCKETS}
+
+
+def _write_bucketed(
+    spark: SparkSession, df: DataFrame, table: str, spec: dict, gen: str | None = None
 ) -> None:
+    """The one bucketed writer: ``df`` repartitioned on the bucket
+    key first, so each bucket (per ``spec["partition"]`` value, when
+    the spec has one) is exactly ONE sorted file — the shape that
+    lets the scan expose a per-bucket sort order and the merge join
+    skip both the exchange AND the sort. With ``gen`` the write
+    (re)creates ``table`` as an external table over that new
+    generation; without it, it appends to ``table``'s current files.
+    Spark validates an append's bucket spec — sort columns included —
+    against the table and raises on a mismatch."""
+    key = spec["bucket_key"]
+    w = df.repartition(N_BUCKETS, F.col(key)).write
+    if "partition" in spec:
+        w = w.partitionBy(spec["partition"])
+    w = w.bucketBy(N_BUCKETS, key).sortBy(*spec["sort"]).format("parquet")
+    if gen is None:
+        w.mode("append").saveAsTable(table)
+    else:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        w.option("path", gen).mode("overwrite").saveAsTable(table)
+
+
+def _adopt_bucketed_table(spark: SparkSession, name: str, location: str, spec: dict) -> None:
     """Register ``name`` OVER an existing bucketed generation on disk —
     the cross-session path (ADVICE r10 medium): the catalog entry died
     with its session, the files (including appended batches and their
     replay markers) did not. Spark recovers each file's bucket id from
     its name, so the join-elision property carries over intact. The
     SORTED BY clause must match the spec the files were written with
-    (the spec-stamped fingerprint gates that upstream)."""
-    sort_cols = sort_cols or (key,)
+    (the spec-stamped fingerprint gates that upstream). A partitioned
+    spec adds PARTITIONED BY and filesystem partition recovery."""
     schema = spark.read.parquet(location).schema
     cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-    sort_sql = ", ".join(sort_cols)
+    part = f"PARTITIONED BY ({spec['partition']}) " if "partition" in spec else ""
     spark.sql(
-        f"CREATE TABLE {name} ({cols}) USING parquet "
-        f"CLUSTERED BY ({key}) SORTED BY ({sort_sql}) INTO {N_BUCKETS} BUCKETS "
-        f"LOCATION '{location}'"
+        f"CREATE TABLE {name} ({cols}) USING parquet {part}"
+        f"CLUSTERED BY ({spec['bucket_key']}) SORTED BY ({', '.join(spec['sort'])}) "
+        f"INTO {N_BUCKETS} BUCKETS LOCATION '{location}'"
     )
+    if part:
+        spark.catalog.recoverPartitions(name)
 
 
-def _repoint_table(
-    spark: SparkSession, name: str, gen: str, key: str, sort_cols: tuple[str, ...]
-) -> None:
+def _repoint_table(spark: SparkSession, name: str, gen: str, spec: dict) -> None:
     """Point the serving table at ``gen`` with NO drop window: if the
     table exists elsewhere, one ``ALTER TABLE … SET LOCATION`` (a
     single catalog operation that preserves the bucket spec — a
@@ -702,7 +823,7 @@ def _repoint_table(
             spark.sql(f"ALTER TABLE {name} SET LOCATION '{gen}'")
             spark.catalog.refreshTable(name)
     else:
-        _adopt_bucketed_table(spark, name, gen, key, sort_cols=sort_cols)
+        _adopt_bucketed_table(spark, name, gen, spec)
 
 
 def _ensure_bucketed(
@@ -723,51 +844,22 @@ def _ensure_bucketed(
     catalog entry (new session) is ADOPTED, never overwritten —
     streaming-ingested batches survive; anything else (no current
     generation, regenerated upstream fixture, changed spec)
-    re-materializes from the lake into a NEW generation under the
-    family lock. The write repartitions by the bucket column first so
-    each bucket is exactly ONE file — the shape that lets the scan
-    expose a per-bucket sort order and the merge join skip both the
-    exchange AND the sort.
+    re-materializes from the lake into a NEW generation through
+    :func:`_ensure_path_family` and :func:`_write_bucketed`. That
+    write drops a registered table first: its files are
+    stale/wrong-spec, and serving them would be silently wrong, so
+    that drop window is correctness, not a swap artifact.
     """
     tag = _tag(sf_dir)
     alias = alias or source_table
-    sort_cols = sort_cols or (key,)
-    spec = {"bucket_key": key, "sort": list(sort_cols), "n_buckets": N_BUCKETS}
+    spec = _bucket_spec(key, sort_cols)
     name = f"wh_{alias}_{tag}"
-    root = os.path.join(_root(), tag, alias)
-    _migrate_legacy_layout(root)
-    gen = _current_gen(root)
-    if gen is None or not _layout_intact(gen, sf_dir, source_table, spec=spec):
-        with _maintenance_lock(root):
-            # double-checked: a peer may have materialized while we
-            # waited on the lock
-            gen = _current_gen(root)
-            if gen is None or not _layout_intact(gen, sf_dir, source_table, spec=spec):
-                if spark.catalog.tableExists(name):
-                    # the registered files are stale/wrong-spec: serving
-                    # them would be silently wrong, so a drop window
-                    # here is correctness, not a swap artifact
-                    spark.sql(f"DROP TABLE {name}")
-                os.makedirs(root, exist_ok=True)
-                new_gen = _next_gen_path(root)
-                _sweep_unlisted_gens(root)
-                # fingerprint snapshot precedes the read: see _write_fingerprint
-                snap = source_fingerprint(sf_dir, source_table)
-                (
-                    load(spark, sf_dir, source_table)
-                    .repartition(N_BUCKETS, F.col(key))
-                    .write.bucketBy(N_BUCKETS, key)
-                    .sortBy(*sort_cols)
-                    .option("path", new_gen)
-                    .mode("overwrite")
-                    .format("parquet")
-                    .saveAsTable(name)
-                )
-                _write_fingerprint(new_gen, sf_dir, source_table, snapshot=snap, spec=spec)
-                _flip_manifest(root, os.path.basename(new_gen))
-                _gc_generations(root)
-                gen = new_gen
-    _repoint_table(spark, name, gen, key, sort_cols)
+
+    def _write(new_gen: str) -> None:
+        _write_bucketed(spark, load(spark, sf_dir, source_table), name, spec, gen=new_gen)
+
+    gen = _ensure_path_family(sf_dir, alias, source_table, _write, spec=spec)
+    _repoint_table(spark, name, gen, spec)
     return name
 
 
@@ -884,7 +976,7 @@ def append_bucketed_batch(
     # before a FOREIGN process compacted would otherwise append into
     # the retired generation — rows invisible to current readers and
     # silently lost at its GC (r13 self-review). Repoint first.
-    sort_cols = sort_cols or (key,)
+    spec = _bucket_spec(key, sort_cols)
     # the family lock serializes this append with maintenance: an
     # append racing a compaction could commit files AFTER the
     # compaction listed its input — the rewrite would then miss the
@@ -895,21 +987,14 @@ def append_bucketed_batch(
     with _maintenance_lock(root):
         cur = _current_gen(root)
         if cur is not None and os.path.abspath(location) != os.path.abspath(cur):
-            _repoint_table(spark, table, cur, key, sort_cols)
+            _repoint_table(spark, table, cur, spec)
             location = cur
         guard_dir = os.path.join(root, "_ingest")
         os.makedirs(guard_dir, exist_ok=True)
         skip, lineage = _replay_guard_skip(guard_dir, batch_id, spark, sink_name)
         if skip:
             return False
-        (
-            batch_df.repartition(N_BUCKETS, F.col(key))
-            .write.bucketBy(N_BUCKETS, key)
-            .sortBy(*sort_cols)
-            .mode("append")
-            .format("parquet")
-            .saveAsTable(table)
-        )
+        _write_bucketed(spark, batch_df, table, spec)
         # foreachBatch hands us a CLONED session: its write invalidates
         # its own relation cache but not the parent session's cached
         # file listing — a reader that counted the table before the
@@ -932,16 +1017,16 @@ def compact_bucketed_table(
     :func:`rebuild_bucketed_facts`, resets to upstream state instead).
 
     Concurrency contract (r13, VERDICT r12 item #1): compaction is
-    INVISIBLE to readers. The rewrite lands beside the live
-    generation, the manifest flips atomically, and the serving table
-    re-points in one ``ALTER TABLE … SET LOCATION`` — there is no
-    DROP window, and a scan planned against the old generation keeps
-    its (retired but intact) files until the GC grace expires. A
-    failure anywhere before the flip leaves an unlisted generation
-    the next writer sweeps; the live table is never touched. The
-    family lock is held for the whole write-flip-GC span and released
-    on every exit path (ADVICE r12 medium #1). Returns the data-file
-    count of the new generation (== the number of non-empty buckets).
+    INVISIBLE to readers. It runs the commit sequence of the module
+    docstring, re-pointing the serving table in one ``ALTER TABLE …
+    SET LOCATION`` between the flip and GC — there is no DROP window,
+    and a scan planned against the old generation keeps its (retired
+    but intact) files until the GC grace expires. A failure anywhere
+    before the flip leaves an unlisted generation the next writer
+    sweeps; the live table is never touched, and the family lock is
+    released on every exit path (ADVICE r12 medium #1). Returns the
+    data-file count of the new generation (== the number of non-empty
+    buckets).
 
     The carried fingerprint re-stamps the spec to what this
     compaction actually wrote: copying the old spec would let a
@@ -954,7 +1039,7 @@ def compact_bucketed_table(
     """
     location = _table_location(spark, table).rstrip("/")
     root = _family_root_of(location)
-    sort_cols = sort_cols or (key,)
+    spec = _bucket_spec(key, sort_cols)
     tmp_name = f"{table}__compact"
     with _maintenance_lock(root):
         # re-resolve under the lock: a foreign writer may have flipped
@@ -964,11 +1049,9 @@ def compact_bucketed_table(
         # self-review)
         cur = _current_gen(root)
         if cur is not None and os.path.abspath(location) != os.path.abspath(cur):
-            _repoint_table(spark, table, cur, key, sort_cols)
+            _repoint_table(spark, table, cur, spec)
             location = cur
-        new_gen = _next_gen_path(root)
-        _sweep_unlisted_gens(root)
-        spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
+        new_gen = _begin_generation(root)
         # Read the files as a PLAIN parquet path, not through the
         # table: against the catalog table the optimizer drops the
         # repartition as redundant (the bucket spec already
@@ -979,28 +1062,14 @@ def compact_bucketed_table(
         # instead of 16). The path read carries no bucket metadata, so
         # the explicit repartition survives and each write task holds
         # exactly one bucket.
-        (
-            spark.read.parquet(location)
-            .repartition(N_BUCKETS, F.col(key))
-            .write.bucketBy(N_BUCKETS, key)
-            .sortBy(*sort_cols)
-            .option("path", new_gen)
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(tmp_name)
-        )
+        _write_bucketed(spark, spark.read.parquet(location), tmp_name, spec, gen=new_gen)
         spark.sql(f"DROP TABLE {tmp_name}")  # external: the generation's files stay
         old_fp = os.path.join(location, _FP_NAME)
         if os.path.isfile(old_fp):
             with open(old_fp) as fh:
                 fp = json.load(fh)
-            if "spec" in fp:
-                fp["spec"] = {"bucket_key": key, "sort": list(sort_cols), "n_buckets": N_BUCKETS}
-            with open(os.path.join(new_gen, _FP_NAME), "w") as fh:
-                json.dump(fp, fh)
-        _flip_manifest(root, os.path.basename(new_gen))
-        _repoint_table(spark, table, new_gen, key, sort_cols)
-        _gc_generations(root)
+            _write_fingerprint(new_gen, fp, spec=spec if "spec" in fp else None)
+        _commit_generation(root, new_gen, repoint=lambda: _repoint_table(spark, table, new_gen, spec))
     return _data_file_count(new_gen)
 
 
@@ -1033,38 +1102,6 @@ def rebuild_bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 # ---------------------------------------------------------------------------
 
 
-def _ensure_path_family(
-    spark: SparkSession, sf_dir: str, alias: str, source_table: str, write_gen
-) -> str:
-    """Shared ensure for the manifest families served by PATH (no
-    catalog table): resolve the current generation; when it is
-    missing or stale (fingerprint mismatch), materialize a fresh
-    generation under the family lock via ``write_gen(new_gen_path)``
-    and flip. Returns the CURRENT generation path — the handle every
-    reader scans; holding it across a later maintenance flip is the
-    snapshot semantics (the retired generation stays intact for the
-    GC grace window)."""
-    root = os.path.join(_root(), _tag(sf_dir), alias)
-    _migrate_legacy_layout(root)
-    gen = _current_gen(root)
-    if gen is not None and _layout_intact(gen, sf_dir, source_table):
-        return gen
-    with _maintenance_lock(root):
-        gen = _current_gen(root)  # double-checked under the lock
-        if gen is not None and _layout_intact(gen, sf_dir, source_table):
-            return gen
-        os.makedirs(root, exist_ok=True)
-        new_gen = _next_gen_path(root)
-        _sweep_unlisted_gens(root)
-        # fingerprint snapshot precedes the read: see _write_fingerprint
-        snap = source_fingerprint(sf_dir, source_table)
-        write_gen(new_gen)
-        _write_fingerprint(new_gen, sf_dir, source_table, snapshot=snap)
-        _flip_manifest(root, os.path.basename(new_gen))
-        _gc_generations(root)
-        return new_gen
-
-
 def ensure_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """Materialize ``events`` date-partitioned (hive-style
     ``event_date=YYYY-MM-DD`` directories, one file per day via a
@@ -1086,7 +1123,7 @@ def ensure_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
             "overwrite"
         ).parquet(new_gen)
 
-    return _ensure_path_family(spark, sf_dir, "events", "events", _write)
+    return _ensure_path_family(sf_dir, "events", "events", _write)
 
 
 def read_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1124,21 +1161,15 @@ def upsert_event_days(spark: SparkSession, sf_dir: str, batch_df: DataFrame, bat
         batch_df = batch_df.withColumn("event_date", F.to_date("ts"))
     with _maintenance_lock(root):
         cur = _current_gen(root)  # re-resolve under the lock
-        new_gen = _next_gen_path(root)
-        _sweep_unlisted_gens(root)
+        new_gen = _begin_generation(root)
         (
             batch_df.repartition(F.col("event_date"))
             .write.partitionBy("event_date")
             .mode("overwrite")
             .parquet(new_gen)
         )
-        written = {d for d in os.listdir(new_gen) if d.startswith("event_date=")}
-        for d in os.listdir(cur):
-            if d.startswith("event_date=") and d not in written:
-                _link_tree(os.path.join(cur, d), os.path.join(new_gen, d))
-        _copy_sidecars(cur, new_gen, names=(_FP_NAME,))  # _SUCCESS written by Spark
-        _flip_manifest(root, os.path.basename(new_gen))
-        _gc_generations(root)
+        _carry_over(cur, new_gen, "event_date=")
+        _commit_generation(root, new_gen)
     return new_gen
 
 
@@ -1189,16 +1220,10 @@ def expire_event_days(spark: SparkSession, sf_dir: str, before: str) -> list[str
                 f"day partitions and leave an unreadable empty layout; "
                 f"refusing — use rebuild (delete the layout family dir) to reset instead"
             )
-        new_gen = _next_gen_path(root)
-        _sweep_unlisted_gens(root)
+        new_gen = _begin_generation(root)
         os.makedirs(new_gen)
-        for day in days:
-            if day not in doomed:
-                d = f"event_date={day}"
-                _link_tree(os.path.join(cur, d), os.path.join(new_gen, d))
-        _copy_sidecars(cur, new_gen)  # _SUCCESS + fingerprint carry over
-        _flip_manifest(root, os.path.basename(new_gen))
-        _gc_generations(root)
+        _carry_over(cur, new_gen, "event_date=", drop=frozenset(f"event_date={d}" for d in doomed))
+        _commit_generation(root, new_gen)
     return doomed
 
 
@@ -1230,7 +1255,7 @@ def ensure_split_documents(spark: SparkSession, sf_dir: str) -> str:
             .parquet(new_gen)
         )
 
-    return _ensure_path_family(spark, sf_dir, "documents_split", "documents", _write)
+    return _ensure_path_family(sf_dir, "documents_split", "documents", _write)
 
 
 def read_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1265,7 +1290,7 @@ def ensure_ivf_embeddings(spark: SparkSession, sf_dir: str) -> str:
             new_gen
         )
 
-    return _ensure_path_family(spark, sf_dir, "embeddings_ivf", "embeddings", _write)
+    return _ensure_path_family(sf_dir, "embeddings_ivf", "embeddings", _write)
 
 
 def read_ivf_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1298,15 +1323,13 @@ def compact_ivf_cells(
     ``max_files_per_cell`` parquet files is rewritten to a single
     file. Returns the number of cells compacted.
 
-    Mechanics (r13): the fragmented cells' rows are written fresh
-    into a NEW generation (one file per cell via a cell repartition);
-    every untouched cell rides across as a HARDLINK — cost ∝ the
-    fragmented cells' bytes plus a metadata op per untouched file,
-    never the index — and the manifest flips atomically. Readers are
-    never aware: a scan planned against the old generation keeps its
-    intact files for the GC grace window, a scan planned after the
-    flip reads the compacted cells; there is no per-cell swap window
-    at all (the pre-r13 tomb dance is gone). The replay markers
+    Mechanics (r13): the commit sequence of the module docstring,
+    whose write step rewrites the fragmented cells' rows (one file
+    per cell via a cell repartition) while every untouched cell
+    rides across as a HARDLINK — cost ∝ the fragmented cells' bytes
+    plus a metadata op per untouched file, never the index. Readers
+    are never aware: there is no per-cell swap window at all (the
+    pre-r13 tomb dance is gone). The replay markers
     (``_ingest``) live at the family ROOT, outside any generation, so
     ingest idempotence survives compaction untouched.
     """
@@ -1317,8 +1340,7 @@ def compact_ivf_cells(
         frag = _fragmented_cells(gen, max_files_per_cell)
         if not frag:
             return 0
-        new_gen = _next_gen_path(root)
-        _sweep_unlisted_gens(root)
+        new_gen = _begin_generation(root)
         (
             spark.read.parquet(gen)
             .filter(F.col("cell").isin(frag))
@@ -1327,13 +1349,8 @@ def compact_ivf_cells(
             .mode("overwrite")
             .parquet(new_gen)
         )
-        frag_dirs = {f"cell={j}" for j in frag}
-        for d in os.listdir(gen):
-            if d.startswith("cell=") and d not in frag_dirs:
-                _link_tree(os.path.join(gen, d), os.path.join(new_gen, d))
-        _copy_sidecars(gen, new_gen, names=(_FP_NAME,))  # _SUCCESS written by Spark
-        _flip_manifest(root, os.path.basename(new_gen))
-        _gc_generations(root)
+        _carry_over(gen, new_gen, "cell=", drop=frozenset(f"cell={j}" for j in frag))
+        _commit_generation(root, new_gen)
     return len(frag)
 
 
@@ -1608,52 +1625,33 @@ def ensure_day_bucketed_events(spark: SparkSession, sf_dir: str) -> str:
     the bucketed twin.
     """
     tag = _tag(sf_dir)
-    spec = _DAY_EVENTS_SPEC
-    root = os.path.join(_root(), tag, DAY_EVENTS_ALIAS)
-    _migrate_legacy_layout(root)
-    gen = _current_gen(root)
-    if gen is None or not _layout_intact(gen, sf_dir, "events", spec=spec):
-        with _maintenance_lock(root):
-            gen = _current_gen(root)
-            if gen is None or not _layout_intact(gen, sf_dir, "events", spec=spec):
-                os.makedirs(root, exist_ok=True)
-                new_gen = _next_gen_path(root)
-                _sweep_unlisted_gens(root)
-                snap = source_fingerprint(sf_dir, "events")
-                name = _day_table_name(tag, new_gen)
-                spark.sql(f"DROP TABLE IF EXISTS {name}")
-                ev = load(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
-                (
-                    ev.repartition(N_BUCKETS, F.col(EVENTS_BUCKET_KEY))
-                    .write.partitionBy("event_date")
-                    .bucketBy(N_BUCKETS, EVENTS_BUCKET_KEY)
-                    .sortBy(*EVENTS_SORT_COLS)
-                    .option("path", new_gen)
-                    .mode("overwrite")
-                    .format("parquet")
-                    .saveAsTable(name)
-                )
-                _write_fingerprint(new_gen, sf_dir, "events", snapshot=snap, spec=spec)
-                _flip_manifest(root, os.path.basename(new_gen))
-                _drop_day_tables(spark, tag, _gc_generations(root))
-                gen = new_gen
+
+    def _write(new_gen: str) -> None:
+        ev = load(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
+        _write_bucketed(spark, ev, _day_table_name(tag, new_gen), _DAY_EVENTS_SPEC, gen=new_gen)
+
+    gen = _ensure_path_family(
+        sf_dir,
+        DAY_EVENTS_ALIAS,
+        "events",
+        _write,
+        spec=_DAY_EVENTS_SPEC,
+        on_gc=lambda removed: _drop_day_tables(spark, tag, removed),
+    )
     name = _day_table_name(tag, gen)
     if not spark.catalog.tableExists(name):
-        _adopt_day_bucketed_table(spark, name, gen)
+        _adopt_bucketed_table(spark, name, gen, _DAY_EVENTS_SPEC)
     return name
 
 
 #: Physical contract of the composed day+user layout.
-_DAY_EVENTS_SPEC = {
-    "bucket_key": EVENTS_BUCKET_KEY,
-    "sort": list(EVENTS_SORT_COLS),
-    "n_buckets": N_BUCKETS,
-    "partition": "event_date",
-}
+_DAY_EVENTS_SPEC = {**_bucket_spec(EVENTS_BUCKET_KEY, EVENTS_SORT_COLS), "partition": "event_date"}
 
 
-def _day_table_name(tag: str, gen_path: str) -> str:
-    num = int(_GEN_RE.match(os.path.basename(gen_path.rstrip("/"))).group(1))
+def _day_table_name(tag: str, gen: str) -> str:
+    """The day+user serving table of generation ``gen`` (a generation
+    path or name)."""
+    num = int(_GEN_RE.match(os.path.basename(gen.rstrip("/"))).group(1))
     return f"wh_{DAY_EVENTS_ALIAS}_{tag}_g{num:07d}"
 
 
@@ -1661,24 +1659,8 @@ def _drop_day_tables(spark: SparkSession, tag: str, removed_gen_names: list[str]
     """Drop the per-generation serving tables of GC'd generations —
     the catalog half of the day+user family's snapshot expiry."""
     for gname in removed_gen_names:
-        m = _GEN_RE.match(gname)
-        if m:
-            spark.sql(f"DROP TABLE IF EXISTS wh_{DAY_EVENTS_ALIAS}_{tag}_g{int(m.group(1)):07d}")
-
-
-def _adopt_day_bucketed_table(spark: SparkSession, name: str, gen: str) -> None:
-    """Register a generation's serving table over its files (the
-    cross-session / post-upsert path): partitioned + clustered DDL,
-    then filesystem partition recovery."""
-    schema = spark.read.parquet(gen).schema
-    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-    sort_sql = ", ".join(EVENTS_SORT_COLS)
-    spark.sql(
-        f"CREATE TABLE {name} ({cols}) USING parquet PARTITIONED BY (event_date) "
-        f"CLUSTERED BY ({EVENTS_BUCKET_KEY}) SORTED BY ({sort_sql}) "
-        f"INTO {N_BUCKETS} BUCKETS LOCATION '{gen}'"
-    )
-    spark.catalog.recoverPartitions(name)
+        if _GEN_RE.match(gname):
+            spark.sql(f"DROP TABLE IF EXISTS {_day_table_name(tag, gname)}")
 
 
 def upsert_day_bucketed_events(
@@ -1700,8 +1682,9 @@ def upsert_day_bucketed_events(
     metadata op per untouched file — never history — and every
     serving property (PartitionFilters pruning, bucket-satisfied
     window distribution) holds on the new generation by construction
-    because each (day, bucket) is written through the same
-    partitionBy+bucketBy writer as the base materialization.
+    because each (day, bucket) is written through the same writer
+    (:func:`_write_bucketed`) as the base materialization; the
+    commit is the module docstring's sequence.
     ``batch_id`` is accepted for foreachBatch wiring symmetry.
     """
     ensure_day_bucketed_events(spark, sf_dir)
@@ -1711,29 +1694,13 @@ def upsert_day_bucketed_events(
         batch_df = batch_df.withColumn("event_date", F.to_date("ts"))
     with _maintenance_lock(root):
         cur = _current_gen(root)
-        new_gen = _next_gen_path(root)
-        _sweep_unlisted_gens(root)
+        new_gen = _begin_generation(root)
         tmp_name = f"wh_{DAY_EVENTS_ALIAS}_{tag}__ingest"
-        spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        (
-            batch_df.repartition(N_BUCKETS, F.col(EVENTS_BUCKET_KEY))
-            .write.partitionBy("event_date")
-            .bucketBy(N_BUCKETS, EVENTS_BUCKET_KEY)
-            .sortBy(*EVENTS_SORT_COLS)
-            .option("path", new_gen)
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(tmp_name)
-        )
+        _write_bucketed(spark, batch_df, tmp_name, _DAY_EVENTS_SPEC, gen=new_gen)
         spark.sql(f"DROP TABLE {tmp_name}")  # external: the files stay
-        written = {d for d in os.listdir(new_gen) if d.startswith("event_date=")}
-        for d in os.listdir(cur):
-            if d.startswith("event_date=") and d not in written:
-                _link_tree(os.path.join(cur, d), os.path.join(new_gen, d))
-        _copy_sidecars(cur, new_gen, names=(_FP_NAME,))  # _SUCCESS written by Spark
+        _carry_over(cur, new_gen, "event_date=")
         name = _day_table_name(tag, new_gen)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        _adopt_day_bucketed_table(spark, name, new_gen)  # registered BEFORE the flip
-        _flip_manifest(root, os.path.basename(new_gen))
-        _drop_day_tables(spark, tag, _gc_generations(root))
+        _adopt_bucketed_table(spark, name, new_gen, _DAY_EVENTS_SPEC)  # registered BEFORE the flip
+        _drop_day_tables(spark, tag, _commit_generation(root, new_gen))
     return name

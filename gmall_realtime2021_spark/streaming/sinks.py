@@ -807,12 +807,18 @@ def payment_enrich_upsert_batch(
        the bucketed layout (users broadcast-semi-joined, window
        exchange-free);
     3. merge-by-pk into the serving store: recomputed payments
-       replace their ``pay_id`` rows, everything else is untouched
-       (the :func:`_replace_dir` swap, ``DimSink.java:78-93``).
+       replace their ``pay_id`` rows, every other row is carried over
+       unchanged (the :func:`_replace_dir` swap,
+       ``DimSink.java:78-93``).
 
-    Returns True if applied, False if skipped as a replay. Work per
-    batch ∝ batch span × affected users' event density — never the
-    store, never history. Delivery: the store-level marker makes
+    Returns True if applied, False if skipped as a replay. The
+    RECOMPUTE (step 2) is ∝ batch span × affected users' event
+    density and never reads history; the MERGE (step 3) is not
+    bounded that way: it anti-joins the recomputed rows against the
+    WHOLE store and rewrites the whole store into a fresh directory,
+    so every batch reads and writes ∝ the store's size, and the
+    bytes written per input byte grow with the store. Delivery: the
+    store-level marker makes
     steady-state replays exact skips; a crash between the layout
     append and the store merge replays into an append-side skip plus
     a recompute against the identical layout state — the recompute is

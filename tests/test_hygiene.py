@@ -42,3 +42,22 @@ def test_equal_oracles_share_one_string():
         if oracle is not plan.oracle:
             apart.append((base, name))
     assert not apart, apart
+
+
+def test_warehouse_commits_and_bucketed_writes_have_one_call_site():
+    """``sources/warehouse.py`` flips a layout family's manifest only in
+    its commit helper and writes bucketed files only in its one
+    bucketed writer, so the generation-commit sequence (lock, name,
+    sweep, write, carry over, flip, GC) cannot be copied out again."""
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)), "gmall_realtime2021_spark", "sources", "warehouse.py"
+    )
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    calls = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            calls[f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)] += 1
+    assert calls["_flip_manifest"] == 1, calls["_flip_manifest"]
+    assert calls["bucketBy"] == 1, calls["bucketBy"]

@@ -421,6 +421,49 @@ def test_maintenance_lock_blocks_recovery_until_writer_dies(spark, tmp_path, mon
     assert W.read_ivf_embeddings(spark, sf_dir).count() > 0
 
 
+def test_ensure_fast_path_takes_no_lock(spark, tmp_path, monkeypatch):
+    """An intact current generation is served WITHOUT touching the
+    family's maintenance lock: streaming sinks ensure the events
+    layout on every micro-batch, so the fast path must never queue
+    behind a maintenance writer. Each of the six ensure families is
+    built once (which does take the lock — the spy is live), then
+    ensured again: no lock is entered, and every call returns the
+    same table name or generation path as the build did."""
+    from gmall_realtime2021_spark.sources import warehouse as W
+
+    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_DIR", str(tmp_path))
+    sf_dir = "/root/testdata/sf0.001"
+    ensures = (
+        W.ensure_bucketed_facts,
+        W.ensure_bucketed_events,
+        W.ensure_day_bucketed_events,
+        W.ensure_partitioned_events,
+        W.ensure_split_documents,
+        W.ensure_ivf_embeddings,
+    )
+    entered = []
+    real = W._maintenance_lock
+
+    def spy(root, *a, **k):
+        entered.append(os.path.basename(root.rstrip("/")))
+        return real(root, *a, **k)
+
+    monkeypatch.setattr(W, "_maintenance_lock", spy)
+    first = [ensure(spark, sf_dir) for ensure in ensures]
+    built = sorted(set(entered))
+    entered.clear()
+    second = [ensure(spark, sf_dir) for ensure in ensures]
+    monkeypatch.setattr(W, "_maintenance_lock", real)
+
+    assert built == sorted(
+        ["orders", "lineitem", "events_by_user", W.DAY_EVENTS_ALIAS, "events", "documents_split", "embeddings_ivf"]
+    )
+    assert entered == [], f"fast path took the lock for {entered}"
+    assert second == first
+    for table in (*first[0], first[1], first[2]):
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 def test_expire_event_days_rejects_malformed_cutoff(spark, tmp_path, monkeypatch):
     """r12 high-effort review: day partitions compare as strings, so a
     non-zero-padded cutoff ('2024-6-1') would silently drop days AFTER

@@ -611,7 +611,6 @@ def np_float32(v: float) -> float:
     return float(np.float32(v))
 
 
-@pytest.mark.slow
 @given(docs=st.lists(st.lists(st.sampled_from("abcdefgh"), min_size=0, max_size=14), min_size=2, max_size=12))
 @settings(**SETTINGS)
 def test_duplicate_span_stats_equals_bruteforce(spark, docs):
@@ -989,7 +988,6 @@ def _arrow_doc_dl(docs):
     return tt.filter(F.col("tt.dl") > 0).select(F.col("tt.dl").alias("dl"))
 
 
-@pytest.mark.slow
 @given(
     docs=st.lists(st.lists(st.sampled_from("abcdef"), min_size=0, max_size=10), min_size=3, max_size=12)
 )
@@ -1023,7 +1021,6 @@ def test_bm25_per_doc_dl_stats_path_is_value_identical(spark, docs):
     assert via_doc_dl == via_postings
 
 
-@pytest.mark.slow
 @given(strings=st.lists(st.one_of(st.none(), TEXT), min_size=1, max_size=25))
 @settings(**SETTINGS)
 def test_doc_dl_expr_is_value_identical_to_arrow_doc_dl(spark, strings):
@@ -1378,7 +1375,6 @@ def test_simhash_summary_matches_pair_graph_components(spark):
     release_caches()
 
 
-@pytest.mark.slow
 def test_layout_lifecycle_randomized_model_check(spark, tmp_path, monkeypatch):
     """Seeded randomized model check of the manifest-generation
     lifecycle on the day-partitioned event log: a 14-op sequence of

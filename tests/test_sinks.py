@@ -1502,7 +1502,6 @@ def test_ivf_index_incremental_ingest(spark, tmp_path, monkeypatch):
         assert qid in hits and abs(hits[qid] - 1.0) < 1e-6
 
 
-@pytest.mark.slow
 def test_ivf_cell_auto_compaction(spark, tmp_path, monkeypatch):
     """IVF cell compaction (r11): appends fragment cells one file per
     batch; past the per-cell threshold the append auto-compacts the

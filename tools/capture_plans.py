@@ -8,7 +8,9 @@ Usage::
     python tools/capture_plans.py before [name ...]
     python tools/capture_plans.py after  [name ...]
 
-With no names, captures every query in bench.py's HEADLINE list.
+With no names, captures every query in bench.py's HEADLINE list. The
+dedup operators' caches are released after each capture, so a dump
+never depends on which plans were captured before it.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
+from gmall_realtime2021_spark.operators.dedup import release_caches  # noqa: E402
 from gmall_realtime2021_spark.plans import get_plans  # noqa: E402
 from gmall_realtime2021_spark.session import get_spark  # noqa: E402
 
@@ -45,6 +48,7 @@ def main() -> None:
         with open(path, "w") as fh:
             fh.write(f"# {name} — explain('formatted') at {sf_dir} ({tag})\n")
             fh.write(formatted)
+        release_caches()
         print(f"wrote {path}")
 
 

@@ -1,27 +1,29 @@
-"""Arrow-batched twin of the fixed-matrix dot products.
+"""Arrow-batched matrix-dot kernel for corpus-sized inputs.
 
 ``operators.similarity`` needs k dot products per row against a
-*fixed* small matrix (LSH hyperplanes, IVF centroids). The expression
-form (k × ``aggregate(zip_with(...))``) runs on Spark's interpreted
-HOF path — ~1 µs per element — which made bucket assignment the
-dominant cost of the embedding operators.
+*fixed* small matrix (LSH hyperplanes, IVF centroids, padded PQ
+codebooks). The expression form (k × ``aggregate(zip_with(...))``)
+runs on Spark's interpreted HOF path — ~1 µs per element — which made
+bucket assignment the dominant cost of the embedding operators over a
+corpus. This UDF computes the same values in one numpy pass.
+Query-sized inputs (the IVF probe side) keep the SQL form from
+``functions/vectors.py`` instead: there the fixed cost of a Python
+worker outweighs the per-element saving.
 
-This UDF computes the same values in one numpy pass. Bit-exactness:
-the engine's portability contract is a *sequential left fold* in
-double (functions/vectors.py); ``np.cumsum(prod, axis=1)[:, -1]`` is
-that exact fold — cumsum's intermediate outputs are the running
-prefix sums, so its last element associates left-to-right, unlike
-``np.dot``'s pairwise/SIMD summation which could differ in the last
-ulp and flip a sign-bit bucket. float32→float64 widening is exact,
-multiplication is correctly rounded in both engines, so Spark, this
-UDF, and DuckDB agree bit-for-bit.
+Bit-exactness: the engine's portability contract is a *sequential
+left fold* in double (functions/vectors.py);
+``np.cumsum(prod, axis=1)[:, -1]`` is that exact fold — cumsum's
+intermediate outputs are the running prefix sums, so its last element
+associates left-to-right, unlike ``np.dot``'s pairwise/SIMD summation
+which could differ in the last ulp and flip a sign-bit bucket.
+float32→float64 widening is exact, multiplication is correctly rounded
+in both engines, so Spark, this UDF, and DuckDB agree bit-for-bit.
 
-Both kernels are returned ``asNondeterministic()`` — values ARE
+The kernel is returned ``asNondeterministic()`` — values ARE
 deterministic; the flag stops Catalyst cloning a kernel under a
-pushed/substituted predicate (a ``filter(cosine >= tau)`` above the
-pair-dot projection was re-deriving the dot per candidate pair — the
-plan audit's duplicated-kernel detector found 3 such plans in r06;
-see functions/text_arrow.py for the same contract and rationale).
+pushed/substituted predicate (the plan audit's duplicated-kernel
+detector found 3 such plans in r06; see functions/text_arrow.py for
+the same contract and rationale).
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
-__all__ = ["matrix_dots_arrow", "pair_dot_arrow"]
+__all__ = ["matrix_dots_arrow"]
 
 
 def matrix_dots_arrow(col: Column, matrix: list[list[float]]) -> Column:
@@ -76,32 +78,3 @@ def matrix_dots_arrow(col: Column, matrix: list[list[float]]) -> Column:
         return pd.Series(acc.tolist())
 
     return _f.asNondeterministic()(col)
-
-
-def pair_dot_arrow(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product of two vector columns, as double —
-    the Arrow twin of ``vectors.dot`` for bulk pair verification
-    (candidate cosines after an LSH/IVF candidate join)."""
-
-    @F.pandas_udf(DoubleType())
-    def _f(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        def one(x, y) -> float:
-            xv = np.asarray(x, dtype=np.float64)
-            yv = np.asarray(y, dtype=np.float64)
-            return float(np.cumsum(xv * yv)[-1])
-
-        # batch fast path (see matrix_dots_arrow, incl. the -0.0
-        # sign-bit note): batched cumsum is the verbatim per-row
-        # fold; ragged batches fall back row-at-a-time.
-        try:
-            X = np.stack([np.asarray(x, dtype=np.float64) for x in xs])
-            Y = np.stack([np.asarray(y, dtype=np.float64) for y in ys])
-        except Exception:
-            return pd.Series([one(x, y) for x, y in zip(xs, ys)])
-        if X.ndim != 2 or X.shape != Y.shape:
-            return pd.Series([one(x, y) for x, y in zip(xs, ys)])
-        # batched cumsum along the row is one contiguous pass and the
-        # verbatim per-row fold
-        return pd.Series(np.cumsum(X * Y, axis=1)[:, -1])
-
-    return _f.asNondeterministic()(a, b)

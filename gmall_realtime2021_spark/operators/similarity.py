@@ -2,6 +2,10 @@
 
 Embeddings are ``array<float>`` columns; all arithmetic is JVM-side
 double folds (functions/vectors.py) so results stay oracle-exact.
+Fixed-matrix dots (centroids, hyperplanes, PQ codebooks) over
+corpus-sized inputs come from one Arrow pass
+(functions/vectors_arrow.py); query-sized inputs stay in SQL
+expressions. Every top-k operator ends in the one :func:`_topk` tail.
 
 Scale shapes:
 
@@ -19,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gmall_realtime2021_spark.functions.vectors import dot, norm
+from gmall_realtime2021_spark.functions.vectors import dot, dot_sql, lit_array, norm
 from gmall_realtime2021_spark.functions.vectors_arrow import matrix_dots_arrow
 from gmall_realtime2021_spark.tables import fan_out
 
@@ -67,11 +71,42 @@ def hyperplanes(n_planes: int = 8, dim: int = 64) -> list[list[float]]:
 LSH_PLANES = hyperplanes()
 
 
-def _with_norm(df: DataFrame, vec_col: str, prefix: str) -> DataFrame:
+def _with_norm(df: DataFrame, vec_col: str, prefix: str, *carry: str) -> DataFrame:
+    """``(<prefix>_id, <prefix>_<carry>..., <prefix>_vec, <prefix>_norm)``:
+    the norm is computed once per row, not once per pair."""
     return df.select(
         F.col("vec_id").alias(f"{prefix}_id"),
+        *[F.col(c).alias(f"{prefix}_{c}") for c in carry],
         F.col(vec_col).alias(f"{prefix}_vec"),
-        norm(F.col(vec_col)).alias(f"{prefix}_norm"),
+        norm(vec_col).alias(f"{prefix}_norm"),
+    )
+
+
+def _cosine(a: str, b: str) -> F.Column:
+    """Raw cosine ``dot(<a>_vec, <b>_vec) / (<a>_norm · <b>_norm)`` of
+    two :func:`_with_norm` rows, in the fixed fold order."""
+    return F.expr(f"{dot_sql(a + '_vec', b + '_vec')} / ({a}_norm * {b}_norm)")
+
+
+def _topk(
+    scored: DataFrame,
+    k: int,
+    score: str,
+    *carry: str,
+    ascending: bool = False,
+    long_rank: bool = False,
+) -> DataFrame:
+    """The top-k tail every operator here shares: ``row_number`` per
+    ``query_id`` by ``score`` (ties on ``neighbor_id``), ranks ``<= k``,
+    score rounded to 6 places. Output ``(query_id, neighbor_id,
+    *carry, rank, score)``; ``long_rank`` casts the rank before the
+    filter."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    rank = F.row_number().over(Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id")))
+    return (
+        scored.withColumn("rank", rank.cast("long") if long_rank else rank)
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", *carry, "rank", F.round(score, 6).alias(score))
     )
 
 
@@ -87,14 +122,9 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5, vec_col: str 
     scored = q.join(c).select(
         F.col("q_id").alias("query_id"),
         F.col("c_id").alias("neighbor_id"),
-        (dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
+        _cosine("q", "c").alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _topk(scored, k, "cos")
 
 
 def hard_negative_topk(
@@ -113,20 +143,8 @@ def hard_negative_topk(
     grow. Scale path: swap the brute-force scan for the IVF probe
     (``ivf_topk``) and keep the same label filter on the probe
     output."""
-    q = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("q_id"),
-            F.col("label").alias("q_label"),
-            F.col(vec_col).alias("q_vec"),
-            norm(F.col(vec_col)).alias("q_norm"),
-        )
-    )
-    c = corpus.select(
-        F.col("vec_id").alias("c_id"),
-        F.col("label").alias("c_label"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
-    )
+    q = F.broadcast(_with_norm(queries, vec_col, "q", "label"))
+    c = _with_norm(corpus, vec_col, "c", "label")
     scored = (
         q.join(c)
         .filter(F.col("c_label") != F.col("q_label"))
@@ -134,15 +152,10 @@ def hard_negative_topk(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
             F.col("c_label").alias("neg_label"),
-            (dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
+            _cosine("q", "c").alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "neg_label", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _topk(scored, k, "cos", "neg_label")
 
 
 def centroids(n_cells: int = 16, dim: int = 64) -> list[list[float]]:
@@ -181,17 +194,16 @@ def semantic_dedup_k(n_rows: int, target_cell: int = SEMDEDUP_TARGET_CELL) -> in
 
 def _cell_scores(vec_col: str, cents: list[list[float]] | None = None) -> F.Column:
     """array of (−2·v·cⱼ + ‖cⱼ‖²) — rank-equivalent to squared
-    distance to centroid j (‖v‖² is constant per row). Centroid dots
-    come from the Arrow matrix-dot pass (functions/vectors_arrow.py);
-    the affine map stays JVM-side."""
+    distance to centroid j (‖v‖² is constant per row), for
+    CORPUS-sized inputs: the centroid dots come from one Arrow
+    matrix-dot pass (functions/vectors_arrow.py), the affine map stays
+    JVM-side. Query-sized inputs use the SQL form,
+    :func:`_probe_scores`, which is bit-equal (same fold, same operand
+    order)."""
     cents = cents if cents is not None else IVF_CENTROIDS
-    c2s = [sum(x * x for x in c) for c in cents]
+    c2 = F.expr(lit_array([sum(x * x for x in c) for c in cents]))
     dots = matrix_dots_arrow(F.col(vec_col), cents)
-    return F.transform(
-        dots,
-        lambda d, j: d * F.lit(-2.0)
-        + F.element_at(F.array(*[F.lit(c2) for c2 in c2s]), j + 1),
-    )
+    return F.transform(dots, lambda d, j: d * F.lit(-2.0) + F.element_at(c2, j + 1))
 
 
 def ivf_assign(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -217,46 +229,36 @@ def ivf_assign(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
-def _cell_scores_jvm(vec_col: str) -> F.Column:
-    """JVM-expression twin of :func:`_cell_scores` — the identical
-    sequential-fold dot (``functions/vectors.dot``) and the identical
-    (dot · −2.0 + ‖c‖²) operand order, so scores are bit-equal to the
-    Arrow kernel's and the probe argsort is engine-portable. Used for
-    QUERY-sized inputs where staying whole-stage-codegen matters more
-    than batch throughput — in particular the at-rest IVF path, where
-    a Python UDF on the probe side would disqualify the plan from
-    dynamic partition pruning (Spark's DPP subquery cannot carry a
-    Python UDF)."""
-    return F.array(
-        *[
-            dot(F.col(vec_col), F.array(*[F.lit(x) for x in c])) * F.lit(-2.0) + F.lit(c2)
-            for c, c2 in zip(IVF_CENTROIDS, IVF_C2)
-        ]
+def _probe_scores(vec: str) -> F.Column:
+    """The IVF centroid scores of :func:`_cell_scores` for QUERY-sized
+    inputs, as one SQL expression: per centroid the same
+    sequential-fold dot and the same (dot · −2.0 + ‖c‖²) operand order,
+    so the scores are bit-equal to the Arrow kernel's. It keeps the
+    probe side in whole-stage codegen, and the at-rest IVF plan
+    qualifies for dynamic partition pruning (Spark's DPP subquery
+    cannot carry a Python UDF)."""
+    cells = (
+        f"{dot_sql(vec, lit_array(c))} * -2.0D + {lit_array(c2)}"
+        for c, c2 in zip(IVF_CENTROIDS, IVF_C2)
     )
+    return F.expr(f"array({', '.join(cells)})")
 
 
-def _probe_cells(
-    queries: DataFrame, n_probe: int, vec_col: str, jvm_scores: bool = False
-) -> DataFrame:
-    """Query-side probe set: the ``n_probe`` nearest cells by the
-    portable (score, index)-struct argsort — one exploded row per
-    (query, probed cell), ``(q_id, q_vec, q_norm, cell)``."""
+def _probe_cells(q: DataFrame, n_probe: int, vec: str, *keep: str | F.Column) -> DataFrame:
+    """Query-side probe set, shared by every IVF operator: the
+    ``n_probe`` nearest cells to ``vec`` by the portable (score,
+    index)-struct argsort — one exploded row per (query, probed cell),
+    ``(*keep, cell)``. Raises ``ValueError`` unless ``n_probe`` is in
+    ``[1, n_cells]``."""
     n_cells = len(IVF_CENTROIDS)
     if not 1 <= n_probe <= n_cells:
         raise ValueError(f"n_probe must be in [1, {n_cells}]")
-    scores = _cell_scores_jvm("q_vec") if jvm_scores else _cell_scores("q_vec")
-    q = _with_norm(queries, vec_col, "q").withColumn("scores", scores)
-    idx = F.sequence(F.lit(1), F.lit(n_cells))
-    ranked = F.array_sort(
-        F.transform(
-            idx,
-            lambda i: F.struct(
-                F.element_at(F.col("scores"), i).alias("s"), i.alias("i")
-            ),
-        )
+    probes = F.expr(
+        f"transform(slice(array_sort(transform(sequence(1, {n_cells}),"
+        f" x -> struct(element_at(scores, x) AS s, x AS i))), 1, {n_probe}),"
+        " x -> CAST(x.i AS BIGINT))"
     )
-    probes = F.transform(F.slice(ranked, 1, n_probe), lambda x: x.getField("i").cast("long"))
-    return q.select("q_id", "q_vec", "q_norm", F.explode(probes).alias("cell"))
+    return q.withColumn("scores", _probe_scores(vec)).select(*keep, F.explode(probes).alias("cell"))
 
 
 def ivf_topk_at_rest(
@@ -273,22 +275,17 @@ def ivf_topk_at_rest(
     shape: index cost at ingest, per-query I/O ∝ n_probe/n_cells of
     the corpus. Values identical to :func:`ivf_topk` (same probe
     argsort, same fold order, stored norms bit-equal). The probe side
-    computes its cell scores with JVM expressions
-    (:func:`_cell_scores_jvm`) — bit-equal to the Arrow kernel — so
-    the plan qualifies for DPP (a Python UDF on the filtering side
-    disqualifies the pruning subquery)."""
-    q = _probe_cells(queries, n_probe, vec_col, jvm_scores=True)
+    computes its cell scores as SQL expressions (:func:`_probe_scores`)
+    — bit-equal to the Arrow kernel — so the plan qualifies for DPP (a
+    Python UDF on the filtering side disqualifies the pruning
+    subquery)."""
+    q = _probe_cells(_with_norm(queries, vec_col, "q"), n_probe, "q_vec", "q_id", "q_vec", "q_norm")
     scored = F.broadcast(q).join(corpus_at_rest, "cell").select(
         F.col("q_id").alias("query_id"),
         F.col("vec_id").alias("neighbor_id"),
-        (dot(F.col("q_vec"), F.col(vec_col)) / (F.col("q_norm") * F.col("norm"))).alias("cos"),
+        F.expr(f"{dot_sql('q_vec', vec_col)} / (q_norm * norm)").alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _topk(scored, k, "cos")
 
 
 def train_ivf_centroids(
@@ -357,18 +354,13 @@ def ivf_topk(
     c = c.withColumn("cell", F.array_position("scores", F.array_min("scores"))).drop("scores")
     # Queries: the n_probe nearest cells by score-argsort (shared with
     # the at-rest path so both serve identical probe sets).
-    q = _probe_cells(queries, n_probe, vec_col)
+    q = _probe_cells(_with_norm(queries, vec_col, "q"), n_probe, "q_vec", "q_id", "q_vec", "q_norm")
     scored = F.broadcast(q).join(c, "cell").select(
         F.col("q_id").alias("query_id"),
         F.col("c_id").alias("neighbor_id"),
-        (dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
+        _cosine("q", "c").alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _topk(scored, k, "cos")
 
 
 #: Multi-table LSH for near-dup: 4 tables × 4 planes. One 8-plane
@@ -424,19 +416,18 @@ def embedding_near_dup_pairs(
     sides of the self-join, so an uncached plan runs the Arrow
     matrix-dot pass twice — it is persisted once per query (the
     MinHash signature-table pattern; released via release_caches).
-    (b) Verification computes the dot with the JVM fold, not
-    ``pair_dot_arrow``: the candidate set carries two vectors per
-    pair (~70 MB of Arrow traffic at 137k candidates × 64 dims at
-    sf0.1) and the whole-batch round-trip costs more than the
-    interpreted fold spread across the cluster; values are
-    bit-identical (same sequential left fold).
+    (b) Verification computes the dot with the JVM fold, not an Arrow
+    pair-dot kernel: the candidate set carries two vectors per pair
+    (~70 MB of Arrow traffic at 137k candidates × 64 dims at sf0.1)
+    and the whole-batch round-trip costs more than the interpreted
+    fold spread across the cluster.
     """
     from gmall_realtime2021_spark.operators.dedup import register_cache
 
     # fan_out: the 16 plane-dots per row are the map-side hot path —
     # rebalance the (single-row-group) scan before computing them.
     base = fan_out(emb.select(id_col, vec_col)).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), norm(F.col(vec_col)).alias("nm")
+        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), norm(vec_col).alias("nm")
     )
     buckets = register_cache(
         base.select("id", F.explode(_neardup_band_keys("vec")).alias("bucket"))
@@ -452,7 +443,7 @@ def embedding_near_dup_pairs(
     )
     va = base.select(F.col("id").alias("a"), F.col("vec").alias("va"), F.col("nm").alias("na"))
     vb = base.select(F.col("id").alias("b"), F.col("vec").alias("vb"), F.col("nm").alias("nb"))
-    cos = dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    cos = F.expr(f"{dot_sql('va', 'vb')} / (na * nb)")
     return (
         cand.join(va, "a")
         .join(vb, "b")
@@ -512,15 +503,10 @@ def lsh_bucket_topk(
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            (dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
+            _cosine("q", "c").alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _topk(scored, k, "cos")
 
 
 #: Product-quantization geometry: 64-dim vectors → PQ_M subvectors of
@@ -530,7 +516,6 @@ def lsh_bucket_topk(
 PQ_M = 8
 PQ_K = 16
 PQ_SUBDIM = 8
-PQ_DIM = PQ_M * PQ_SUBDIM
 
 
 def pq_codebooks(m: int = PQ_M, k: int = PQ_K, subdim: int = PQ_SUBDIM) -> list[list[list[float]]]:
@@ -585,10 +570,31 @@ def _pq_scores(dots_col: F.Column, m: int, c2s: list[list[float]]) -> F.Column:
     """Subquantizer ``m``'s K scores (−2·dot + ‖c‖², rank-equivalent
     to squared distance) from the flat M·K dots array."""
     k = len(c2s[m])
-    c2 = F.array(*[F.lit(v) for v in c2s[m]])
+    c2 = F.expr(lit_array(c2s[m]))
     return F.zip_with(
         F.slice(dots_col, m * k + 1, k), c2, lambda d, c: d * F.lit(-2.0) + c
     )
+
+
+def _adc_table(c2s: list[list[float]]) -> F.Column:
+    """A query's flat M·K ADC score table ``qs`` from its ``_qdots``."""
+    return F.flatten(
+        F.array(*[_pq_scores(F.col("_qdots"), m, c2s) for m in range(len(c2s))])
+    ).alias("qs")
+
+
+def _adc_dist(m_count: int, k_count: int) -> F.Column:
+    """``q2 + Σₘ qs[(m−1)·K + codeₘ]``: the ADC lookup-table fold of a
+    corpus row's ``codes`` against its query's ``qs`` table (the lambda
+    touches only attributes)."""
+    lut_terms = F.zip_with(
+        F.col("codes"),
+        F.sequence(F.lit(1), F.lit(m_count)),
+        lambda code, m: F.element_at(
+            F.col("qs"), ((m - F.lit(1)) * F.lit(k_count) + code).cast("int")
+        ),
+    )
+    return F.col("q2") + F.aggregate(lut_terms, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def train_pq_codebooks(
@@ -612,7 +618,7 @@ def train_pq_codebooks(
     at once. Deterministic given data + init (argmin first-index
     tie-break, exact integer-micros summation)."""
     books = [list(map(list, b)) for b in (init or pq_codebooks())]
-    m_count, k_count = len(books), len(books[0])
+    m_count = len(books)
     subdim = len(books[0][0])
     subs = fan_out(emb.select(vec_col)).select(
         F.explode(
@@ -630,13 +636,7 @@ def train_pq_codebooks(
         # centroids: inline the per-m centroid matrix as a nested
         # literal array indexed by m — pure expression, no UDF needed
         # at subdim=8 × K=16 scale.
-        cent_lit = F.array(*[
-            F.array(*[
-                F.array(*[F.lit(x) for x in books[mm][kk]]) for kk in range(k_count)
-            ])
-            for mm in range(m_count)
-        ])
-        my_cents = F.element_at(cent_lit, F.col("m") + 1)
+        my_cents = F.element_at(F.expr(lit_array(books)), F.col("m") + 1)
         dists = F.transform(
             my_cents,
             lambda c: F.aggregate(
@@ -687,7 +687,7 @@ def pq_encode(
     base = fan_out(emb.select(id_col, vec_col)).select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("vec"),
-        dot(F.col(vec_col), F.col(vec_col)).alias("v2"),
+        dot(vec_col, vec_col).alias("v2"),
     )
     # materialize the UDF output as its own column so the M argmins
     # reference an attribute, not M copies of the UDF call
@@ -731,36 +731,16 @@ def pq_adc_topk(
     )
     q = queries.select(
         F.col(id_col).alias("q_id"),
-        dot(F.col(vec_col), F.col(vec_col)).alias("q2"),
+        dot(vec_col, vec_col).alias("q2"),
         matrix_dots_arrow(F.col(vec_col), padded).alias("_qdots"),
     )
-    qscores = q.select(
-        "q_id",
-        "q2",
-        F.flatten(
-            F.array(*[_pq_scores(F.col("_qdots"), m, c2s) for m in range(m_count)])
-        ).alias("qs"),
-    )
-    # Σₘ qs[(m−1)·K + codeₘ] — the lambda touches only attributes
-    lut_terms = F.zip_with(
-        F.col("codes"),
-        F.sequence(F.lit(1), F.lit(m_count)),
-        lambda code, m: F.element_at(
-            F.col("qs"), ((m - F.lit(1)) * F.lit(k_count) + code).cast("int")
-        ),
-    )
-    adist = F.col("q2") + F.aggregate(lut_terms, F.lit(0.0), lambda acc, x: acc + x)
+    qscores = q.select("q_id", "q2", _adc_table(c2s))
     scored = F.broadcast(qscores).join(codes).select(
         F.col("q_id").alias("query_id"),
         F.col("c_id").alias("neighbor_id"),
-        adist.alias("adist"),
+        _adc_dist(m_count, k_count).alias("adist"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("adist", 6).alias("adist"))
-    )
+    return _topk(scored, k, "adist", ascending=True, long_rank=True)
 
 
 def ivf_pq_topk(
@@ -783,7 +763,6 @@ def ivf_pq_topk(
     books = books or PQ_BOOKS
     c2s, padded = _pq_c2(books), _pq_padded(books)
     m_count, k_count = len(books), len(books[0])
-    n_cells = len(IVF_CENTROIDS)
 
     # corpus: coarse cell + PQ codes, both from map-side Arrow passes
     base = fan_out(corpus.select(id_col, vec_col)).select(
@@ -800,49 +779,21 @@ def ivf_pq_topk(
         codes.alias("codes"),
     )
 
-    # queries: n_probe nearest cells (portable struct argsort, as in
-    # ivf_topk) + the flat M·K ADC score table
+    # queries: the shared IVF probe (as in ivf_topk) + the flat M·K
+    # ADC score table
     q0 = queries.select(
         F.col(id_col).alias("q_id"),
-        dot(F.col(vec_col), F.col(vec_col)).alias("q2"),
+        F.col(vec_col).alias("q_vec"),
+        dot(vec_col, vec_col).alias("q2"),
         matrix_dots_arrow(F.col(vec_col), padded).alias("_qdots"),
-        _cell_scores(vec_col).alias("_qivf"),
     )
-    idx = F.sequence(F.lit(1), F.lit(n_cells))
-    ranked = F.array_sort(
-        F.transform(
-            idx,
-            lambda i: F.struct(F.element_at(F.col("_qivf"), i).alias("s"), i.alias("i")),
-        )
-    )
-    probes = F.transform(F.slice(ranked, 1, n_probe), lambda x: x.getField("i").cast("long"))
-    q = q0.select(
-        "q_id",
-        "q2",
-        F.flatten(
-            F.array(*[_pq_scores(F.col("_qdots"), m, c2s) for m in range(m_count)])
-        ).alias("qs"),
-        F.explode(probes).alias("cell"),
-    )
-    lut_terms = F.zip_with(
-        F.col("codes"),
-        F.sequence(F.lit(1), F.lit(m_count)),
-        lambda code, m: F.element_at(
-            F.col("qs"), ((m - F.lit(1)) * F.lit(k_count) + code).cast("int")
-        ),
-    )
-    adist = F.col("q2") + F.aggregate(lut_terms, F.lit(0.0), lambda acc, x: acc + x)
+    q = _probe_cells(q0, n_probe, "q_vec", "q_id", "q2", _adc_table(c2s))
     scored = F.broadcast(q).join(c, "cell").select(
         F.col("q_id").alias("query_id"),
         F.col("c_id").alias("neighbor_id"),
-        adist.alias("adist"),
+        _adc_dist(m_count, k_count).alias("adist"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("adist", 6).alias("adist"))
-    )
+    return _topk(scored, k, "adist", ascending=True, long_rank=True)
 
 
 def ivf_pq_rerank_topk(
@@ -872,18 +823,9 @@ def ivf_pq_rerank_topk(
         F.broadcast(cand)
         .join(cv, cand.neighbor_id == cv.c_id)
         .join(F.broadcast(qv), F.col("query_id") == qv.q_id)
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
-        )
+        .select("query_id", "neighbor_id", _cosine("q", "c").alias("cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _topk(scored, k, "cos", long_rank=True)
 
 
 def semantic_dedup_flags(
@@ -1027,11 +969,7 @@ def mmr_topk(
             F.col("a.query_id").alias("query_id"),
             F.col("a.neighbor_id").alias("a_id"),
             F.col("b.neighbor_id").alias("b_id"),
-            F.round(
-                dot(F.col("a.c_vec"), F.col("b.c_vec"))
-                / (F.col("a.c_norm") * F.col("b.c_norm")),
-                6,
-            ).alias("sim"),
+            F.round(_cosine("a.c", "b.c"), 6).alias("sim"),
         )
     )
 

@@ -43,8 +43,10 @@ def salted_join(
     """
     if how not in ("inner", "left"):
         raise ValueError("salted_join supports how in {'inner', 'left'}")
+    if n_salt < 1:
+        raise ValueError(f"salted_join needs n_salt >= 1, got {n_salt}")
     keys = [on] if isinstance(on, str) else list(on)
     p = probe.withColumn("_salt", (F.monotonically_increasing_id() % n_salt).cast("int"))
-    b = build.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)])))
+    b = build.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
     out = p.join(b, keys + ["_salt"], how)
     return out.drop("_salt")

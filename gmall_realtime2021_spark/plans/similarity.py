@@ -869,7 +869,7 @@ def ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = fan_out(load(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     scored = emb.withColumn("scores", _cell_scores("embedding"))
-    v2 = dot(F.col("embedding"), F.col("embedding"))
+    v2 = dot("embedding", "embedding")
     dist2 = v2 + F.array_min("scores")
     cell = F.array_position(F.col("scores"), F.array_min("scores")).cast("long")
     micros = F.floor(dist2 * 1000000 + F.lit(0.5)).cast("long")
@@ -1161,7 +1161,7 @@ def hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle and the rank tie-break cannot diverge.
     """
     from gmall_realtime2021_spark.functions.text_arrow import tokenize_arrow
-    from gmall_realtime2021_spark.functions.vectors import dot
+    from gmall_realtime2021_spark.functions.vectors import dot, norm
 
     # Arrow tokenizer: same values as the expression form (tri-twin
     # equality pinned in tests), ~5x cheaper than the interpreted-HOF
@@ -1185,19 +1185,19 @@ def hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("ov_ct"))
     )
     emb = load(spark, sf_dir, "embeddings")
-    norm = F.sqrt(dot(F.col("embedding"), F.col("embedding")))
+    nm = norm("embedding")
     qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_vec"),
-        norm.alias("q_norm"),
+        nm.alias("q_norm"),
     )
     cv = emb.filter(F.col("vec_id") >= N_QUERIES).select(
         F.col("vec_id").alias("c_id"),
         F.col("embedding").alias("c_vec"),
-        norm.alias("c_norm"),
+        nm.alias("c_norm"),
     )
     jacc = F.col("ov_ct").cast("double") / (F.col("nq") + F.col("nc") - F.col("ov_ct"))
-    raw_cos = dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))
+    raw_cos = dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))
     scored = (
         cand.join(F.broadcast(qv), "q_id")
         .join(cv, "c_id")
@@ -1527,14 +1527,14 @@ def semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_realtime2021_spark.functions.vectors import dot, norm
 
     emb = load(spark, sf_dir, "embeddings")
-    nm = norm(F.col("embedding"))
+    nm = norm("embedding")
     ev = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"), nm.alias("q_norm")
     )
     tr = fan_out(emb.filter(F.col("vec_id") >= N_QUERIES)).select(
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"), nm.alias("c_norm")
     )
-    raw_cos = dot(F.col("c_vec"), F.col("q_vec")) / (F.col("c_norm") * F.col("q_norm"))
+    raw_cos = dot("c_vec", "q_vec") / (F.col("c_norm") * F.col("q_norm"))
     scored = tr.crossJoin(F.broadcast(ev)).select("c_id", "q_id", raw_cos.alias("raw_cos"))
     best = scored.groupBy("c_id").agg(
         F.max(F.struct(F.col("raw_cos"), (-F.col("q_id")).alias("nq"))).alias("b")

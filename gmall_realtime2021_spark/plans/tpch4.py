@@ -116,7 +116,7 @@ def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     scnt = supplier.agg(F.count("*").alias("scnt"))
     return (
         part.crossJoin(F.broadcast(scnt))
-        .withColumn("i", F.explode(F.array(*[F.lit(i) for i in range(PS_PER_PART)])))
+        .withColumn("i", F.explode(F.sequence(F.lit(0), F.lit(PS_PER_PART - 1))))
         .select(
             F.col("p_partkey").alias("ps_partkey"),
             F.expr(f"CAST((p_partkey + i * (1 + scnt div {PS_PER_PART})) % scnt AS BIGINT)").alias(

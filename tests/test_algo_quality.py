@@ -156,7 +156,7 @@ def test_ivf_training_improves_quantization(spark):
         # actual squared distance = ||v||^2 + min_score (scores are
         # -2 v.c + ||c||^2)
         scored = emb.select(
-            (dot(F.col("embedding"), F.col("embedding"))
+            (dot("embedding", "embedding")
              + F.array_min(_cell_scores("embedding", cents))).alias("d2")
         )
         return scored.agg(F.avg("d2")).collect()[0][0]

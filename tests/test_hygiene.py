@@ -61,3 +61,34 @@ def test_warehouse_commits_and_bucketed_writes_have_one_call_site():
             calls[f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)] += 1
     assert calls["_flip_manifest"] == 1, calls["_flip_manifest"]
     assert calls["bucketBy"] == 1, calls["bucketBy"]
+
+
+def _is_f_call(node: ast.AST, name: str) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == name
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+    )
+
+
+def test_engine_builds_no_literal_array_one_lit_at_a_time():
+    """``F.array(*[F.lit(x) for x in ...])`` costs one py4j round trip
+    per element at plan build. Constant vectors render as one SQL
+    string (``functions/vectors.lit_array``); index arrays are
+    ``F.sequence``."""
+    root = os.path.join(os.path.dirname(os.path.dirname(__file__)), "gmall_realtime2021_spark")
+    sites = []
+    for path in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if _is_f_call(node, "array") and any(
+                isinstance(a, ast.Starred)
+                and isinstance(a.value, (ast.ListComp, ast.GeneratorExp))
+                and _is_f_call(a.value.elt, "lit")
+                for a in node.args
+            ):
+                sites.append(f"{os.path.relpath(path, root)}:{node.lineno}")
+    assert not sites, sites

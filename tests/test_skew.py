@@ -3,6 +3,7 @@ deliberately skewed key distribution, inner and left."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from gmall_realtime2021_spark.operators.skew import salted_join
@@ -37,3 +38,10 @@ def test_build_side_replicated(spark):
     _, build = _fixtures(spark)
     b = build.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(6)])))
     assert b.count() == build.count() * 6
+
+
+@pytest.mark.parametrize("n_salt", [0, -1])
+def test_salted_join_rejects_n_salt_below_one(spark, n_salt):
+    probe, build = _fixtures(spark)
+    with pytest.raises(ValueError, match="n_salt"):
+        salted_join(probe, build, "k", n_salt=n_salt)

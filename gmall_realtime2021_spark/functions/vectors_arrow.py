@@ -8,7 +8,11 @@ bucket assignment the dominant cost of the embedding operators over a
 corpus. This UDF computes the same values in one numpy pass.
 Query-sized inputs (the IVF probe side) keep the SQL form from
 ``functions/vectors.py`` instead: there the fixed cost of a Python
-worker outweighs the per-element saving.
+worker outweighs the per-element saving. An identity pandas stage over
+2,000 rows in 4 tasks costs about 70 ms of executor time per task under
+the engine's worker daemon (``worker_daemon``; about 340 ms per task
+with PySpark's stock daemon on Python 3.11), against about 3 ms per
+task for the same stage without a UDF (Spark 4.1, 4 cores).
 
 Bit-exactness: the engine's portability contract is a *sequential
 left fold* in double (functions/vectors.py);

@@ -35,9 +35,14 @@ def test_salted_left_equals_plain(spark):
 
 
 def test_build_side_replicated(spark):
-    _, build = _fixtures(spark)
-    b = build.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(6)])))
-    assert b.count() == build.count() * 6
+    """One hot key whose probe rows draw every salt 0..5 (one partition:
+    ``monotonically_increasing_id`` is 0..5): each row finds the build
+    row only if the build side carries a copy for its salt."""
+    n_salt = 6
+    probe = spark.range(n_salt, numPartitions=1).select(F.lit(1).alias("k"), F.col("id").alias("payload"))
+    build = spark.createDataFrame([(1, "hot")], "k long, label string")
+    got = salted_join(probe, build, "k", n_salt=n_salt)
+    assert sorted(r.payload for r in got.collect()) == list(range(n_salt))
 
 
 @pytest.mark.parametrize("n_salt", [0, -1])

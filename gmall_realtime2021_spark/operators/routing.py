@@ -32,17 +32,18 @@ def route_by_config(
 ) -> DataFrame:
     """Join records with the routing config and project payload keys.
 
-    ``records``: columns (table, type, data map<string,string>, ...).
+    ``records``: columns (table, type, ts, data map<string,string>,
+    ...) — the Maxwell envelope.
     ``config``:  (source_table, operate_type, sink_type, sink_table,
     sink_columns CSV).
 
     Returns EXACTLY (source_table, operate_type, sink_type,
-    sink_table, data-projected-to-sink_columns) — other record
+    sink_table, data-projected-to-sink_columns, ts) — other record
     columns are dropped on purpose (the reference forwards only the
-    payload to its sinks; a caller needing a passthrough column such
-    as an event-time ``ts`` should fold it into the payload map
-    before routing). Unmatched records are dropped, like the
-    reference's no-config warning path (``TableProcessFunction.java:193-197``).
+    payload to its sinks). Maxwell's ``ts`` (commit time, seconds)
+    rides along so a dim upsert can keep each key's newest record.
+    Unmatched records are dropped, like the reference's no-config
+    warning path (``TableProcessFunction.java:193-197``).
     Maxwell's ``bootstrap-insert`` is normalized to ``insert``
     (``TableProcessFunction.java:166-170``).
     """
@@ -63,4 +64,5 @@ def route_by_config(
         "sink_type",
         "sink_table",
         projected.alias(data_col),
+        rec["ts"],
     )

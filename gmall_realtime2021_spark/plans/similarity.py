@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_realtime2021_spark.operators.similarity import (
+    _topk,
     IVF_C2,
     IVF_CENTROIDS,
     LSH_PLANES,
@@ -1201,24 +1202,21 @@ def hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         cand.join(F.broadcast(qv), "q_id")
         .join(cv, "c_id")
-        .select("q_id", "c_id", jacc.alias("jacc"), raw_cos.alias("raw_cos"))
-        .withColumn("raw_score", F.lit(0.5) * F.col("jacc") + F.lit(0.5) * F.col("raw_cos"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q_id").orderBy(F.col("raw_score").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            "rank",
+            jacc.alias("jacc"),
+            raw_cos.alias("raw_cos"),
+        )
+        .select(
+            "query_id",
+            "neighbor_id",
             F.round("jacc", 6).alias("lex_jaccard"),
             F.round("raw_cos", 6).alias("cos"),
-            F.round("raw_score", 6).alias("score"),
+            (F.lit(0.5) * F.col("jacc") + F.lit(0.5) * F.col("raw_cos")).alias("score"),
         )
     )
+    return _topk(scored, 3, "score", "lex_jaccard", "cos", long_rank=True)
 
 
 #: CTE chain ending in ``pair(q_id, c_id, micro)`` — shared by the
@@ -1274,7 +1272,7 @@ _BM25_ORACLE = """
 
 
 def _bm25_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(q_id, c_id, micro) — BM25 scores in fixed-point nano-units
+    """(query_id, neighbor_id, micro) — BM25 scores in fixed-point nano-units
     over the catalog's standing query split (see :func:`bm25_topk`
     for the scoring contract). Thin wrapper over
     ``operators.retrieval`` — the same builders the incremental
@@ -1298,7 +1296,8 @@ def _bm25_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regexp+fold expression — value-identical by the tokenizer's
     # counting rules (pinned in tests/test_properties.py), isolated
     # stats-leg A/B 0.353 → 0.228 s, ArrowEvalPython 3 → 2.
-    return bm25_micro(postings, qterms, per_doc_dl=doc_dl_expr(corpus))
+    pair = bm25_micro(postings, qterms, per_doc_dl=doc_dl_expr(corpus))
+    return pair.withColumnsRenamed({"q_id": "query_id", "c_id": "neighbor_id"})
 
 
 @register(
@@ -1331,19 +1330,10 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     At rest, a deployment builds the postings once and persists them
     ``bucketBy("tok")``; per-query cost is then posting-list sized.
     """
-    from pyspark.sql import Window
-
-    pair = _bm25_micro(spark, sf_dir)
-    w = Window.partitionBy("q_id").orderBy(F.col("micro").desc(), F.col("c_id"))
-    return (
-        pair.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            "rank",
-            F.round(F.col("micro") / F.lit(1000000000.0), 6).alias("bm25"),
-        )
+    # ranked on the exact integer ``micro``, rounded to bm25 after
+    top = _topk(_bm25_micro(spark, sf_dir), 3, "micro", long_rank=True)
+    return top.select(
+        "query_id", "neighbor_id", "rank", F.round(F.col("micro") / F.lit(1000000000.0), 6).alias("bm25")
     )
 
 
@@ -1422,50 +1412,20 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact dense leg for ``ann_ivfpq_rerank`` is a one-line change
     with the same output contract.
     """
-    from pyspark.sql import Window
-
-    lexw = Window.partitionBy("q_id").orderBy(F.col("micro").desc(), F.col("c_id"))
-    lex20 = (
-        _bm25_micro(spark, sf_dir)
-        .withColumn("lr", F.row_number().over(lexw))
-        .filter(F.col("lr") <= 20)
-        .select("q_id", "c_id", "lr")
-    )
+    keys = ["query_id", "neighbor_id"]
+    lex20 = _topk(_bm25_micro(spark, sf_dir), 20, "micro").select(*keys, F.col("rank").alias("lr"))
     q, c = _split(spark, sf_dir)
-    dense20 = (
-        cosine_topk(q, c, k=20)
-        .select(
-            F.col("query_id").alias("q_id"),
-            F.col("neighbor_id").alias("c_id"),
-            F.col("rank").cast("int").alias("dr"),
-        )
+    dense20 = cosine_topk(q, c, k=20).select(*keys, F.col("rank").alias("dr"))
+    fused = lex20.join(dense20, keys, "full_outer").select(
+        *keys,
+        F.col("lr").cast("long").alias("lex_rank"),
+        F.col("dr").cast("long").alias("dense_rank"),
+        (
+            F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("lr")), F.lit(0.0))
+            + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("dr")), F.lit(0.0))
+        ).alias("rrf"),
     )
-    fused = (
-        lex20.join(dense20, ["q_id", "c_id"], "full_outer")
-        .select(
-            "q_id",
-            "c_id",
-            F.col("lr").alias("lex_rank"),
-            F.col("dr").alias("dense_rank"),
-            (
-                F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("lr")), F.lit(0.0))
-                + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("dr")), F.lit(0.0))
-            ).alias("rrf"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("rrf").desc(), F.col("c_id"))
-    return (
-        fused.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            "rank",
-            F.col("lex_rank").cast("long").alias("lex_rank"),
-            F.col("dense_rank").cast("long").alias("dense_rank"),
-            F.round("rrf", 6).alias("rrf"),
-        )
-    )
+    return _topk(fused, 5, "rrf", "lex_rank", "dense_rank", long_rank=True)
 
 
 _SEMDECON_TAU = 0.4

@@ -129,11 +129,13 @@ from __future__ import annotations
 
 import contextlib
 import json
+import logging
 import os
 import re
 import shutil
 import threading
 import time
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -165,6 +167,7 @@ __all__ = [
     "sweep_legacy_tag_dir",
     "layout_health_stats",
     "rebuild_bucketed_facts",
+    "replay_guard",
 ]
 
 #: Bucket count for the fact-fact join layout. On a real cluster this
@@ -916,6 +919,84 @@ def _data_file_count(location: str) -> int:
         return 0
 
 
+@contextlib.contextmanager
+def replay_guard(
+    spark: SparkSession,
+    guard_dir: str,
+    batch_id: int,
+    sink_name: str,
+    marker_dir: str | None = None,
+) -> Iterator[bool]:
+    """The engine's one replay guard for foreachBatch writers whose
+    apply step is NOT idempotent (CMS counter sums, SCD2 versions,
+    layout appends, the payment-enrich store merge). Yields whether to
+    apply ``batch_id``; once a body that applied it exits without
+    raising, the ``_last_batch`` marker (batch id, then the query
+    lineage) is written into ``marker_dir`` (default ``guard_dir``).
+    A table swapped through a ``.tmp`` sibling passes that sibling as
+    ``marker_dir``, so marker and table flip together; the layout
+    appends keep theirs in an ``_ingest`` dir outside the table.
+
+    batch_ids are only monotone WITHIN one checkpoint lineage — a
+    stream restarted against a fresh checkpoint resets to 0, and
+    silently skipping every delivery until it outruns a stale marker
+    would be silent data loss. The marker therefore records the
+    streaming query id (stable across restarts of the SAME
+    checkpoint; Spark exposes it as a thread-local property inside
+    foreachBatch): a skip requires BOTH a non-advancing batch_id AND
+    a matching lineage, and any skip or lineage mismatch is logged
+    loudly so a checkpoint-reset misconfiguration is detectable.
+    """
+    log = logging.getLogger(__name__)
+    lineage = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+    marker = os.path.join(guard_dir, "_last_batch")
+    replayed = False
+    if os.path.isfile(marker):
+        with open(marker) as fh:
+            lines = fh.read().splitlines()
+        try:
+            last_id = int(lines[0].strip())
+        except (IndexError, ValueError):
+            # a torn write on power loss can leave the marker empty or
+            # truncated: treat it as absent (apply — at-least-once makes
+            # that safe) rather than wedge the sink on every delivery
+            log.error(
+                "%s: unparseable _last_batch marker in %s (%r) — "
+                "treating as absent and APPLYING batch %d",
+                sink_name, guard_dir, lines[:1], batch_id,
+            )
+            last_id = None
+        last_lineage = lines[1].strip() if len(lines) > 1 else ""
+        if last_id is not None and batch_id <= last_id:
+            if not last_lineage or lineage is None or last_lineage == lineage:
+                log.warning(
+                    "%s: skipping replayed batch %d (marker at %d, lineage %r) for %s",
+                    sink_name, batch_id, last_id, last_lineage or lineage, guard_dir,
+                )
+                replayed = True
+            else:
+                log.warning(
+                    "%s: batch %d <= marker %d but query lineage changed "
+                    "(%r -> %r) — treating %s as a checkpoint reset and "
+                    "APPLYING the batch",
+                    sink_name, batch_id, last_id, last_lineage, lineage, guard_dir,
+                )
+    yield not replayed
+    if replayed:
+        return
+    marker_dir = marker_dir or guard_dir
+    os.makedirs(marker_dir, exist_ok=True)
+    # the underscore prefix hides the marker from Spark's file listing
+    with open(os.path.join(marker_dir, "_last_batch"), "w") as fh:
+        fh.write(str(batch_id))
+        if lineage:
+            fh.write("\n" + lineage)
+        fh.flush()
+        # fsync so a post-rename power loss cannot leave a truncated
+        # marker; the parse above still tolerates one
+        os.fsync(fh.fileno())
+
+
 def append_bucketed_batch(
     spark: SparkSession,
     table: str,
@@ -929,8 +1010,8 @@ def append_bucketed_batch(
     """Incremental ingest into a bucketed fact table from
     ``foreachBatch``: append the micro-batch with the SAME bucket
     spec (repartitioned to one file per bucket per batch), guarded by
-    the engine's replay marker (``streaming/sinks._replay_guard_skip``
-    — batch id + query lineage in the family root's ``_ingest`` dir,
+    the engine's replay marker (:func:`replay_guard` — batch id +
+    query lineage in the family root's ``_ingest`` dir,
     OUTSIDE the generations, so markers survive every compaction
     without copying). Returns True if the batch was applied, False if
     skipped as a replay.
@@ -964,11 +1045,6 @@ def append_bucketed_batch(
     path is the remedy, and the guard makes steady-state replays
     (Spark's normal restart behavior) exact skips.
     """
-    from gmall_realtime2021_spark.streaming.sinks import (
-        _replay_guard_skip,
-        _write_batch_marker,
-    )
-
     location = _table_location(spark, table)
     root = _family_root_of(location)
     # authoritative target = the manifest's CURRENT generation, not
@@ -989,19 +1065,16 @@ def append_bucketed_batch(
         if cur is not None and os.path.abspath(location) != os.path.abspath(cur):
             _repoint_table(spark, table, cur, spec)
             location = cur
-        guard_dir = os.path.join(root, "_ingest")
-        os.makedirs(guard_dir, exist_ok=True)
-        skip, lineage = _replay_guard_skip(guard_dir, batch_id, spark, sink_name)
-        if skip:
-            return False
-        _write_bucketed(spark, batch_df, table, spec)
-        # foreachBatch hands us a CLONED session: its write invalidates
-        # its own relation cache but not the parent session's cached
-        # file listing — a reader that counted the table before the
-        # stream would silently keep seeing the old files. Refresh
-        # through the shared catalog so every session sees the batch.
-        spark.catalog.refreshTable(table)
-        _write_batch_marker(guard_dir, batch_id, lineage)
+        with replay_guard(spark, os.path.join(root, "_ingest"), batch_id, sink_name) as apply:
+            if not apply:
+                return False
+            _write_bucketed(spark, batch_df, table, spec)
+            # foreachBatch hands us a CLONED session: its write invalidates
+            # its own relation cache but not the parent session's cached
+            # file listing — a reader that counted the table before the
+            # stream would silently keep seeing the old files. Refresh
+            # through the shared catalog so every session sees the batch.
+            spark.catalog.refreshTable(table)
     if auto_compact_files is not None and _data_file_count(location) > auto_compact_files:
         compact_bucketed_table(spark, table, key, sort_cols=sort_cols)
     return True
@@ -1367,7 +1440,7 @@ def append_ivf_batch(
     map-side (:func:`operators.similarity.ivf_assign` — same
     centroids, same norm fold as the base materialization) and APPEND
     into the current generation's ``cell=<j>`` directories, guarded
-    by the engine's replay marker (family-root ``_ingest``). Returns
+    by :func:`replay_guard` (marker in the family-root ``_ingest``). Returns
     True if applied, False if skipped as a replay.
 
     Scale contract: appends never rewrite existing files — each batch
@@ -1392,11 +1465,6 @@ def append_ivf_batch(
     ensure-only (lake-exact) layout; ingest is exercised in isolated
     warehouse dirs (``test_sinks.py::test_ivf_index_incremental_ingest``).
     """
-    from gmall_realtime2021_spark.streaming.sinks import (
-        _replay_guard_skip,
-        _write_batch_marker,
-    )
-
     from gmall_realtime2021_spark.operators.similarity import ivf_assign
 
     ensure_ivf_embeddings(spark, sf_dir)
@@ -1407,19 +1475,16 @@ def append_ivf_batch(
     # Auto-compaction runs AFTER release (non-reentrant lock).
     with _maintenance_lock(root):
         gen = _current_gen(root)
-        guard_dir = os.path.join(root, "_ingest")
-        os.makedirs(guard_dir, exist_ok=True)
-        skip, lineage = _replay_guard_skip(guard_dir, batch_id, spark, sink_name)
-        if skip:
-            return False
-        (
-            ivf_assign(batch_df)
-            .repartition(F.col("cell"))
-            .write.partitionBy("cell")
-            .mode("append")
-            .parquet(gen)
-        )
-        _write_batch_marker(guard_dir, batch_id, lineage)
+        with replay_guard(spark, os.path.join(root, "_ingest"), batch_id, sink_name) as apply:
+            if not apply:
+                return False
+            (
+                ivf_assign(batch_df)
+                .repartition(F.col("cell"))
+                .write.partitionBy("cell")
+                .mode("append")
+                .parquet(gen)
+            )
     if auto_compact_files is not None:
         compact_ivf_cells(spark, sf_dir, max_files_per_cell=auto_compact_files)
     return True

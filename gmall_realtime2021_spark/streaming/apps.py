@@ -130,7 +130,12 @@ def cdc_routing_app(cdc_raw: DataFrame, config: DataFrame, cfg: AppConfig) -> St
     """BaseDBApp twin: Maxwell stream → config routing → dims upserted
     by pk (S5), facts routed per-``sink_table`` (S3, file-backed; swap
     the fact branch to ``dynamic_topic_kafka`` + kafka format on a
-    cluster with brokers)."""
+    cluster with brokers).
+
+    Within a micro-batch each dim id keeps the record with the
+    greatest Maxwell ``ts``. That ``ts`` is in seconds, so two changes
+    to one id within the same second tie, and which of them wins is
+    undefined."""
     routed = route_by_config(maxwell_cdc_parse(cdc_raw), config)
 
     def write(batch: DataFrame, batch_id: int) -> None:
@@ -140,8 +145,10 @@ def cdc_routing_app(cdc_raw: DataFrame, config: DataFrame, cfg: AppConfig) -> St
         try:
             dims = batch.filter(F.col("sink_type") == "hbase")
             for row in dims.select("sink_table").distinct().collect():
-                table_rows = dims.filter(F.col("sink_table") == row.sink_table).select(
-                    F.col("data")["id"].alias("id"), F.to_json("data").alias("payload")
+                table_rows = (
+                    dims.filter(F.col("sink_table") == row.sink_table)
+                    .groupBy(F.col("data")["id"].alias("id"))
+                    .agg(F.max_by(F.to_json("data"), "ts").alias("payload"))
                 )
                 S.dim_upsert_batch(table_rows, cfg.sink_path(f"dim/{row.sink_table}"), pk="id")
             facts = batch.filter(F.col("sink_type") == "kafka").select(

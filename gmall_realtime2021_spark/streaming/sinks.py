@@ -1,4 +1,4 @@
-"""Sinks for the streaming skin (SURVEY.md §2.1 S2/S3/S5/S6/S11).
+"""Sinks for the streaming skin (SURVEY.md §2.1 S2/S3/S5/S6).
 
 The reference's sink zoo collapses into two Spark shapes:
 
@@ -8,23 +8,41 @@ The reference's sink zoo collapses into two Spark shapes:
   store (Phoenix dim upsert `DimSink.java:22-94`, ClickHouse batch
   insert `ClickHouseUtil.java:31-76`).
 
-Idempotence: every foreachBatch writer keys on deterministic columns
-(pk merge, partition dirs), so micro-batch replay after failure
-rewrites the same rows — the engine's answer to the reference's
-EXACTLY_ONCE Kafka transactions (SURVEY.md §2.12).
+foreachBatch is at-least-once: after a crash between the store
+commit and the checkpoint commit the last micro-batch is delivered
+again. Every exactly-once writer here belongs to one of three
+idempotence families (SURVEY.md §2.12):
+
+- **epoch-partitioned overwrite** — rows are stamped with the batch
+  id and written as a dynamic overwrite of that epoch's partition
+  (:func:`stats_store_sink` and the index sinks built on it,
+  :func:`dynamic_route_files`, :func:`idempotent_jdbc_stats_sink`):
+  a replay replaces its own partition;
+- **idempotent merge-swap** — the stored table is merged with the
+  batch by an operation that absorbs a second delivery (pk merge,
+  HLL register max, Bloom set union) and swapped in through
+  :func:`_merge_swap` (:func:`dim_upsert_batch`, HLL, Bloom);
+- **marker-guarded merge-swap** — the merge is NOT idempotent (CMS
+  counter sums, SCD2 versions, the payment-enrich store fed by a
+  layout append), so the swap runs behind the engine's one replay
+  guard, :func:`sources.warehouse.replay_guard`, which skips a batch
+  id the ``_last_batch`` marker already records.
+
+:func:`jdbc_stats_sink` is the one documented at-least-once writer.
 """
 
 from __future__ import annotations
 
-import logging
 import os
 import shutil
 from collections.abc import Callable, Iterator
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gmall_realtime2021_spark.sources import warehouse as W
 
 
 @contextmanager
@@ -32,10 +50,10 @@ def _replace_dir(target: str) -> Iterator[str]:
     """Crash-safe single-writer replace of the directory ``target``.
 
     Yields the ``.tmp`` sibling to write the new generation into (plus
-    an optional ``_last_batch`` marker, :func:`_write_batch_marker`),
-    then swaps it in: rename ``target`` → ``.old``, ``.tmp`` →
-    ``target``, drop ``.old``. A body that writes nothing (a skipped
-    replay) or raises leaves ``target`` as it was.
+    an optional ``_last_batch`` marker, :func:`sources.warehouse.
+    replay_guard`), then swaps it in: rename ``target`` → ``.old``,
+    ``.tmp`` → ``target``, drop ``.old``. A body that writes nothing
+    (a skipped replay) or raises leaves ``target`` as it was.
 
     Crash recovery runs on entry, before the body reads ``target`` or
     its marker. A run that died between the two renames left ``.old``
@@ -61,83 +79,43 @@ def _replace_dir(target: str) -> Iterator[str]:
     shutil.rmtree(old, ignore_errors=True)
 
 
-def _replay_guard_skip(
-    target_dir: str, batch_id: int, spark, sink_name: str
-) -> tuple[bool, str | None]:
-    """Shared at-least-once replay guard for NON-idempotent
-    foreachBatch maintainers (SCD2 versions, CMS counter sums).
+def _merge_swap(
+    table_dir: str,
+    fresh: DataFrame,
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+    guard: tuple[int, str] | None = None,
+) -> None:
+    """The one rewrite path of every table rewritten per micro-batch:
+    write ``merge(stored, fresh)`` — or ``fresh`` alone while no table
+    exists — into the ``.tmp`` sibling and swap it in
+    (:func:`_replace_dir`). The tmp write materializes the plan,
+    including its read of the stored table, before any rename, so the
+    result goes straight from the executors to disk.
 
-    batch_ids are only monotone WITHIN one checkpoint lineage — a
-    stream restarted against a fresh checkpoint resets to 0, and
-    silently skipping every delivery until it outruns a stale marker
-    would be silent data loss. The ``_last_batch`` marker therefore
-    records the streaming query id (stable across restarts of the
-    SAME checkpoint; Spark exposes it as a thread-local property
-    inside foreachBatch) next to the batch id: a skip requires BOTH a
-    non-advancing batch_id AND a matching lineage, and any skip or
-    lineage mismatch is logged loudly so a checkpoint-reset
-    misconfiguration is detectable.
-
-    Returns ``(skip, lineage)``; pass ``lineage`` to
-    :func:`_write_batch_marker` after the table rewrite.
+    ``guard=(batch_id, sink_name)`` runs the write behind
+    :func:`sources.warehouse.replay_guard`: a replayed batch id
+    rewrites nothing, and the ``_last_batch`` marker is written into
+    ``.tmp`` so it flips with the table.
     """
-    lineage = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
-    marker = os.path.join(target_dir, "_last_batch")
-    if os.path.isfile(marker):
-        with open(marker) as fh:
-            lines = fh.read().splitlines()
-        try:
-            last_id = int(lines[0].strip())
-        except (IndexError, ValueError):
-            # the marker is fsynced before its atomic rename, but a
-            # torn write on power loss can still leave it zero-length
-            # or truncated — an unparseable marker must degrade to
-            # "absent" (apply the batch; at-least-once semantics make
-            # that safe), never wedge the sink with a raise on every
-            # subsequent delivery
-            logging.getLogger(__name__).error(
-                "%s: unparseable _last_batch marker in %s (%r) — "
-                "treating as absent and APPLYING batch %d",
-                sink_name, target_dir, lines[:1], batch_id,
-            )
-            return False, lineage
-        last_lineage = lines[1].strip() if len(lines) > 1 else ""
-        same_lineage = (
-            not last_lineage or lineage is None or last_lineage == lineage
+    spark = fresh.sparkSession
+    with _replace_dir(table_dir) as tmp:
+        replay = (
+            W.replay_guard(spark, table_dir, *guard, marker_dir=tmp)
+            if guard
+            else nullcontext(True)
         )
-        if batch_id <= last_id:
-            if same_lineage:
-                logging.getLogger(__name__).warning(
-                    "%s: skipping replayed batch %d (marker at %d, "
-                    "lineage %r) for %s",
-                    sink_name, batch_id, last_id,
-                    last_lineage or lineage, target_dir,
-                )
-                return True, lineage
-            logging.getLogger(__name__).warning(
-                "%s: batch %d <= marker %d but query lineage changed "
-                "(%r -> %r) — treating %s as a checkpoint reset and "
-                "APPLYING the batch",
-                sink_name, batch_id, last_id, last_lineage, lineage,
-                target_dir,
-            )
-    return False, lineage
+        with replay as apply:
+            if not apply:
+                return
+            if os.path.isdir(table_dir):
+                fresh = merge(spark.read.parquet(table_dir), fresh)
+            fresh.write.mode("overwrite").parquet(tmp)
 
 
-def _write_batch_marker(tmp_dir: str, batch_id: int, lineage: str | None) -> None:
-    """Marker written into the tmp directory BEFORE the atomic rename:
-    the underscore prefix hides it from Spark's file listing, and the
-    swap means table-state and last-applied-batch can never disagree
-    (a crash between swap and checkpoint replays the batch, which the
-    guard then skips)."""
-    with open(os.path.join(tmp_dir, "_last_batch"), "w") as fh:
-        fh.write(str(batch_id))
-        if lineage:
-            fh.write("\n" + lineage)
-        fh.flush()
-        # fsync so a post-rename power loss can't leave a truncated
-        # marker; the guard above still tolerates one defensively
-        os.fsync(fh.fileno())
+def _key_merge(pk: str) -> Callable[[DataFrame, DataFrame], DataFrame]:
+    """Merge by primary key: fresh rows replace stored rows with the
+    same ``pk``; every other stored row is carried over."""
+    return lambda stored, fresh: stored.join(fresh, pk, "left_anti").unionByName(fresh)
 
 
 __all__ = [
@@ -153,7 +131,6 @@ __all__ = [
     "postings_index_sink",
     "payment_enrich_bootstrap",
     "payment_enrich_upsert_batch",
-    "console_sink",
 ]
 
 
@@ -196,15 +173,17 @@ def dim_upsert_batch(
     """S5 — merge-by-pk upsert of one micro-batch into a parquet dim
     table (last-write-wins, like Phoenix UPSERT `DimSink.java:78-93`).
 
-    Within a batch the winner per pk is the highest ``version_col``
-    (or arbitrary-but-deterministic last row); against the existing
-    table the batch always wins. The swap is write-new-then-rename
-    (:func:`_replace_dir`) — single-writer semantics, which matches
+    Within a batch the winner per pk is the row with the highest
+    ``version_col``; without one, ``dropDuplicates`` keeps an
+    ARBITRARY row per pk (not necessarily the last), so a caller whose
+    batch can hold several rows for one key passes ``version_col`` or
+    reduces the batch first. Against the existing table the batch
+    always wins. The swap is write-new-then-rename
+    (:func:`_merge_swap`) — single-writer semantics, which matches
     the one-streaming-query-per-dim-table topology. On a lakehouse
     deployment this function is the one place to swap in a
     Delta/Iceberg MERGE.
     """
-    spark = batch.sparkSession
     w_cols = batch.columns
     if version_col is not None:
         from pyspark.sql import Window
@@ -215,13 +194,7 @@ def dim_upsert_batch(
         batch = batch.withColumn("_rn", rn).filter(F.col("_rn") == 1).select(w_cols)
     else:
         batch = batch.dropDuplicates([pk])
-    with _replace_dir(dim_dir) as tmp:
-        if os.path.isdir(dim_dir):
-            existing = spark.read.parquet(dim_dir)
-            merged = existing.join(batch, pk, "left_anti").unionByName(batch)
-        else:
-            merged = batch
-        merged.write.mode("overwrite").parquet(tmp)
+    _merge_swap(dim_dir, batch, _key_merge(pk))
 
 
 def dim_upsert_sink(dim_dir: str, pk: str, version_col: str | None = None) -> Callable:
@@ -314,11 +287,6 @@ def jdbc_stats_sink(
     return write
 
 
-def console_sink(df: DataFrame, label: str = ""):
-    """S11 — debug print sink (`BaseLogApp.java:260-262`)."""
-    return df.writeStream.format("console").option("truncate", "false").queryName(label or "console")
-
-
 def idempotent_jdbc_stats_sink(
     url: str,
     table: str,
@@ -391,38 +359,26 @@ def hll_sketch_maintenance_sink(sketch_dir: str) -> Callable:
     days, and rewrites the table — incremental distinct maintenance
     where no fact row is ever re-read. HLL union is associative and
     partition-insensitive, so any batch split yields register state
-    identical to a single pass (pinned in test_approx.py), and the
-    union with already-stored state makes the write idempotent at
-    the day grain only if each batch arrives once — replay safety
-    comes from stamping with the epoch like the JDBC sink; here the
-    overwrite-whole-table form keeps the demo minimal (the table is
-    day-grain tiny: one ~KB row per day).
+    identical to a single pass (pinned in test_approx.py). The union
+    is also idempotent — a register max absorbs a second delivery of
+    the same rows — so a replayed batch rewrites the same table and
+    needs no marker (the idempotent merge-swap family; the
+    crash-replay chaos test in tests/test_sinks.py delivers
+    duplicates and rewound replays).
 
-    The rewrite goes through a ``.tmp`` sibling and an atomic rename
-    (:func:`_replace_dir`, leftover-recovery included):
-    this table is the ONLY copy of the accumulated history, so a crash
-    mid-overwrite of the directory itself would lose every prior day
-    and a replayed batch would silently rebuild from its own rows.
+    The rewrite is the :func:`_merge_swap` tmp/old swap,
+    leftover-recovery included: this table is the ONLY copy of the
+    accumulated history, so a crash mid-overwrite of the directory
+    itself would lose every prior day.
     """
+
+    def merge(stored: DataFrame, fresh: DataFrame) -> DataFrame:
+        return stored.unionByName(fresh).groupBy("d").agg(F.hll_union_agg("sketch").alias("sketch"))
+
     def write(batch: DataFrame, batch_id: int) -> None:
         from gmall_realtime2021_spark.operators.sketches import daily_user_sketches
 
-        spark = batch.sparkSession
-        fresh = daily_user_sketches(batch)
-        with _replace_dir(sketch_dir) as tmp:
-            if os.path.isdir(sketch_dir):
-                stored = spark.read.parquet(sketch_dir)
-                merged = (
-                    stored.unionByName(fresh)
-                    .groupBy("d")
-                    .agg(F.hll_union_agg("sketch").alias("sketch"))
-                )
-            else:
-                merged = fresh
-            out = merged.collect()  # day-grain: bounded by distinct days
-            spark.createDataFrame(out, schema=merged.schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
+        _merge_swap(sketch_dir, daily_user_sketches(batch), merge)
 
     return write
 
@@ -440,46 +396,30 @@ def cms_sketch_maintenance_sink(sketch_dir: str) -> Callable:
     ``plans/sketches.py`` (same ``cm{i}:`` salts) is interchangeable
     with the maintained table.
 
-    Crash safety is the :func:`_replace_dir` tmp/old swap,
+    Crash safety is the :func:`_merge_swap` tmp/old swap,
     leftover-recovery included: like the HLL table, this directory is
     the only copy of the accumulated counters.
 
     Replay safety (r08): counter SUMS are NOT idempotent — foreachBatch
     is at-least-once, and a replayed delivery would double-count every
     event it carries (unlike the HLL sink, whose register max makes
-    replays free no-ops). The shared ``_last_batch`` marker guard
-    (:func:`_replay_guard_skip`, the SCD2 recipe: batch id + query
-    lineage written into tmp before the atomic swap) skips replayed
-    batch_ids within one checkpoint lineage, restoring exactly-once
-    counters; pinned under randomized crash-replay chaos in
-    tests/test_sinks.py.
+    replays free no-ops). The swap therefore runs behind the engine's
+    replay guard (:func:`sources.warehouse.replay_guard`: batch id +
+    query lineage written into tmp before the atomic swap), which
+    skips replayed batch_ids within one checkpoint lineage, restoring
+    exactly-once counters; pinned under randomized crash-replay chaos
+    in tests/test_sinks.py.
     """
+
+    def merge(stored: DataFrame, fresh: DataFrame) -> DataFrame:
+        return stored.unionByName(fresh).groupBy("d", "i", "bucket").agg(F.sum("ct").alias("ct"))
 
     def write(batch: DataFrame, batch_id: int) -> None:
         from gmall_realtime2021_spark.operators.sketches import daily_type_cms
 
-        spark = batch.sparkSession
-        with _replace_dir(sketch_dir) as tmp:
-            skip, lineage = _replay_guard_skip(
-                sketch_dir, batch_id, spark, "cms_sketch_maintenance_sink"
-            )
-            if skip:
-                return  # replayed delivery — already counted
-            fresh = daily_type_cms(batch)
-            if os.path.isdir(sketch_dir):
-                stored = spark.read.parquet(sketch_dir)
-                merged = (
-                    stored.unionByName(fresh)
-                    .groupBy("d", "i", "bucket")
-                    .agg(F.sum("ct").alias("ct"))
-                )
-            else:
-                merged = fresh
-            out = merged.collect()  # bounded: distinct days × depth·width
-            spark.createDataFrame(out, schema=merged.schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            _write_batch_marker(tmp, batch_id, lineage)
+        _merge_swap(
+            sketch_dir, daily_type_cms(batch), merge, guard=(batch_id, "cms_sketch_maintenance_sink")
+        )
 
     return write
 
@@ -498,22 +438,23 @@ def scd2_maintenance_sink(dim_dir: str) -> Callable:
     event via event_id −1, with its version as the numbering base),
     the batch's own change-capture window runs over seed+delivery,
     and closed history rows are carried through untouched. The swap
-    is the :func:`_replace_dir` tmp/old recipe.
+    is the :func:`_merge_swap` tmp/old recipe.
 
     Delivery contract: per-user event-time ORDER across batches;
     replay safety is enforced here rather than assumed — foreachBatch
     is at-least-once, and a replayed batch would re-derive changes
     against a current row the original delivery already advanced
     (its events now sort around the event_id=-1 seed and corrupt
-    versions). A ``_last_batch`` marker (batch id + streaming query
-    id) is written INTO the tmp directory before the atomic swap, so
-    marker and table always travel together; ``write`` no-ops (with a
-    loud log) when ``batch_id`` is at or below the stored marker AND
-    the query lineage matches — a lineage change (fresh checkpoint,
-    batch ids reset to 0) applies the batch instead of silently
-    dropping deliveries. Late events belong in a retraction
-    layer, not here; the batch builder is the recovery path (rebuild
-    from facts).
+    versions). The engine's replay guard
+    (:func:`sources.warehouse.replay_guard`) writes a ``_last_batch``
+    marker (batch id + streaming query id) INTO the tmp directory
+    before the atomic swap, so marker and table always travel
+    together; ``write`` no-ops (with a loud log) when ``batch_id`` is
+    at or below the stored marker AND the query lineage matches — a
+    lineage change (fresh checkpoint, batch ids reset to 0) applies
+    the batch instead of silently dropping deliveries. Late events
+    belong in a retraction layer, not here; the batch builder is the
+    recovery path (rebuild from facts).
     """
 
     def write(batch: DataFrame, batch_id: int) -> None:
@@ -524,41 +465,17 @@ def scd2_maintenance_sink(dim_dir: str) -> Callable:
             SCD2_TS_FMT_SPARK,
         )
 
-        spark = batch.sparkSession
-        with _replace_dir(dim_dir) as tmp:
-            skip, lineage = _replay_guard_skip(
-                dim_dir, batch_id, spark, "scd2_maintenance_sink"
-            )
-            if skip:
-                return  # replayed delivery — already applied
-            ev = batch.select("user_id", "event_type", "ts", "event_id")
-            users = ev.select("user_id").distinct()
-            if os.path.isdir(dim_dir):
-                stored = spark.read.parquet(dim_dir)
-                untouched = stored.join(users, "user_id", "left_anti")
-                affected = stored.join(F.broadcast(users), "user_id", "left_semi")
-                closed = affected.filter(F.col("is_current") == 0)
-                cur = affected.filter(F.col("is_current") == 1)
-                seed = cur.select(
-                    "user_id",
-                    "event_type",
-                    F.to_timestamp("valid_from", SCD2_TS_FMT_SPARK).alias("ts"),
-                    F.lit(-1).cast("long").alias("event_id"),
-                )
-                base = cur.select("user_id", F.col("version").alias("vbase"))
-                allrows = seed.unionByName(ev)
-            else:
-                stored = None
-                untouched = closed = None
-                base = users.select("user_id", F.lit(None).cast("long").alias("vbase"))
-                allrows = ev
+        ev = batch.select("user_id", "event_type", "ts", "event_id")
+        users = ev.select("user_id").distinct()
+
+        def versioned(allrows: DataFrame, base: DataFrame) -> DataFrame:
             w = Window.partitionBy("user_id").orderBy("ts", "event_id")
             changes = (
                 allrows.withColumn("prev", F.lag("event_type").over(w))
                 .filter(F.col("prev").isNull() | (F.col("prev") != F.col("event_type")))
                 .drop("prev")
             )
-            rebuilt = (
+            return (
                 changes.withColumn("nxt", F.lead("ts").over(w))
                 .withColumn("rn", F.row_number().over(w).cast("long"))
                 .join(F.broadcast(base), "user_id", "left")
@@ -575,16 +492,28 @@ def scd2_maintenance_sink(dim_dir: str) -> Callable:
                     F.when(F.col("nxt").isNull(), 1).otherwise(0).alias("is_current"),
                 )
             )
-            merged = (
-                untouched.unionByName(closed).unionByName(rebuilt)
-                if stored is not None
-                else rebuilt
+
+        def merge(stored: DataFrame, _fresh: DataFrame) -> DataFrame:
+            # untouched users and closed history pass through; each
+            # touched user's CURRENT row re-enters the change capture
+            # as a seed event ahead of the batch's own
+            untouched = stored.join(users, "user_id", "left_anti")
+            affected = stored.join(F.broadcast(users), "user_id", "left_semi")
+            cur = affected.filter(F.col("is_current") == 1)
+            seed = cur.select(
+                "user_id",
+                "event_type",
+                F.to_timestamp("valid_from", SCD2_TS_FMT_SPARK).alias("ts"),
+                F.lit(-1).cast("long").alias("event_id"),
             )
-            # written directly (no driver collect — the dim is user-grain,
-            # not day-grain): the tmp write fully materializes the plan,
-            # including its read of the old table, BEFORE any rename below
-            merged.write.mode("overwrite").parquet(tmp)
-            _write_batch_marker(tmp, batch_id, lineage)
+            base = cur.select("user_id", F.col("version").alias("vbase"))
+            return (
+                untouched.unionByName(affected.filter(F.col("is_current") == 0))
+                .unionByName(versioned(seed.unionByName(ev), base))
+            )
+
+        fresh = versioned(ev, users.select("user_id", F.lit(None).cast("long").alias("vbase")))
+        _merge_swap(dim_dir, fresh, merge, guard=(batch_id, "scd2_maintenance_sink"))
 
     return write
 
@@ -603,27 +532,15 @@ def bloom_filter_maintenance_sink(filter_dir: str, key_col: str) -> Callable:
     IDEMPOTENT — so unlike the CMS counters this maintenance is
     replay-safe with no epoch bookkeeping at all: delivering a batch
     twice ORs in bits already set. Crash safety is the
-    :func:`_replace_dir` tmp/old swap, leftover-recovery included:
+    :func:`_merge_swap` tmp/old swap, leftover-recovery included:
     the directory is the only copy of the accumulated filter.
     """
 
     def write(batch: DataFrame, batch_id: int) -> None:
         from gmall_realtime2021_spark.operators.sketches import bloom_positions
 
-        spark = batch.sparkSession
-        fresh = batch.select(
-            F.explode(bloom_positions(F.col(key_col))).alias("pos")
-        ).distinct()
-        with _replace_dir(filter_dir) as tmp:
-            if os.path.isdir(filter_dir):
-                stored = spark.read.parquet(filter_dir)
-                merged = stored.unionByName(fresh).distinct()
-            else:
-                merged = fresh
-            out = merged.collect()  # bounded by m positions, filter-sized
-            spark.createDataFrame(out, schema=merged.schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
+        fresh = batch.select(F.explode(bloom_positions(F.col(key_col))).alias("pos")).distinct()
+        _merge_swap(filter_dir, fresh, lambda stored, fresh: stored.unionByName(fresh).distinct())
 
     return write
 
@@ -773,7 +690,6 @@ def payment_enrich_bootstrap(spark, sf_dir: str, store_dir: str) -> int:
     re-running resets the store to the layout's current state (the
     derived-state rebuild discipline)."""
     from gmall_realtime2021_spark.plans.warehouse import enrich_rows
-    from gmall_realtime2021_spark.sources import warehouse as W
 
     events_t = W.ensure_bucketed_events(spark, sf_dir)
     with _replace_dir(store_dir) as tmp:
@@ -808,8 +724,8 @@ def payment_enrich_upsert_batch(
        exchange-free);
     3. merge-by-pk into the serving store: recomputed payments
        replace their ``pay_id`` rows, every other row is carried over
-       unchanged (the :func:`_replace_dir` swap,
-       ``DimSink.java:78-93``).
+       unchanged (:func:`_merge_swap` with the same key merge as
+       :func:`dim_upsert_batch`, ``DimSink.java:78-93``).
 
     Returns True if applied, False if skipped as a replay. The
     RECOMPUTE (step 2) is ∝ batch span × affected users' event
@@ -818,64 +734,54 @@ def payment_enrich_upsert_batch(
     WHOLE store and rewrites the whole store into a fresh directory,
     so every batch reads and writes ∝ the store's size, and the
     bytes written per input byte grow with the store. Delivery: the
-    store-level marker makes
-    steady-state replays exact skips; a crash between the layout
+    store-level marker (:func:`sources.warehouse.replay_guard` on
+    ``<store>__ingest``) makes steady-state replays exact skips; a crash between the layout
     append and the store merge replays into an append-side skip plus
     a recompute against the identical layout state — the recompute is
     a pure function of (layout, slice), so the retry converges
     (pinned by the chaos test). The bounded driver-side ``.collect()``
     reads ONE row (the batch's min/max ts)."""
     from gmall_realtime2021_spark.plans.warehouse import enrich_rows
-    from gmall_realtime2021_spark.sources import warehouse as W
 
     events_t = W.ensure_bucketed_events(spark, sf_dir)
     guard_dir = store_dir.rstrip("/") + "__ingest"
-    os.makedirs(guard_dir, exist_ok=True)
-    skip, lineage = _replay_guard_skip(guard_dir, batch_id, spark, sink_name)
-    if skip:
-        return False
-    # persist: the append, the span and the user list are three
-    # actions over the batch, and the merge reads the recomputed slice
-    # on both sides of its anti-join + union — without it the source
-    # is scanned three times (progress would report 3x numInputRows)
-    # and the slice recomputed twice (same discipline as base_log_app)
-    cached = [batch_df.persist()]
-    try:
-        W.append_bucketed_batch(
-            spark,
-            events_t,
-            batch_df,
-            batch_id,
-            W.EVENTS_BUCKET_KEY,
-            sink_name=f"{sink_name}_events",
-            sort_cols=W.EVENTS_SORT_COLS,
-        )
-        # bounded: one row — the batch's time span
-        span = batch_df.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
-        if span.lo is None:
-            _write_batch_marker(guard_dir, batch_id, lineage)
-            return True
-        users = batch_df.select("user_id").distinct()
-        margin = F.expr("INTERVAL 30 MINUTES")
-        slice_ev = (
-            spark.table(events_t)
-            .filter((F.col("ts") >= F.lit(span.lo) - margin) & (F.col("ts") <= F.lit(span.hi) + margin))
-            .join(F.broadcast(users), "user_id", "left_semi")
-        )
-        recomputed = enrich_rows(slice_ev).filter(
-            F.col("pay_time") >= F.date_format(F.lit(span.lo), "yyyy-MM-dd HH:mm:ss")
-        )
-        cached.append(recomputed.persist())
-        # merge-by-pk swap (single-writer, crash-safe)
-        with _replace_dir(store_dir) as tmp:
-            if os.path.isdir(store_dir):
-                existing = spark.read.parquet(store_dir)
-                merged = existing.join(recomputed, "pay_id", "left_anti").unionByName(recomputed)
-            else:
-                merged = recomputed
-            merged.write.mode("overwrite").parquet(tmp)
-    finally:
-        for df in cached:
-            df.unpersist()
-    _write_batch_marker(guard_dir, batch_id, lineage)
+    with W.replay_guard(spark, guard_dir, batch_id, sink_name) as apply:
+        if not apply:
+            return False
+        # persist: the append, the span and the user list are three
+        # actions over the batch, and the merge reads the recomputed
+        # slice on both sides of its anti-join + union — without it the
+        # source is scanned three times (progress would report 3x
+        # numInputRows) and the slice recomputed twice (same discipline
+        # as base_log_app)
+        cached = [batch_df.persist()]
+        try:
+            W.append_bucketed_batch(
+                spark,
+                events_t,
+                batch_df,
+                batch_id,
+                W.EVENTS_BUCKET_KEY,
+                sink_name=f"{sink_name}_events",
+                sort_cols=W.EVENTS_SORT_COLS,
+            )
+            # bounded: one row — the batch's time span
+            span = batch_df.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
+            if span.lo is None:
+                return True
+            users = batch_df.select("user_id").distinct()
+            margin = F.expr("INTERVAL 30 MINUTES")
+            slice_ev = (
+                spark.table(events_t)
+                .filter((F.col("ts") >= F.lit(span.lo) - margin) & (F.col("ts") <= F.lit(span.hi) + margin))
+                .join(F.broadcast(users), "user_id", "left_semi")
+            )
+            recomputed = enrich_rows(slice_ev).filter(
+                F.col("pay_time") >= F.date_format(F.lit(span.lo), "yyyy-MM-dd HH:mm:ss")
+            )
+            cached.append(recomputed.persist())
+            _merge_swap(store_dir, recomputed, _key_merge("pay_id"))
+        finally:
+            for df in cached:
+                df.unpersist()
     return True

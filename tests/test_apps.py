@@ -78,8 +78,43 @@ def test_cdc_routing_app_end_to_end(spark, tmp_path):
     assert [r.sink_table for r in facts.collect()] == ["dwd_order_info"]
     dim = spark.read.parquet(cfg.sink_path("dim/dim_user_info"))
     rows = {r.id: r.payload for r in dim.collect()}
-    # upsert merged insert+update by pk — one row, last write wins
-    assert list(rows) == ["7"] and "u7" in rows["7"]
+    # upsert merged insert+update by pk — one row, the newest ts wins
+    assert rows == {"7": '{"id":"7","name":"u7b"}'}
+
+
+def test_cdc_dim_upsert_keeps_the_newest_maxwell_ts(spark, tmp_path):
+    """Several changes to one dim id in ONE micro-batch: the dim keeps
+    the record with the greatest Maxwell ``ts`` whatever its position
+    in the batch, and stays (id, payload)."""
+    raw_rows = [
+        ('{"table":"user_info","type":"insert","ts":2,"data":{"id":"7","name":"u7"}}',),
+        ('{"table":"user_info","type":"update","ts":3,"data":{"id":"7","name":"u7b"}}',),
+        ('{"table":"user_info","type":"update","ts":5,"data":{"id":"8","name":"u8b"}}',),
+        ('{"table":"user_info","type":"insert","ts":4,"data":{"id":"8","name":"u8"}}',),
+    ]
+    src = str(tmp_path / "cdc")
+    spark.createDataFrame(raw_rows, "value string").coalesce(1).write.mode("overwrite").parquet(src)
+    config = spark.createDataFrame(
+        [
+            ("user_info", "insert", "hbase", "dim_user_info", "id,name"),
+            ("user_info", "update", "hbase", "dim_user_info", "id,name"),
+        ],
+        ["source_table", "operate_type", "sink_type", "sink_table", "sink_columns"],
+    )
+    cfg = AppConfig(
+        out_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        trigger_available_now=True,
+    )
+    q = cdc_routing_app(file_stream(spark, src, "value string"), config, cfg)
+    q.awaitTermination(120)
+
+    dim = spark.read.parquet(cfg.sink_path("dim/dim_user_info"))
+    assert dim.columns == ["id", "payload"]
+    assert {r.id: r.payload for r in dim.collect()} == {
+        "7": '{"id":"7","name":"u7b"}',
+        "8": '{"id":"8","name":"u8b"}',
+    }
 
 
 @pytest.mark.slow

@@ -92,3 +92,44 @@ def test_engine_builds_no_literal_array_one_lit_at_a_time():
             ):
                 sites.append(f"{os.path.relpath(path, root)}:{node.lineno}")
     assert not sites, sites
+
+
+def test_streaming_writers_share_one_replay_guard_and_one_merge_swap():
+    """Exactly-once sinks keep one commit path each: (a) only
+    ``sources/warehouse.replay_guard`` names the ``_last_batch`` marker
+    (no other module reads or writes it); (b) nothing under
+    ``sources/`` imports the streaming layer above it; (c) the sinks
+    write tables straight from the executors — the only driver-side
+    ``collect()`` in ``streaming/sinks.py`` is payment_enrich's one-row
+    span."""
+    root = os.path.join(os.path.dirname(os.path.dirname(__file__)), "gmall_realtime2021_spark")
+    marker_sites, upward = [], []
+    for path in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, root)
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Constant) and node.value == "_last_batch":
+                    marker_sites.append(f"{rel}::{fn.name}")
+        if rel.startswith("sources" + os.sep):
+            for node in ast.walk(tree):
+                names = (
+                    [node.module or ""]
+                    if isinstance(node, ast.ImportFrom)
+                    else [a.name for a in node.names] if isinstance(node, ast.Import) else []
+                )
+                upward += [f"{rel}:{node.lineno}" for n in names if n.startswith("gmall_realtime2021_spark.streaming")]
+        if rel == os.path.join("streaming", "sinks.py"):
+            collects = [
+                fn.name
+                for fn in tree.body
+                if isinstance(fn, ast.FunctionDef)
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "collect"
+            ]
+    assert sorted(set(marker_sites)) == [os.path.join("sources", "warehouse.py") + "::replay_guard"], marker_sites
+    assert not upward, upward
+    assert collects == ["payment_enrich_upsert_batch"], collects
